@@ -4,8 +4,10 @@ PY ?= python
 
 .PHONY: test bench scaling package check-oracles plans
 
+# tier-1: the whole suite on every core, with the suite's time budget
 test:
-	$(PY) -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	$(PY) bench.py

@@ -299,12 +299,15 @@ VOCAB_ROWS: list[tuple] = [
      ["order sort"], [], [], [], ["order sort"], ["XOP:SORT", "XOP:JOIN"], "exec"),
 ]
 
+# each term's searchable_text ("name definition synonyms", the synonym
+# slot skipped when empty), computed once here and fed to BOTH the
+# driver-side term rows and the _vocab_terms DataFrame
+VOCAB_SEARCHABLE = [
+    " ".join([r[1], r[2]] + ([" ".join(r[7])] if r[7] else [])) for r in VOCAB_ROWS
+]
+
 # driver-side term rows for build_triples(term_rows=...): skips the
 # collect job over the vocab DataFrame in every fresh kg plan build.
-# searchable_text replicates _vocab_terms' concat_ws(" ", name,
-# definition, nullif(array_join(all_synonyms, " "), "")) exactly
-# (concat_ws skips the null empty-synonym slot) — the independent
-# kg oracle would flag any drift.
 from types import SimpleNamespace as _NS  # noqa: E402
 
 VOCAB_TERM_ROWS = [
@@ -314,11 +317,9 @@ VOCAB_TERM_ROWS = [
         exact_synonyms=list(r[3]),
         all_synonyms=list(r[7]),
         cross_references=list(r[8]),
-        searchable_text=" ".join(
-            [r[1], r[2]] + ([" ".join(r[7])] if r[7] else [])
-        ),
+        searchable_text=text,
     )
-    for r in VOCAB_ROWS
+    for r, text in zip(VOCAB_ROWS, VOCAB_SEARCHABLE)
 ]
 
 DICT = [
@@ -338,19 +339,11 @@ def _vocab_terms(spark: SparkSession) -> DataFrame:
     the dimension table for the flagship pipeline over testdata."""
     return _local_dim(
         spark,
-        VOCAB_ROWS,
+        [(*r, text) for r, text in zip(VOCAB_ROWS, VOCAB_SEARCHABLE)],
         "term_id string, name string, definition string, exact_synonyms array<string>, "
         "narrow_synonyms array<string>, broad_synonyms array<string>, "
         "related_synonyms array<string>, all_synonyms array<string>, "
-        "cross_references array<string>, namespace string",
-    ).withColumn(
-        "searchable_text",
-        F.concat_ws(
-            " ",
-            F.col("name"),
-            F.col("definition"),
-            F.nullif(F.array_join("all_synonyms", " "), F.lit("")),
-        ),
+        "cross_references array<string>, namespace string, searchable_text string",
     )
 
 

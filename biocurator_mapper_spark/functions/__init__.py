@@ -11,7 +11,6 @@ from .text import (
     curie_normalize,
     with_url_host,
     token_count,
-    quality_score_cols,
     quality_struct,
     repetition_struct,
     lang_id_expr,
@@ -30,7 +29,6 @@ __all__ = [
     "curie_normalize",
     "with_url_host",
     "token_count",
-    "quality_score_cols",
     "quality_struct",
     "repetition_struct",
     "lang_id_expr",

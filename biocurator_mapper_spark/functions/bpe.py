@@ -36,7 +36,7 @@ extension surface (SURVEY.md §2, text analysis).
 from __future__ import annotations
 
 from collections import Counter
-from collections.abc import Iterable, Sequence
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import Column
@@ -102,10 +102,6 @@ def train_merges(
                 new_words[w] = new_words.get(w, 0) + c
         words = new_words
     return merges
-
-
-def piece_counts_from_pieces(pieces: Iterable[str]) -> Counter:
-    return Counter(pieces)
 
 
 def train_merges_distributed(

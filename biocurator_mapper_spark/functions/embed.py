@@ -97,30 +97,34 @@ _NORM_SQL = (
 )
 
 
-def _dot_sql(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+def _cosine_sql(qa: str, qb: str, na: str, nb: str) -> str:
+    """dot(qa, qb) / (na * nb), 0.0 when either norm is 0 — the one
+    cosine fold every form below parses."""
+    dot = (
+        f"aggregate(zip_with({qa}, {qb}, (x, y) -> "
         "cast(x as double) * cast(y as double)), 0.0D, (acc, x) -> acc + x)"
     )
+    return f"CASE WHEN {na} > 0 AND {nb} > 0 THEN {dot} / ({na} * {nb}) ELSE 0.0D END"
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    """The cosine fold as ONE SQL string — parses JVM-side in a single py4j
-    call (~1 ms) where the lambda-HOF Column construction costs ~100 ms of
-    py4j round trips per build (measured; it dominated sim_ann_lsh_topk's
-    plan-construction time). Parses to the same expression tree as the
-    Column path — equivalence pinned in tests."""
+def cosine_expr(a: str, b: str) -> Column:
+    """Cosine similarity of two array<float> columns, given by NAME, with
+    built-in higher-order functions — JVM-side, no Python.
+
+    Each element is cast to double BEFORE multiplying: float32 inputs are
+    exact in double, and the left-to-right double fold makes the result
+    bit-identical to any other engine evaluating the same fold (oracle
+    comparability). Zero-norm sides give 0.0. Built from ONE SQL string in
+    a single ``F.expr`` parse (~1 ms, where the lambda-HOF Column
+    construction cost ~100 ms of py4j round trips per build)."""
     qa, qb = _sql_ident(a), _sql_ident(b)
-    na, nb = _NORM_SQL.format(v=qa), _NORM_SQL.format(v=qb)
-    dot = _dot_sql(qa, qb)
-    return (
-        f"CASE WHEN {na} > 0 AND {nb} > 0 "
-        f"THEN {dot} / ({na} * {nb}) ELSE 0.0D END"
+    return F.expr(
+        _cosine_sql(qa, qb, _NORM_SQL.format(v=qa), _NORM_SQL.format(v=qb))
     )
 
 
 def norm_expr(vec_col: str) -> Column:
-    """L2 norm of an array<float> column — the exact fold `_cosine_sql`
+    """L2 norm of an array<float> column — the exact fold `cosine_expr`
     uses for its denominators (same expression tree → same double)."""
     return F.expr(_NORM_SQL.format(v=_sql_ident(vec_col)))
 
@@ -128,45 +132,15 @@ def norm_expr(vec_col: str) -> Column:
 def cosine_from_norms_expr(a: str, b: str, na: str, nb: str) -> Column:
     """Cosine built from PREcomputed per-row norms (`norm_expr` columns).
 
-    Exactly the `_cosine_sql` arithmetic with the two norm folds factored
+    Exactly the `cosine_expr` arithmetic with the two norm folds factored
     out so each side's norm evaluates ONCE PER ROW instead of once per
     joined pair (the CASE references each norm twice, and each pair pays
     the other side's fold too — 5 array aggregates per pair collapse to 1).
     Bit-identical doubles: the norm column carries the same fold, and
     the dot / division tree is unchanged."""
-    qa, qb = _sql_ident(a), _sql_ident(b)
-    qna, qnb = _sql_ident(na), _sql_ident(nb)
-    dot = _dot_sql(qa, qb)
     return F.expr(
-        f"CASE WHEN {qna} > 0 AND {qnb} > 0 "
-        f"THEN {dot} / ({qna} * {qnb}) ELSE 0.0D END"
+        _cosine_sql(_sql_ident(a), _sql_ident(b), _sql_ident(na), _sql_ident(nb))
     )
-
-
-def cosine_expr(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity over two array<float> columns with built-in
-    higher-order functions — JVM-side, no Python.
-
-    Pass COLUMN NAMES (strings) on hot plan-construction paths: that form
-    builds via one ``F.expr`` parse instead of ~a dozen py4j lambda round
-    trips, producing the identical expression tree (and identical doubles —
-    same left-to-right fold)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_cosine_sql(a, b))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    # cast to double BEFORE multiplying: float32 inputs are exact in double,
-    # and double products/sums make the result bit-identical to any other
-    # engine evaluating the same left-to-right fold (oracle comparability)
-    d = lambda x: x.cast("double")  # noqa: E731
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: d(x) * d(y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + d(x) * d(x)))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + d(x) * d(x)))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
 def certainty_expr(cos: Column) -> Column:

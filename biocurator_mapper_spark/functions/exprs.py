@@ -16,6 +16,7 @@ when several output columns share it.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import Column
@@ -30,14 +31,27 @@ def let_expr(value: Column, body: Callable[[Column], Column]) -> Column:
     return F.try_element_at(F.transform(F.array(value), body), F.lit(1))
 
 
+def _sql_str(v: str) -> str:
+    """SQL text for the string ``v`` that parses to ``v`` under BOTH
+    ``spark.sql.parser.escapedStringLiterals`` settings. The settings read
+    only ``'`` and ``\\`` differently (with it on, ``'it''s'`` stays
+    ``it''s``), so those two characters are emitted as ``chr(39)`` /
+    ``chr(92)`` inside ``concat(...)``, which constant-folds to the same
+    literal; every other value is one plain quoted literal."""
+    if "'" not in v and "\\" not in v:
+        return f"'{v}'"
+    parts = re.split(r"(['\\])", v)
+    return "concat(" + ", ".join(
+        f"chr({ord(p)})" if p in ("'", "\\") else f"'{p}'" for p in parts if p
+    ) + ")"
+
+
 def str_array_lit(values) -> Column:
     """``array('a', 'b', ...)`` via ONE ``F.expr`` parse. The Column form
     (``F.array(*[F.lit(v) ...])``) pays a py4j round trip per element —
     ~0.2 s of plan-build for the ~190 stopword literals the text-quality
     expressions embed. Identical literal array."""
-    body = ", ".join(
-        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
-    )
+    body = ", ".join(_sql_str(v) for v in values)
     return F.expr(f"array({body})" if body else "cast(array() as array<string>)")
 
 

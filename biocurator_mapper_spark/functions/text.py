@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .exprs import int_array_lit, str_array_lit
+from .exprs import int_array_lit, let_expr, str_array_lit
 
 # ---------------------------------------------------------------- reference ops
 
@@ -117,6 +117,149 @@ LANG_STOPWORDS: list[tuple[str, list[str]]] = [
 ]
 
 
+# ------------------------------------------------ curation signal pieces
+#
+# Each signal family is written ONCE as init / merge / finish pieces over
+# the shared token array; quality_struct, repetition_struct, lang_id_expr
+# and the fused curation_signals_struct are all assembled from them, so
+# the standalone and fused expression trees cannot drift.
+
+
+def _tokens(text: Column) -> Column:
+    """Lowercased letter/digit/apostrophe tokens, empties dropped; NULL
+    text → []."""
+    return _null_safe(
+        F.filter(F.split(F.lower(text), r"[^\p{L}0-9']+"), lambda t: t != "")
+    )
+
+
+def _quality_init() -> list[Column]:
+    return [F.lit(0).alias("n"), F.lit(0).alias("stop"), F.lit(0).alias("len_sum")]
+
+
+def _quality_merge(acc: Column, t: Column) -> list[Column]:
+    """Token count, stopword hits and summed token length."""
+    return [
+        (acc["n"] + 1).alias("n"),
+        (
+            acc["stop"] + F.array_contains(str_array_lit(_STOPWORDS), t).cast("int")
+        ).alias("stop"),
+        (acc["len_sum"] + F.length(t)).alias("len_sum"),
+    ]
+
+
+def _quality_finish(text: Column, acc: Column) -> list[Column]:
+    n_chars = F.length(text)
+    n_punct = n_chars - F.length(F.regexp_replace(text, r"[\p{Punct}]", ""))
+    n_tokens = acc["n"]
+    safe_tokens = F.greatest(n_tokens, F.lit(1))
+    punct_ratio = n_punct / F.greatest(n_chars, F.lit(1)).cast("double")
+    stop_ratio = acc["stop"] / safe_tokens.cast("double")
+    mean_word_len = acc["len_sum"] / safe_tokens.cast("double")
+    # crude composite: long enough, some stopwords, sane punctuation & words
+    score = (
+        F.least(n_tokens / F.lit(20.0), F.lit(1.0)) * 0.3
+        + F.least(stop_ratio * F.lit(3.0), F.lit(1.0)) * 0.4
+        + (F.lit(1.0) - F.least(punct_ratio * F.lit(4.0), F.lit(1.0))) * 0.2
+        + F.when(
+            (mean_word_len >= 3) & (mean_word_len <= 10), F.lit(1.0)
+        ).otherwise(F.lit(0.0))
+        * 0.1
+    )
+    return [
+        n_chars.alias("n_chars"),
+        n_tokens.alias("n_tokens"),
+        punct_ratio.alias("punct_ratio"),
+        stop_ratio.alias("stopword_ratio"),
+        mean_word_len.alias("mean_word_len"),
+        score.alias("quality_score"),
+    ]
+
+
+def _lang_init() -> Column:
+    return int_array_lit([0] * len(LANG_STOPWORDS))
+
+
+def _lang_merge(hits: Column, t: Column) -> Column:
+    """Add the token's stopword hit to each language's counter."""
+    word_arrays = [str_array_lit(words) for _, words in LANG_STOPWORDS]
+    return F.zip_with(
+        hits,
+        F.array(*[F.array_contains(wa, t).cast("int") for wa in word_arrays]),
+        lambda a, b: a + b,
+    )
+
+
+def _lang_finish(hits: Column) -> Column:
+    """Stable argmax over the counters (ties → earlier LANG_STOPWORDS
+    entry), 'und' when nothing hit."""
+    n = len(LANG_STOPWORDS)
+    lang_codes = str_array_lit([code for code, _ in LANG_STOPWORDS])
+    scores = F.transform(
+        hits,
+        lambda h, i: F.struct(
+            h.alias("hits"),
+            (F.lit(n - 1) - i).alias("prio"),
+            # 1-based element_at; i is the 0-based transform index
+            F.try_element_at(lang_codes, i + F.lit(1)).alias("lang"),
+        ),
+    )
+    best = F.try_element_at(F.reverse(F.array_sort(scores)), F.lit(1))
+    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
+
+
+def _rep_init() -> Column:
+    return F.struct(
+        F.lit("").alias("prev"),
+        F.lit(0).alias("run"),
+        F.lit(0).alias("best"),
+        F.lit(0).alias("n"),
+    )
+
+
+def _rep_merge(acc: Column, t: Column) -> Column:
+    """Longest equal-run over the SORTED token array."""
+    run = F.when(t == acc["prev"], acc["run"]).otherwise(F.lit(0)) + 1
+    return F.struct(
+        t.alias("prev"),
+        run.alias("run"),
+        F.greatest(acc["best"], run).alias("best"),
+        (acc["n"] + 1).alias("n"),
+    )
+
+
+def _rep_finish(acc: Column) -> list[Column]:
+    return [
+        acc["best"].cast("bigint").alias("max_word_freq"),
+        F.when(acc["n"] > 0, acc["best"] / acc["n"].cast("double"))
+        .otherwise(F.lit(0.0))
+        .alias("max_word_freq_ratio"),
+    ]
+
+
+def _dup_line_frac(text: Column) -> Column:
+    """Share of non-blank trimmed lines that repeat an earlier line. The
+    line array binds once: the fraction references it 4× and each
+    reference would otherwise re-split + re-trim the whole text."""
+
+    def _frac(lines: Column) -> Column:
+        n_lines = F.size(lines)
+        return F.when(
+            n_lines > 0,
+            (n_lines - F.size(F.array_distinct(lines))) / n_lines.cast("double"),
+        ).otherwise(F.lit(0.0))
+
+    return let_expr(
+        _null_safe(
+            F.filter(
+                F.transform(F.split(text, r"\n"), lambda l: F.trim(l)),
+                lambda l: l != "",
+            )
+        ),
+        _frac,
+    )
+
+
 def quality_struct(text: Column) -> Column:
     """Document quality signals as ONE struct column: length, punctuation
     ratio, stopword ratio, mean word length, and a combined [0,1] score.
@@ -125,78 +268,13 @@ def quality_struct(text: Column) -> Column:
     length) accumulate in a single ``aggregate`` pass over one tokenized
     array; the finish lambda emits the whole struct. Materialize the struct
     in its own projection and fan fields out in a second select — the same
-    no-CSE-across-columns rule as :func:`repetition_struct` (the former
-    dict form re-split the text once per referenced signal)."""
-    n_chars = F.length(text)
-    toks = _null_safe(
-        F.filter(F.split(F.lower(text), r"[^\p{L}0-9']+"), lambda t: t != "")
-    )
-    n_punct = n_chars - F.length(F.regexp_replace(text, r"[\p{Punct}]", ""))
-    stop_list = str_array_lit(_STOPWORDS)
-
-    def _merge(acc: Column, t: Column) -> Column:
-        return F.struct(
-            (acc["n"] + 1).alias("n"),
-            (
-                acc["stop"] + F.array_contains(stop_list, t).cast("int")
-            ).alias("stop"),
-            (acc["len_sum"] + F.length(t)).alias("len_sum"),
-        )
-
-    def _finish(acc: Column) -> Column:
-        n_tokens = acc["n"]
-        safe_tokens = F.greatest(n_tokens, F.lit(1))
-        punct_ratio = n_punct / F.greatest(n_chars, F.lit(1)).cast("double")
-        stop_ratio = acc["stop"] / safe_tokens.cast("double")
-        mean_word_len = acc["len_sum"] / safe_tokens.cast("double")
-        # crude composite: long enough, some stopwords, sane punctuation
-        # & words
-        score = (
-            F.least(n_tokens / F.lit(20.0), F.lit(1.0)) * 0.3
-            + F.least(stop_ratio * F.lit(3.0), F.lit(1.0)) * 0.4
-            + (F.lit(1.0) - F.least(punct_ratio * F.lit(4.0), F.lit(1.0))) * 0.2
-            + F.when(
-                (mean_word_len >= 3) & (mean_word_len <= 10), F.lit(1.0)
-            ).otherwise(F.lit(0.0))
-            * 0.1
-        )
-        return F.struct(
-            n_chars.alias("n_chars"),
-            n_tokens.alias("n_tokens"),
-            punct_ratio.alias("punct_ratio"),
-            stop_ratio.alias("stopword_ratio"),
-            mean_word_len.alias("mean_word_len"),
-            score.alias("quality_score"),
-        )
-
+    no-CSE-across-columns rule as :func:`repetition_struct`."""
     return F.aggregate(
-        toks,
-        F.struct(
-            F.lit(0).alias("n"),
-            F.lit(0).alias("stop"),
-            F.lit(0).alias("len_sum"),
-        ),
-        _merge,
-        _finish,
+        _tokens(text),
+        F.struct(*_quality_init()),
+        lambda acc, t: F.struct(*_quality_merge(acc, t)),
+        lambda acc: F.struct(*_quality_finish(text, acc)),
     )
-
-
-def quality_score_cols(text: Column) -> dict[str, Column]:
-    """Dict view of :func:`quality_struct` for single-column consumers.
-    Each value is an independent full expression — for two or more outputs,
-    materialize ``quality_struct`` once and project its fields instead."""
-    s = quality_struct(text)
-    return {
-        name: s[name]
-        for name in (
-            "n_chars",
-            "n_tokens",
-            "punct_ratio",
-            "stopword_ratio",
-            "mean_word_len",
-            "quality_score",
-        )
-    }
 
 
 # PII patterns, RE2-compatible (run identically in DuckDB oracles): the
@@ -231,223 +309,60 @@ def repetition_struct(text: Column) -> Column:
     Most-frequent-token count runs in O(n log n): sort the token array,
     then the longest equal-run in ONE aggregate pass whose finish lambda
     emits the whole output struct (count, ratio, dup-line fraction) — so
-    the plan holds exactly one split / one sort / one pass per row. This
-    replaces the former distinct×n refilter (quadratic per document — a
-    100k-token page cost ~10⁹ comparisons inside a single task).
+    the plan holds exactly one split / one sort / one pass per row.
 
     Returned as a single struct on purpose: materialize it in its own
     projection (``.withColumn("_rep", repetition_struct(...))``) and derive
     the outputs in a SECOND select — higher-order expressions get no CSE
     across columns within one projection, so fanning this into N columns
     directly would evaluate the whole chain N times per row."""
-    from .exprs import let_expr
-
-    toks = _null_safe(
-        F.filter(F.split(F.lower(text), r"[^\p{L}0-9']+"), lambda t: t != "")
-    )
-
-    # bind the line array once: the fraction references it 4× and each
-    # reference would otherwise re-split + re-trim the whole text
-    def _dup_frac(lines: Column) -> Column:
-        n_lines = F.size(lines)
-        return F.when(
-            n_lines > 0,
-            (n_lines - F.size(F.array_distinct(lines)))
-            / n_lines.cast("double"),
-        ).otherwise(F.lit(0.0))
-
-    dup_line_frac = let_expr(
-        _null_safe(
-            F.filter(
-                F.transform(F.split(text, r"\n"), lambda l: F.trim(l)),
-                lambda l: l != "",
-            )
-        ),
-        _dup_frac,
-    )
-
-    def _merge(acc: Column, t: Column) -> Column:
-        run = F.when(t == acc["prev"], acc["run"]).otherwise(F.lit(0)) + 1
-        return F.struct(
-            t.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-            (acc["n"] + 1).alias("n"),
-        )
-
-    def _finish(acc: Column) -> Column:
-        return F.struct(
-            acc["best"].cast("bigint").alias("max_word_freq"),
-            F.when(acc["n"] > 0, acc["best"] / acc["n"].cast("double"))
-            .otherwise(F.lit(0.0))
-            .alias("max_word_freq_ratio"),
-            dup_line_frac.alias("dup_line_frac"),
-        )
-
     return F.aggregate(
-        F.array_sort(toks),
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-            F.lit(0).alias("n"),
+        F.array_sort(_tokens(text)),
+        _rep_init(),
+        _rep_merge,
+        lambda acc: F.struct(
+            *_rep_finish(acc), _dup_line_frac(text).alias("dup_line_frac")
         ),
-        _merge,
-        _finish,
     )
-
-
-def repetition_cols(text: Column) -> dict[str, Column]:
-    """Dict view of :func:`repetition_struct` for single-column consumers.
-
-    Each value is an independent full expression — use at most ONE of them
-    per projection; for two or more outputs, materialize
-    ``repetition_struct`` once and project its fields instead."""
-    s = repetition_struct(text)
-    return {
-        "max_word_freq": s["max_word_freq"],
-        "max_word_freq_ratio": s["max_word_freq_ratio"],
-        "dup_line_frac": s["dup_line_frac"],
-    }
 
 
 def curation_signals_struct(text: Column, with_lang: bool = False) -> Column:
-    """Every curate() text signal from ONE tokenize: quality counters
-    (token count, stopword hits, summed token length — one aggregate over
-    the token array), repetition run-length (one aggregate over the sorted
-    array), duplicate-line fraction, and optionally the stopword-vote
-    language (folded into the quality aggregate's counters, zero extra
-    passes). Field values are expression-identical to
-    :func:`quality_struct` / :func:`repetition_struct` / :func:`lang_id_expr`
-    — this fusion only removes the redundant re-tokenizations (3 splits per
-    row → 1 on the default curation path)."""
-    from .exprs import let_expr
+    """Every curate() text signal from ONE tokenize: ``q`` (the
+    :func:`quality_struct` fields, plus the :func:`lang_id_expr` vote as
+    ``lang`` when ``with_lang`` — its counters ride the quality aggregate,
+    zero extra passes), ``rep`` (the repetition run-length fields) and
+    ``dup_line_frac``. Built from the same pieces as the standalone
+    functions; the fusion only removes the redundant re-tokenizations
+    (3 splits per row → 1 on the default curation path)."""
 
-    n_chars = F.length(text)
-    n_punct = n_chars - F.length(F.regexp_replace(text, r"[\p{Punct}]", ""))
-    stop_list = str_array_lit(_STOPWORDS)
-    n_langs = len(LANG_STOPWORDS)
-    word_arrays = [
-        str_array_lit(words) for _, words in LANG_STOPWORDS
-    ]
-    lang_codes = str_array_lit([code for code, _ in LANG_STOPWORDS])
-
-    def _dup_frac(lines: Column) -> Column:
-        n_lines = F.size(lines)
-        return F.when(
-            n_lines > 0,
-            (n_lines - F.size(F.array_distinct(lines))) / n_lines.cast("double"),
-        ).otherwise(F.lit(0.0))
-
-    dup_line_frac = let_expr(
-        _null_safe(
-            F.filter(
-                F.transform(F.split(text, r"\n"), lambda l: F.trim(l)),
-                lambda l: l != "",
-            )
-        ),
-        _dup_frac,
-    )
-
-    def _q_merge(acc: Column, t: Column) -> Column:
-        fields = [
-            (acc["n"] + 1).alias("n"),
-            (acc["stop"] + F.array_contains(stop_list, t).cast("int")).alias(
-                "stop"
-            ),
-            (acc["len_sum"] + F.length(t)).alias("len_sum"),
-        ]
+    def _merge(acc: Column, t: Column) -> Column:
+        fields = _quality_merge(acc, t)
         if with_lang:
-            hits = F.array(
-                *[F.array_contains(wa, t).cast("int") for wa in word_arrays]
-            )
-            fields.append(
-                F.zip_with(acc["hits"], hits, lambda a, b: a + b).alias("hits")
-            )
+            fields.append(_lang_merge(acc["hits"], t).alias("hits"))
         return F.struct(*fields)
 
-    def _q_finish(acc: Column) -> Column:
-        n_tokens = acc["n"]
-        safe_tokens = F.greatest(n_tokens, F.lit(1))
-        punct_ratio = n_punct / F.greatest(n_chars, F.lit(1)).cast("double")
-        stop_ratio = acc["stop"] / safe_tokens.cast("double")
-        mean_word_len = acc["len_sum"] / safe_tokens.cast("double")
-        score = (
-            F.least(n_tokens / F.lit(20.0), F.lit(1.0)) * 0.3
-            + F.least(stop_ratio * F.lit(3.0), F.lit(1.0)) * 0.4
-            + (F.lit(1.0) - F.least(punct_ratio * F.lit(4.0), F.lit(1.0))) * 0.2
-            + F.when(
-                (mean_word_len >= 3) & (mean_word_len <= 10), F.lit(1.0)
-            ).otherwise(F.lit(0.0))
-            * 0.1
-        )
-        fields = [
-            n_chars.alias("n_chars"),
-            n_tokens.alias("n_tokens"),
-            punct_ratio.alias("punct_ratio"),
-            stop_ratio.alias("stopword_ratio"),
-            mean_word_len.alias("mean_word_len"),
-            score.alias("quality_score"),
-        ]
+    def _finish(acc: Column) -> Column:
+        fields = _quality_finish(text, acc)
         if with_lang:
-            scores = F.transform(
-                acc["hits"],
-                lambda hits, i: F.struct(
-                    hits.alias("hits"),
-                    (F.lit(n_langs - 1) - i).alias("prio"),
-                    F.try_element_at(lang_codes, i + F.lit(1)).alias("lang"),
-                ),
-            )
-            best = F.try_element_at(F.reverse(F.array_sort(scores)), F.lit(1))
-            fields.append(
-                F.when(best["hits"] > 0, best["lang"])
-                .otherwise(F.lit("und"))
-                .alias("lang")
-            )
+            fields.append(_lang_finish(acc["hits"]).alias("lang"))
         return F.struct(*fields)
-
-    def _rep_merge(acc: Column, t: Column) -> Column:
-        run = F.when(t == acc["prev"], acc["run"]).otherwise(F.lit(0)) + 1
-        return F.struct(
-            t.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-            (acc["n"] + 1).alias("n"),
-        )
 
     def _build(toks: Column) -> Column:
-        q_init = [
-            F.lit(0).alias("n"),
-            F.lit(0).alias("stop"),
-            F.lit(0).alias("len_sum"),
-        ]
+        init = _quality_init()
         if with_lang:
-            q_init.append(int_array_lit([0] * n_langs).alias("hits"))
-        q = F.aggregate(toks, F.struct(*q_init), _q_merge, _q_finish)
+            init.append(_lang_init().alias("hits"))
+        q = F.aggregate(toks, F.struct(*init), _merge, _finish)
         rep = F.aggregate(
             F.array_sort(toks),
-            F.struct(
-                F.lit("").alias("prev"),
-                F.lit(0).alias("run"),
-                F.lit(0).alias("best"),
-                F.lit(0).alias("n"),
-            ),
+            _rep_init(),
             _rep_merge,
-            lambda acc: F.struct(
-                acc["best"].cast("bigint").alias("max_word_freq"),
-                F.when(acc["n"] > 0, acc["best"] / acc["n"].cast("double"))
-                .otherwise(F.lit(0.0))
-                .alias("max_word_freq_ratio"),
-            ),
+            lambda acc: F.struct(*_rep_finish(acc)),
         )
         return F.struct(
-            q.alias("q"), rep.alias("rep"), dup_line_frac.alias("dup_line_frac")
+            q.alias("q"), rep.alias("rep"), _dup_line_frac(text).alias("dup_line_frac")
         )
 
-    toks = _null_safe(
-        F.filter(F.split(F.lower(text), r"[^\p{L}0-9']+"), lambda t: t != "")
-    )
-    return let_expr(toks, _build)
+    return let_expr(_tokens(text), _build)
 
 
 def dup_ngram_chars_struct(text: Column, n: int = 2) -> Column:
@@ -459,7 +374,6 @@ def dup_ngram_chars_struct(text: Column, n: int = 2) -> Column:
     One tokenize (bound once via ``let_expr``), one sort, one aggregate
     pass over the sorted n-gram array — same linear shape as
     :func:`repetition_struct`."""
-    from .exprs import let_expr
 
     def _merge(acc: Column, g: Column) -> Column:
         run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
@@ -515,36 +429,7 @@ def lang_id_expr(text: Column) -> Column:
     order via a stable greatest-score argmax built from a sorted struct array.
 
     Tokenizes ONCE: a single ``split`` feeds one ``aggregate`` pass that
-    accumulates all 7 per-language hit counters (the former per-language
-    ``_stopword_hits`` re-split and re-scanned the text 7×), and the argmax
-    runs in the aggregate's finish lambda so the counter array is never
-    fanned into multiple referencing expressions."""
-    n = len(LANG_STOPWORDS)
-    word_arrays = [
-        str_array_lit(words) for _, words in LANG_STOPWORDS
-    ]
-    lang_codes = str_array_lit([code for code, _ in LANG_STOPWORDS])
-    toks = _null_safe(F.split(F.lower(text), r"[^\p{L}0-9']+"))
-
-    def _merge(acc: Column, t: Column) -> Column:
-        hits = F.array(
-            *[F.array_contains(wa, t).cast("int") for wa in word_arrays]
-        )
-        return F.zip_with(acc, hits, lambda a, b: a + b)
-
-    def _finish(acc: Column) -> Column:
-        scores = F.transform(
-            acc,
-            lambda hits, i: F.struct(
-                hits.alias("hits"),
-                (F.lit(n - 1) - i).alias("prio"),
-                # 1-based element_at; i is the 0-based transform index
-                F.try_element_at(lang_codes, i + F.lit(1)).alias("lang"),
-            ),
-        )
-        best = F.try_element_at(F.reverse(F.array_sort(scores)), F.lit(1))
-        return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-    return F.aggregate(
-        toks, int_array_lit([0] * n), _merge, _finish
-    )
+    accumulates all 7 per-language hit counters, and the argmax runs in the
+    aggregate's finish lambda so the counter array is never fanned into
+    multiple referencing expressions."""
+    return F.aggregate(_tokens(text), _lang_init(), _lang_merge, _lang_finish)

@@ -4,11 +4,11 @@
 n-gram hash set — dimension-sized for normal eval suites, but a
 mega-benchmark (or a blocklist of leaked documents) can outgrow a
 comfortable broadcast. This tier replaces the broadcast SET with a
-broadcast BLOOM FILTER of fixed size (default 2²⁰ bits = 128 KiB hex,
+broadcast BLOOM FILTER of fixed size (default 2²⁰ bits = 128 KiB,
 independent of benchmark size): corpus grams probe k bit positions in a
-hex-string bitmap with pure codegen expressions, and only the docs with a
-passing gram — the contamination candidates, a tiny fraction of the
-corpus — reach the exact verification join.
+bitset of 64-bit words with pure codegen expressions, and only the docs
+with a passing gram — the contamination candidates, a tiny fraction of
+the corpus — reach the exact verification join.
 
 Result-IDENTICAL to the exact tier by construction: a Bloom filter has no
 false negatives (every true collision passes the probe), and the false
@@ -97,57 +97,6 @@ def bloom_words(
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def bloom_bits_hex(
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 13,
-    m_bits: int = BLOOM_M_BITS,
-    k: int = BLOOM_K,
-) -> str:
-    """The filter as a hex string (m_bits/4 chars; nibble i holds bits
-    [4i, 4i+4), bit j of a nibble = position 4i+j) — the portable/export
-    form (SQL-probeable on any engine); prefer :func:`bloom_words` for
-    Spark-side probing."""
-    nibbles = bytearray(m_bits // 4)
-    for p in bloom_positions(benchmark, id_col, text_col, n, m_bits, k):
-        nibbles[p >> 2] |= 1 << (p & 3)
-    return "".join(format(v, "x") for v in nibbles)
-
-
-def _hex_to_words(bits_hex: str) -> list[int]:
-    words = [0] * ((len(bits_hex) * 4) // 64)
-    for i, ch in enumerate(bits_hex):
-        v = int(ch, 16)
-        for j in range(4):
-            if v & (1 << j):
-                p = 4 * i + j
-                words[p >> 6] |= 1 << (p & 63)
-    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-
-
-def bloom_member_expr(
-    h: Column, bits_hex: Column, m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K
-) -> Column:
-    """True iff every probe bit of gram-hash ``h`` is set in ``bits_hex``
-    (pure codegen: k substr + conv nibble lookups). Hex-string form — use
-    only for SMALL filters or cross-engine SQL parity; the hot path is
-    :func:`bloom_member_words_expr` (O(1) probes vs O(m) substring)."""
-    cond = F.lit(True)
-    for pos in _probe_positions_expr(h, m_bits, k):
-        nib = F.conv(
-            F.substring(bits_hex, (pos / 4).cast("int") + 1, 1), 16, 10
-        ).cast("int")
-        # bit mask for position-within-nibble (shiftleft needs a literal
-        # shift amount, so index a 4-element mask array instead)
-        bit = F.try_element_at(
-            F.array(F.lit(1), F.lit(2), F.lit(4), F.lit(8)),
-            F.pmod(pos, F.lit(4)).cast("int") + 1,
-        )
-        cond = cond & (nib.bitwiseAND(bit) != 0)
-    return cond
-
-
 # 64 single-bit masks as signed longs (bit 63 = Long.MIN_VALUE): shiftleft
 # needs a literal shift amount, so probes index this array instead
 _MASK64 = [
@@ -172,7 +121,7 @@ def bloom_member_words_expr(
 
 def bloom_contamination_candidates(
     corpus: DataFrame,
-    bits: str | list[int],
+    words: list[int],
     id_col: str,
     text_col: str,
     n: int = 13,
@@ -183,15 +132,14 @@ def bloom_contamination_candidates(
     truly contaminated ids (no false negatives), typically a tiny slice of
     the corpus. Narrow: explode → probe filter → distinct ids.
 
-    ``bits`` is the hex string (converted) or the bitset word list. The
-    bitmap travels as a ONE-ROW broadcast join, never as a plan literal:
-    a 2²⁰-bit filter is 256 KiB, past Java's 64 KiB string-constant limit,
-    so as a literal Janino cannot compile the stage and the ENTIRE
-    gram+md5+probe path silently drops out of whole-stage codegen; and it
-    probes as ``array<long>`` words (O(1) element_at per probe — substring
-    over a quarter-megabyte string re-scans it per probe, measured ~20× on
-    the contract fixture)."""
-    words = _hex_to_words(bits) if isinstance(bits, str) else bits
+    ``words`` is the :func:`bloom_words` bitset. It travels as a ONE-ROW
+    broadcast join, never as a plan literal: a 2²⁰-bit filter as a hex
+    string literal is 256 KiB, past Java's 64 KiB string-constant limit,
+    so Janino cannot compile the stage and the ENTIRE gram+md5+probe path
+    silently drops out of whole-stage codegen; and it probes as
+    ``array<long>`` words (O(1) element_at per probe — substring over a
+    quarter-megabyte string re-scans it per probe, measured ~20× on the
+    contract fixture)."""
     spark = corpus.sparkSession
     words_df = local_dim_df(spark, [(words,)], "_bloom_words array<long>")
     ch = _hashed_shingle_rows(corpus, id_col, text_col, n)

@@ -30,16 +30,21 @@ def tokens_expr(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda t: t != "")
 
 
-def _shingles_sql(text_col: str, n: int) -> str:
-    """The shingle chain as ONE SQL string: token array bound once via the
-    single-element-array let, one index-transform per gram, whole-token
-    fallback for short docs, distinct. Parsing this in one ``F.expr`` call
-    replaces ~30 py4j round trips of Column construction (~0.5 s of every
-    fresh minhash plan build) with ~1 ms; the value semantics are pinned
-    identical to the Column path in tests."""
+def shingles_expr(text_col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles (space-joined) of the named text
+    column; docs shorter than n tokens yield their whole token string as
+    the one shingle (so they can still pair with identical short docs),
+    token-less docs yield [].
+
+    ONE SQL string parsed in one ``F.expr`` call (~1 ms, where the
+    equivalent Column construction paid ~30 py4j round trips, ~0.5 s of
+    every fresh minhash plan build): the token array binds once via the
+    single-element-array let (every reference would otherwise re-run the
+    regex split + filter per row), one index-transform per gram, distinct.
+    """
     q = "`" + text_col.replace("`", "``") + "`"
     grams = ", ' ', ".join(f"t[i + {off}]" for off in range(n))
-    return (
+    return F.expr(
         "try_element_at(transform(array("
         f"filter(split(lower({q}), '[^a-z0-9]+'), t -> t != '')"
         "), t -> array_distinct("
@@ -48,39 +53,6 @@ def _shingles_sql(text_col: str, n: int) -> str:
         "WHEN size(t) > 0 THEN array(array_join(t, ' ')) "
         "ELSE cast(array() as array<string>) END)), 1)"
     )
-
-
-def shingles_expr(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the text (space-joined).
-
-    Built as one transform over an index sequence (one concat per
-    shingle); the token array is bound ONCE via ``let_expr``: the
-    construction references it several times, and without the binding
-    every reference re-runs the regex split + filter over the full text
-    per row.
-
-    Pass a column NAME (string) on hot plan-construction paths: that form
-    parses one SQL string (``_shingles_sql``) instead of dozens of py4j
-    Column round trips, with identical values (pinned in tests).
-    """
-    if isinstance(text, str):
-        return F.expr(_shingles_sql(text, n))
-
-    from ..functions.exprs import let_expr, zip_ngrams_expr
-
-    def _build(toks: Column) -> Column:
-        grams = zip_ngrams_expr(toks, n)
-        return F.array_distinct(
-            F.when(F.size(toks) >= n, grams).otherwise(
-                # short docs: one shingle = whole token string, so they can
-                # still pair with identical short docs
-                F.when(
-                    F.size(toks) > 0, F.array(F.array_join(toks, " "))
-                ).otherwise(F.array().cast("array<string>"))
-            )
-        )
-
-    return let_expr(tokens_expr(text), _build)
 
 
 # ------------------------------------------------------------- shingle hash
@@ -150,7 +122,6 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> D
     rows = (
         df.select(
             F.col(id_col).alias("_id"),
-            # NAME form → one-parse SQL construction (see _shingles_sql)
             F.explode_outer(shingles_expr(text_col, n)).alias("shingle"),
         )
         .where(F.col("shingle").isNotNull())
@@ -300,41 +271,6 @@ def ngram_jaccard_pairs(
 
 
 # ------------------------------------------------------------------ MinHash
-
-
-def minhash_signature_cols(text: Column, n: int = 3, num_hashes: int = 16) -> list[Column]:
-    """num_hashes MinHash values: per permutation i, the MIN over shingles
-    of (a_i * (h % MOD) + b_i) % MOD where h is the 60-bit md5-derived
-    shingle hash — ONE md5 per shingle feeds every signature (identical
-    integer semantics in any engine). Null when the document has no
-    shingles."""
-    from ..functions.exprs import let_expr
-
-    def _build(hm: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(hm, _perm_fn(a, b))
-                ).alias(f"mh_{i}")
-                for i, (a, b) in enumerate(_MINHASH_AB[:num_hashes])
-            ]
-        )
-
-    hashed = F.transform(
-        shingles_expr(text, n), lambda s: shingle_hash_expr(s) % MINHASH_MOD
-    )
-    arr = let_expr(hashed, _build)
-    return [arr[i].alias(f"mh_{i}") for i in range(num_hashes)]
-
-
-def _perm_fn(a: int, b: int):
-    # helper, NOT a `lambda h, a=a, b=b:` default — a two-arg transform
-    # lambda receives (element, INDEX) and would silently bind the index
-    # Column (see CLAUDE.md)
-    def f(h: Column) -> Column:
-        return (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_MOD)
-
-    return f
 
 
 def minhash_lsh_pairs(
@@ -657,7 +593,7 @@ def ngram_frequencies(
     the vocabulary/stop-shingle profiling step of a data pipeline. One
     explode + one hash aggregate + a bounded ordered limit."""
     sh = df.select(
-        F.explode_outer(shingles_expr(F.col(text_col), n)).alias("ngram")
+        F.explode_outer(shingles_expr(text_col, n)).alias("ngram")
     ).where(F.col("ngram").isNotNull())
     return (
         sh.groupBy("ngram")

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from ..functions.exprs import let_expr, str_array_lit
+
 
 class AhoCorasick:
     """Minimal, picklable Aho-Corasick automaton (pure Python, no C deps).
@@ -125,55 +127,11 @@ def build_surface_map(terms: DataFrame, include_name: bool = True) -> DataFrame:
     )
 
 
-try:  # optional C fast path — not in every container; semantics identical
-    import ahocorasick as _pyahocorasick  # type: ignore
-except ImportError:  # pragma: no cover - depends on environment
-    _pyahocorasick = None
-
-# Per-worker automaton cache, keyed by CONTENT hash of the pattern list
-# (not broadcast id: every scan call creates a fresh broadcast, and an
-# id-keyed cache would retain one tens-of-MB automaton per call per worker
-# forever). Bounded: repeated jobs over the same ontology hit one entry;
-# a dictionary change evicts the oldest.
-_C_AUTOMATON_CACHE: dict[str, object] = {}
-_C_AUTOMATON_CACHE_MAX = 4
-
-
 def broadcast_scanner(spark, surfaces: list[str]):
     """Broadcast-backed scanner factory shared by the standalone mention
     stage and the pipeline's fused page scan: returns a zero-arg callable
     (safe to call once per task) yielding ``find(text) -> sorted distinct
-    surfaces``. Uses the pyahocorasick C automaton when importable
-    (rebuilt per worker from broadcast patterns), else the picklable
-    pure-Python automaton."""
-    if _pyahocorasick is not None:
-        import hashlib
-
-        patterns = sorted({p.lower() for p in surfaces if p})
-        key = hashlib.md5("\x00".join(patterns).encode()).hexdigest()
-        bc = spark.sparkContext.broadcast(patterns)
-
-        def _get():
-            import ahocorasick
-
-            auto = _C_AUTOMATON_CACHE.get(key)
-            if auto is None:
-                auto = ahocorasick.Automaton()
-                for p in bc.value:
-                    auto.add_word(p, p)
-                auto.make_automaton()
-                while len(_C_AUTOMATON_CACHE) >= _C_AUTOMATON_CACHE_MAX:
-                    _C_AUTOMATON_CACHE.pop(next(iter(_C_AUTOMATON_CACHE)))
-                _C_AUTOMATON_CACHE[key] = auto
-
-            def find(t):
-                if not t:
-                    return []
-                return sorted({v for _, v in auto.iter(t.lower())})
-
-            return find
-
-        return _get
+    surfaces`` from the broadcast pure-Python automaton."""
     bc = spark.sparkContext.broadcast(AhoCorasick(surfaces))
     return lambda: bc.value.find_distinct
 
@@ -202,29 +160,22 @@ def with_mentions(
 
     Larger dictionaries broadcast an automaton; the scan is an
     Arrow-batched pandas UDF (narrow — scales with input splits, zero
-    shuffle). When the optional ``pyahocorasick`` C extension is
-    importable the scan uses it (several-fold faster on long pages); the
-    pure-Python automaton is the no-C-deps fallback with identical match
-    semantics.
+    shuffle) with identical match semantics.
     """
     patterns = sorted({p.lower() for p in surfaces if p})
     if not patterns:
         # empty dictionary: [] per row, typed like the automaton output
         return pages.withColumn(out_col, F.array().cast("array<string>"))
     if len(patterns) <= MENTION_EXPR_MAX_SURFACES:
-        # ONE F.expr parse (the Column form pays a py4j round trip per
-        # surface literal — ~0.3 s of plan build at 64 surfaces); the text
-        # lowercases once via the single-element-array let binding.
+        # the surface array is ONE F.expr parse (a Column literal per
+        # surface pays a py4j round trip each — ~0.3 s of plan build at 64
+        # surfaces); the text lowercases once via the let binding.
         # null text: contains(null, s) is null → filter drops every
         # element → [], matching the automaton's [] for None
-        def _q(s: str) -> str:
-            return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-        arr_sql = "array(" + ", ".join(_q(p) for p in patterns) + ")"
-        q = "`" + text_col.replace("`", "``") + "`"
-        expr = F.expr(
-            f"try_element_at(transform(array(lower({q})), "
-            f"t -> filter({arr_sql}, s -> contains(t, s))), 1)"
+        surface_arr = str_array_lit(patterns)
+        expr = let_expr(
+            F.lower(F.col(text_col)),
+            lambda t: F.filter(surface_arr, lambda s: t.contains(s)),
         )
         return pages.withColumn(out_col, expr)
 

@@ -1,24 +1,22 @@
-"""Best-match selection per document (SURVEY §2 M5/P11/J1/F8/W5).
+"""LLM reply validation for the best-match stage (SURVEY §2 M5/P11).
 
 The reference sends the passage + top-k candidates to gpt-4 and validates the
-JSON reply (``app/llm_matcher.py:77-138``). The engine keeps that interface
-but defaults to a **deterministic scoring stub** with the same decision
-inputs the prompt exposes: exact-synonym/name hits beat vector certainty
-(the prompt tells the model to weigh synonym relevance over raw similarity).
-The stub is pure DataFrame algebra — reproducible, oracle-checkable, and the
-LLM adapter can replace it without changing the plan shape.
+JSON reply (``app/llm_matcher.py:77-138``). The engine's default decision is
+a **deterministic scoring stub** inside the flagship plan
+(``pipeline/triples.py::_rerank_exprs``: exact-synonym/name hits beat vector
+certainty, as the prompt tells the model to weigh synonym relevance over raw
+similarity); an LLM adapter (``pipeline/providers.py``) can replace it, and
+its replies are validated here.
 
 Validation semantics preserved from the reference (llm_matcher.py:94-124):
 - markdown ```json fences stripped before parsing;
 - required keys {id, name, confidence, reason};
-- chosen id must be one of the candidates;
-- winner enriched from its candidate row (broadcast equi-join J1);
-- alternatives = candidates minus winner, in candidate order (main.py:84).
+- chosen id must be one of the candidates.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -26,123 +24,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-
-def rerank_best_match(
-    candidates: DataFrame,
-    terms: DataFrame,
-    query_id_col: str = "url",
-) -> DataFrame:
-    """(url, mentions|mention, term_id, certainty) → one best row per url.
-
-    Scoring stub: a mention that equals an exact synonym or the term name
-    adds a +1.0 bonus over certainty; ties break by certainty desc then
-    term_id asc. Confidence is the winner's certainty clipped to [0,1]
-    with a 0.05 exactness boost (deterministic analog of gpt-4's
-    confidence float). The reported ``mention`` is the candidate's most
-    specific surface (longest, then lexicographic).
-    """
-    if "mentions" not in candidates.columns:
-        candidates = candidates.withColumn("mentions", F.array(F.col("mention"))).drop(
-            "mention"
-        )
-    enriched = candidates.join(
-        F.broadcast(
-            terms.select(
-                "term_id",
-                F.col("name"),
-                F.col("definition"),
-                F.col("exact_synonyms"),
-                F.col("namespace"),
-            )
-        ),
-        on="term_id",
-        how="left",
-    )
-    exact_set = F.transform(
-        F.coalesce(F.col("exact_synonyms"), F.array().cast("array<string>")),
-        lambda s: F.lower(s),
-    )
-    is_exact = lambda m: F.array_contains(exact_set, F.lower(m)) | (  # noqa: E731
-        F.lower(F.col("name")) == F.lower(m)
-    )
-    exact_hit = F.exists(F.col("mentions"), is_exact)
-    # reported mention: the most specific surface — longest, then
-    # lexicographic (exactness feeds the score, not the report)
-    mention_ranked = F.array_sort(
-        F.transform(
-            F.col("mentions"),
-            lambda m: F.struct((-F.length(m)).alias("l"), m.alias("m")),
-        )
-    )
-    scored = (
-        enriched.withColumn(
-            "mention", F.try_element_at(mention_ranked, F.lit(1))["m"]
-        )
-        # carry the exact flag itself: `stub_score >= 1.0` is NOT a valid
-        # exactness proxy (a non-exact candidate with certainty exactly
-        # 1.0 would claim the exact-match bonus and reason)
-        .withColumn("_exact_hit", exact_hit)
-        .withColumn(
-            "stub_score",
-            F.when(F.col("_exact_hit"), F.lit(1.0)).otherwise(F.lit(0.0))
-            + F.col("certainty"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("stub_score"), F.desc("certainty"), F.asc("term_id")
-    )
-    ranked = scored.withColumn("pick_rank", F.row_number().over(w))
-    # alternatives: all candidate ids except the winner, best-first (F8/W5)
-    alts = (
-        ranked.where(F.col("pick_rank") > 1)
-        .groupBy(query_id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pick_rank", "term_id"))
-            ).alias("_alt_structs")
-        )
-        .select(
-            query_id_col,
-            F.transform(F.col("_alt_structs"), lambda s: s["term_id"]).alias(
-                "alternatives"
-            ),
-        )
-    )
-    best = ranked.where(F.col("pick_rank") == 1).drop("pick_rank")
-    return (
-        best.join(alts, on=query_id_col, how="left")
-        .withColumn(
-            "alternatives",
-            F.coalesce(F.col("alternatives"), F.array().cast("array<string>")),
-        )
-        .withColumn(
-            "confidence",
-            F.least(
-                F.lit(1.0),
-                F.col("certainty")
-                + F.when(F.col("_exact_hit"), F.lit(0.05)).otherwise(F.lit(0.0)),
-            ).cast("float"),
-        )
-        .withColumn(
-            "reason",
-            F.when(
-                F.col("_exact_hit"),
-                F.concat(
-                    F.lit("exact surface match '"),
-                    F.col("mention"),
-                    F.lit("' for "),
-                    F.col("term_id"),
-                ),
-            ).otherwise(
-                F.concat(
-                    F.lit("highest embedding certainty for "), F.col("term_id")
-                )
-            ),
-        )
-        .drop("stub_score", "_exact_hit", "exact_synonyms", "mentions")
-    )
-
 
 LLM_RESULT_SCHEMA = StructType(
     [

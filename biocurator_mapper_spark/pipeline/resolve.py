@@ -122,9 +122,11 @@ class Resolver:
         from ..functions.embed import cosine_expr
 
         qvec = F.array(*[F.lit(float(x)) for x in q]).cast("array<float>")
-        scored = self.scored_base.withColumn(
-            "sim", cosine_expr(qvec, F.col("term_embedding")).cast("double")
-        ).drop("term_embedding")
+        scored = (
+            self.scored_base.withColumn("_qvec", qvec)
+            .withColumn("sim", cosine_expr("_qvec", "term_embedding").cast("double"))
+            .drop("term_embedding", "_qvec")
+        )
         pl = F.lit(passage_l)
         surface_cond = (
             (F.length(F.col("name")) > 0)

@@ -129,8 +129,8 @@ def _fused_page_scan(
     """(url, warc_ts, html, text?, lang) → (url, warc_ts, lang, mentions,
     page_embedding) in ONE Arrow pass: byte-identical HTML→text extraction
     (``extract_text_py``), passage fallback (empty extraction → ``text``),
-    broadcast dictionary scan (pyahocorasick when available), and the page
-    embedding. ``page_embed`` is a batched ``pd.Series → pd.Series``
+    broadcast Aho-Corasick dictionary scan, and the page embedding.
+    ``page_embed`` is a batched ``pd.Series → pd.Series``
     callable — the hash stub by default, a provider-backed embedder with
     the same contract otherwise (M1). Narrow: scales with input splits,
     zero shuffle."""

@@ -46,15 +46,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return out
 
 
-def scan_read_schemas(df: DataFrame) -> list[str]:
-    out = []
-    for line in _plan_string(df).splitlines():
-        m = re.search(r"ReadSchema: (struct<[^>]*)", line)
-        if m:
-            out.append(m.group(1))
-    return out
-
-
 def plan_summary(df: DataFrame) -> dict:
     plan = _plan_string(df)
     return {

@@ -5,9 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from biocurator_mapper_spark.operators.bloom import (
-    bloom_bits_hex,
     bloom_contamination_candidates,
-    bloom_member_expr,
+    bloom_member_words_expr,
+    bloom_words,
     decontaminate_bloom,
 )
 from biocurator_mapper_spark.operators.dedup import (
@@ -47,10 +47,10 @@ def test_decontaminate_bloom_identical_to_exact(spark):
 
 def test_candidates_are_superset_of_true_collisions(spark):
     corpus, bench = _corpora(spark)
-    bits = bloom_bits_hex(bench, "doc_id", "text", n=5)
+    words = bloom_words(bench, "doc_id", "text", n=5)
     cands = {
         r.doc_id
-        for r in bloom_contamination_candidates(corpus, bits, "doc_id", "text", n=5).collect()
+        for r in bloom_contamination_candidates(corpus, words, "doc_id", "text", n=5).collect()
     }
     true_hits = {
         r.doc_id
@@ -62,20 +62,20 @@ def test_candidates_are_superset_of_true_collisions(spark):
 def test_member_expr_no_false_negatives_tiny_filter(spark):
     # a deliberately tiny filter (high FP rate) still has NO false negatives
     corpus, bench = _corpora(spark)
-    bits = bloom_bits_hex(bench, "doc_id", "text", n=5, m_bits=256)
-    assert len(bits) == 64  # 256 bits = 64 hex chars
+    words = bloom_words(bench, "doc_id", "text", n=5, m_bits=256)
+    assert len(words) == 4  # 256 bits = 4 words
     bh = spark.createDataFrame(
-        [("the quick brown fox jumps",)], "g string"
-    ).select(shingle_hash_expr(F.col("g")).alias("h"))
+        [("the quick brown fox jumps", words)], "g string, w array<long>"
+    ).select(shingle_hash_expr(F.col("g")).alias("h"), "w")
     got = bh.select(
-        bloom_member_expr(F.col("h"), F.lit(bits), m_bits=256).alias("m")
+        bloom_member_words_expr(F.col("h"), F.col("w"), m_bits=256).alias("m")
     ).collect()[0].m
     assert got is True
 
 
 def test_probe_is_codegen_only(spark):
     corpus, bench = _corpora(spark)
-    bits = bloom_bits_hex(bench, "doc_id", "text", n=5)
-    out = bloom_contamination_candidates(corpus, bits, "doc_id", "text", n=5)
+    words = bloom_words(bench, "doc_id", "text", n=5)
+    out = bloom_contamination_candidates(corpus, words, "doc_id", "text", n=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -469,43 +469,69 @@ def test_simhash_identical_docs_zero_distance(spark, docs):
     assert by_id[1] == by_id[102]  # case-insensitive tokens
 
 
+@pytest.mark.parametrize("n", [2, 3, 4])
+def test_shingles_expr_matches_python_shingler(spark, n):
+    """The one-parse shingle expression equals a plain-Python shingler on
+    null, empty, token-less, short (< n tokens) and normal documents."""
+    from biocurator_mapper_spark.operators.dedup import shingles_expr
+
+    texts = [
+        None,
+        "",
+        "  ...  ",
+        "Short",
+        "two Words",
+        "the quick brown fox jumps over the lazy dog the quick brown fox",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {
+        r.doc_id: r.sh
+        for r in df.select("doc_id", shingles_expr("text", n).alias("sh")).collect()
+    }
+    for i, t in enumerate(texts):
+        want = _shingles(t or "", n)
+        assert len(got[i]) == len(want), (t, got[i])  # distinct
+        assert set(got[i]) == want, (t, got[i])
+
+
 def test_minhash_signature_paths_agree(spark):
-    """The per-row array-expression signatures (minhash_signature_cols) and
-    the scale path's explode→hash-aggregate minima must be the same
-    function — both derive the 16 permutations from one 60-bit shingle
-    hash, and a drift between them would silently change LSH banding."""
-    from pyspark.sql import functions as F
+    """The scale path's explode→hash-aggregate minima equal a plain-Python
+    MinHash over the same shingles: 60-bit md5 shingle hash, then the
+    universal-hash permutations. A drift would silently change LSH
+    banding. Short docs sign their one whole-text shingle; shingle-less
+    docs emit no signature row."""
+    import hashlib
 
     from biocurator_mapper_spark.operators.dedup import (
         _MINHASH_AB,
         MINHASH_MOD,
         _hashed_shingle_rows,
-        minhash_signature_cols,
+        _minhash_sig_aggs,
     )
 
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"), (2, "short"), (3, "")],
-        "doc_id long, text string",
-    )
-    arr = df.select(
-        "doc_id", *minhash_signature_cols(F.col("text"), n=3, num_hashes=4)
-    ).collect()
-    hm = F.col("h") % MINHASH_MOD
-    agg = (
-        _hashed_shingle_rows(df, "doc_id", "text", 3)
+    texts = {1: "the quick brown fox jumps over the lazy dog", 2: "short", 3: ""}
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {
+        r._id: tuple(r[f"mh_{i}"] for i in range(4))
+        for r in _hashed_shingle_rows(df, "doc_id", "text", 3)
+        .withColumn("hm", F.col("h") % MINHASH_MOD)
         .groupBy("_id")
-        .agg(
-            *[
-                F.min((F.lit(a) * hm + F.lit(b)) % F.lit(MINHASH_MOD)).alias(f"mh_{i}")
-                for i, (a, b) in enumerate(_MINHASH_AB[:4])
-            ]
-        )
+        .agg(*_minhash_sig_aggs(4))
         .collect()
-    )
-    a = {r.doc_id: tuple(r[f"mh_{i}"] for i in range(4)) for r in arr}
-    g = {r._id: tuple(r[f"mh_{i}"] for i in range(4)) for r in agg}
-    assert a[1] == g[1] and a[2] == g[2]
-    assert all(v is None for v in a[3])  # shingle-less doc → null signature
+    }
+
+    def h60(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    want = {}
+    for doc_id, t in texts.items():
+        hs = [h60(s) % MINHASH_MOD for s in _shingles(t, 3)]
+        if hs:
+            want[doc_id] = tuple(
+                min((a * h + b) % MINHASH_MOD for h in hs) for a, b in _MINHASH_AB[:4]
+            )
+    assert got == want
+    assert set(want) == {1, 2}
 
 
 def test_decontaminate_exact_ngram_collision_rule(spark, docs):

@@ -12,7 +12,7 @@ from biocurator_mapper_spark.functions.text import (
     curie_normalize,
     doc_fingerprint,
     lang_id_expr,
-    quality_score_cols,
+    quality_struct,
     token_count,
     truncate_with_ellipsis,
     with_url_host,
@@ -71,9 +71,12 @@ def test_quality_and_lang(spark):
         ],
         "k string, t string",
     )
-    cols = quality_score_cols(F.col("t"))
-    out = {r.k: r for r in df.select("k", *[v.alias(n) for n, v in cols.items()],
-                                     lang_id_expr(F.col("t")).alias("lang")).collect()}
+    out = {
+        r.k: r
+        for r in df.withColumn("_q", quality_struct(F.col("t")))
+        .select("k", "_q.*", lang_id_expr(F.col("t")).alias("lang"))
+        .collect()
+    }
     assert out["good"].quality_score > out["punct"].quality_score
     assert out["good"].lang == "en"
     assert out["es"].lang == "es"
@@ -248,8 +251,8 @@ def test_redact_pii_planted(spark):
     assert out[4] == ("clean text, nothing to scrub", 0, 0, 0)
 
 
-def test_repetition_cols_planted(spark):
-    from biocurator_mapper_spark.functions.text import repetition_cols
+def test_repetition_struct_planted(spark):
+    from biocurator_mapper_spark.functions.text import repetition_struct
     from pyspark.sql import functions as F
 
     rows = [
@@ -258,15 +261,11 @@ def test_repetition_cols_planted(spark):
         (3, "a\nb\na\n\n a "),            # lines a,b,a,a → 4 lines, 2 distinct
     ]
     df = spark.createDataFrame(rows, "i int, t string")
-    cols = repetition_cols(F.col("t"))
     out = {
-        r.i: (r.mf, round(r.mr, 6), round(r.dl, 6))
-        for r in df.select(
-            "i",
-            cols["max_word_freq"].alias("mf"),
-            cols["max_word_freq_ratio"].alias("mr"),
-            cols["dup_line_frac"].alias("dl"),
-        ).collect()
+        r.i: (r.max_word_freq, round(r.max_word_freq_ratio, 6), round(r.dup_line_frac, 6))
+        for r in df.withColumn("_r", repetition_struct(F.col("t")))
+        .select("i", "_r.*")
+        .collect()
     }
     assert out[1] == (3, 0.75, 0.0)
     assert out[2] == (1, 0.25, 0.0)
@@ -397,3 +396,24 @@ def test_null_text_yields_zero_signals_not_null(spark):
     stages = {r.doc_id: r.curation_stage for r in curate(docs, lang_col=None).collect()}
     assert stages[1] != "kept"
     assert stages[2] == "kept"
+
+
+def test_str_array_lit_under_both_parser_settings(spark):
+    """The one SQL literal escaper parses quotes, backslashes and empty
+    strings to the same values whether or not
+    spark.sql.parser.escapedStringLiterals is on, and the chr()/concat
+    spelling constant-folds away."""
+    from biocurator_mapper_spark.functions.exprs import str_array_lit
+
+    values = ["it's", "a\\b", "'", "", "plain"]
+    key = "spark.sql.parser.escapedStringLiterals"
+    saved = spark.conf.get(key)
+    try:
+        for setting in ("false", "true"):
+            spark.conf.set(key, setting)
+            df = spark.range(1).select(str_array_lit(values).alias("a"))
+            assert df.collect()[0].a == values, setting
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "chr(" not in plan and "concat(" not in plan, plan
+    finally:
+        spark.conf.set(key, saved)

@@ -1,5 +1,5 @@
-"""Unit tests: Aho-Corasick mentions, top-k scoring, rerank, connected
-components."""
+"""Unit tests: Aho-Corasick mentions, top-k scoring, LLM reply parsing,
+connected components."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from biocurator_mapper_spark.operators import (
     connected_components,
     mention_candidates,
     parse_llm_json,
-    rerank_best_match,
 )
 
 
@@ -45,7 +44,7 @@ def test_aho_corasick_matches_naive_substring():
         assert ac.find_distinct(text) == want, text
 
 
-def test_mention_candidates(spark, terms):
+def test_mention_candidates(spark, terms, monkeypatch):
     surface_map = build_surface_map(terms)
     pages = spark.createDataFrame(
         [
@@ -61,6 +60,38 @@ def test_mention_candidates(spark, terms):
     assert ("u2", "niddm", "DOID:9352") in rows
     assert ("u2", "adult-onset diabetes", "DOID:9352") in rows
     assert not any(u == "u3" for (u, _, _) in rows)
+
+    # the two mention engines (codegen `contains` filter up to
+    # MENTION_EXPR_MAX_SURFACES surfaces, broadcast automaton past it)
+    # agree on non-ASCII case folds, ligatures, quotes, backslashes and
+    # null/empty text — and both equal plain-Python substring matching
+    from biocurator_mapper_spark.operators import mentions as M
+
+    surfaces = ["İstanbul", "ẞ", "ﬁbrosis", "ΟΔΟΣ", "it's", "a\\b", "hash join"]
+    texts = [
+        "Trip to İSTANBUL, then the ẞ street",
+        "pulmonary ﬁbrosis on the ΟΔΟΣ sign; It's a\\b path",
+        "HASH JOIN, no ligature: fibrosis",
+        "",
+        None,
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id int, extracted_text string"
+    )
+    want = {
+        i: sorted({s.lower() for s in surfaces if s.lower() in (t or "").lower()})
+        for i, t in enumerate(texts)
+    }
+    assert want[0] and want[1] and want[2]  # the fixture exercises matches
+    by_engine = {}
+    for engine, limit in (("codegen", len(surfaces)), ("automaton", 0)):
+        monkeypatch.setattr(M, "MENTION_EXPR_MAX_SURFACES", limit)
+        out = M.with_mentions(docs, surfaces)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("ArrowEvalPython" in plan) == (engine == "automaton")
+        by_engine[engine] = {r.doc_id: list(r.mentions) for r in out.collect()}
+    assert by_engine["codegen"] == want
+    assert by_engine["automaton"] == want
 
 
 # ------------------------------------------------------------------- top-k
@@ -95,29 +126,7 @@ def test_topk_zero_vector_query(spark):
     assert all(abs(r.cosine) < 1e-6 for r in rows)
 
 
-# ------------------------------------------------------------------ rerank
-def test_rerank_prefers_exact_synonym(spark, terms):
-    cands = spark.createDataFrame(
-        [
-            # certainty says DOID:14566, but the mention is an exact synonym
-            # of DOID:0001816 — exactness must win (stub reproduces the
-            # prompt's instruction to weigh synonym relevance).
-            ("u1", "hemangiosarcoma", "DOID:0001816", 0.70),
-            ("u1", "hemangiosarcoma", "DOID:14566", 0.90),
-            ("u2", "proliferative disorder", "DOID:14566", 0.80),
-        ],
-        "url string, mention string, term_id string, certainty float",
-    )
-    best = rerank_best_match(cands, terms)
-    by_url = {r.url: r for r in best.collect()}
-    assert by_url["u1"].term_id == "DOID:0001816"
-    assert by_url["u1"].alternatives == ["DOID:14566"]
-    assert by_url["u1"].confidence > 0.7
-    assert "exact surface match" in by_url["u1"].reason
-    assert by_url["u2"].term_id == "DOID:14566"
-    assert by_url["u2"].alternatives == []
-
-
+# ------------------------------------------------------- LLM reply parse
 def test_parse_llm_json(spark):
     df = spark.createDataFrame(
         [
@@ -263,35 +272,6 @@ def test_hash_embed_deterministic_and_word_sensitive():
     cos_ao = float(np.dot(a, overlap))
     assert cos_ao > cos_ac  # shared words → higher similarity
     assert hash_embed_py("") == [0.0] * 64
-
-
-def test_pyahocorasick_fast_path_parity(spark):
-    """When the optional C extension is present, its matches must equal the
-    pure-Python automaton's (skipped where the lib isn't installed)."""
-    import pytest
-
-    pytest.importorskip("ahocorasick")
-    from biocurator_mapper_spark.operators import mentions as M
-
-    pages = spark.createDataFrame(
-        [(1, "the Hash Join and table scan overlap"), (2, ""), (3, None)],
-        "doc_id int, extracted_text string",
-    )
-    surfaces = ["hash join", "table scan", "scan over"]
-    fast = {
-        (r.doc_id, tuple(r.mentions))
-        for r in M.with_mentions(pages, surfaces).collect()
-    }
-    saved = M._pyahocorasick
-    try:
-        M._pyahocorasick = None  # force the pure-Python path
-        slow = {
-            (r.doc_id, tuple(r.mentions))
-            for r in M.with_mentions(pages, surfaces).collect()
-        }
-    finally:
-        M._pyahocorasick = saved
-    assert fast == slow
 
 
 def test_stratified_sample_and_cap_deterministic(spark):

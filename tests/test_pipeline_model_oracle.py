@@ -148,6 +148,14 @@ def _model_triples(terms, pages, k=5):
             "mention": mention,
             "alternatives": [c[0] for c in ranked[1:]],
             "ambiguous": ambiguous,
+            "exact": exact,
+            "reason": (
+                f"exact surface match '{mention}' for {tid}"
+                if exact
+                else f"highest embedding certainty for {tid}"
+            ),
+            # the exactness bonus beat a candidate with higher certainty
+            "overrode": exact and any(c[1] > certainty for c in topk),
         }
     return out
 
@@ -176,8 +184,19 @@ def test_pipeline_matches_sequential_model(spark):
             # alternatives carry raw (pre-canonical) ids in both
             a for a in w["alternatives"]
         ], (url, g.alternatives, w["alternatives"])
+        assert g.reason == w["reason"], (url, g.reason, w["reason"])
+        # confidence = certainty + the 0.05 exactness boost, clipped to 1
+        want_conf = min(1.0, g.certainty + (0.05 if w["exact"] else 0.0))
+        assert abs(g.confidence - want_conf) < 1e-6, (url, g.confidence, want_conf)
         checked += 1
     assert checked >= 50  # the comparison actually exercised many pages
+    # the rerank cases the comparison must have exercised: an exact
+    # surface beating a higher-certainty candidate, and both single- and
+    # multi-candidate pages
+    decided = [w for w in want.values() if not w["ambiguous"]]
+    assert any(w["overrode"] for w in decided)
+    assert any(w["alternatives"] == [] for w in decided)
+    assert any(w["alternatives"] for w in decided)
 
 
 def test_pipeline_matches_model_multiple_seeds(spark):

@@ -55,33 +55,34 @@ def test_lsh_topk_recall_vs_exact(spark, vec_data):
 
 
 def test_cosine_expr_string_form_bit_identical(spark):
-    """The F.expr fast-construction path (string column names) must produce
-    bit-identical doubles to the lambda-HOF Column path — same parsed
-    expression tree, same left-to-right fold — including the zero-norm and
-    weird-identifier edge cases."""
-    import math
-
-    from pyspark.sql import functions as F
+    """cosine_expr over column NAMES is bit-identical to a numpy float64
+    left-to-right fold (float32 inputs widened before multiplying),
+    including the zero-norm case and identifiers that need backtick
+    quoting (a space, a literal backtick)."""
+    import numpy as np
 
     from biocurator_mapper_spark.functions.embed import cosine_expr
 
     rows = [
         ([1.0, 2.0, 3.0], [2.0, 3.0, 4.0]),
-        ([0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),   # zero norm → 0.0
+        ([0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),  # zero norm → 0.0
         ([-1.5, 0.25, 8.0], [7.0, -0.125, 3.25]),
+        ([0.1, 0.7, -0.3], [0.3, 0.2, 0.9]),  # not exact in float32
     ]
-    df = spark.createDataFrame(rows, "`a b` array<float>, b array<float>")
-    fast = [r.c for r in df.select(cosine_expr("a b", "b").alias("c")).collect()]
-    slow = [
-        r.c
-        for r in df.select(
-            cosine_expr(F.col("`a b`"), F.col("b")).alias("c")
-        ).collect()
-    ]
-    assert all(
-        (math.isnan(x) and math.isnan(y)) or x == y for x, y in zip(fast, slow)
-    )
-    assert fast[1] == 0.0
+    df = spark.createDataFrame(rows, "`a b` array<float>, `c``d` array<float>")
+    got = [r.c for r in df.select(cosine_expr("a b", "c`d").alias("c")).collect()]
+
+    def fold(a, b):
+        a = np.asarray(a, np.float32).astype(np.float64)
+        b = np.asarray(b, np.float32).astype(np.float64)
+        # np.add.accumulate sums strictly left to right (np.sum is pairwise)
+        dot = np.add.accumulate(a * b)[-1]
+        na = np.sqrt(np.add.accumulate(a * a)[-1])
+        nb = np.sqrt(np.add.accumulate(b * b)[-1])
+        return float(dot / (na * nb)) if na > 0 and nb > 0 else 0.0
+
+    assert got == [fold(a, b) for a, b in rows]
+    assert got[1] == 0.0
 
 
 def test_ivf_index_build_search_matches_fresh_ivf_topk(spark, tmp_path):
