@@ -2,7 +2,7 @@
 
 PY ?= python
 
-.PHONY: test bench scaling package check-oracles plans
+.PHONY: test bench kgbench scaling package check-oracles plans
 
 # tier-1: the whole suite on every core, with the suite's time budget
 test:
@@ -11,6 +11,13 @@ test:
 
 bench:
 	$(PY) bench.py
+
+# the seeded KG-construction benchmark: both workloads, then its own tests
+kgbench:
+	for w in kg_crawl curate_dedup; do \
+	  $(PY) kgbench/run.py --workload $$w --seed 1 --seconds 20 --trace 0 || exit 1; \
+	done
+	$(PY) -m pytest kgbench/tests -q
 
 scaling:
 	$(PY) tools/scaling_bench.py --levels 2,8 --replicas 150

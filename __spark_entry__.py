@@ -191,12 +191,13 @@ def _memo_df(
     return ent[1]
 
 
-# parquet schemas keyed by file path: a bare spark.read.parquet() pays a
-# JVM footer/schema-inference probe (~0.07-0.09 s) on EVERY call — with
-# the plan memo off (bench) that is per query per pass. The schema of an
-# immutable testdata file is a constant; caching it as a DDL string (no
-# session objects) and passing it back via .schema() skips the probe
-# while building the identical scan relation.
+# parquet schemas keyed by (path, mtime, size): a bare spark.read.parquet()
+# pays a JVM footer/schema-inference probe (~0.07-0.09 s) on EVERY call —
+# with the plan memo off (bench) that is per query per pass. The schema of
+# an unchanged file is a constant; caching it (a plain StructType, no
+# session objects) and passing it back via .schema() skips the probe while
+# building the identical scan relation. A file rewritten in place gets a
+# new mtime/size, so its new schema is probed rather than served stale.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -207,11 +208,15 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     result-identical (and bench disables the memo)."""
 
     def _build() -> DataFrame:
+        import os
+
         path = f"{sf_dir}/{table}.parquet"
-        schema = _SCHEMA_CACHE.get(path)
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+        schema = _SCHEMA_CACHE.get(key)
         if schema is None:
             df = spark.read.parquet(path)
-            _SCHEMA_CACHE[path] = df.schema  # plain StructType, no session refs
+            _SCHEMA_CACHE[key] = df.schema  # plain StructType, no session refs
             return df
         return spark.read.schema(schema).parquet(path)
 

@@ -2,10 +2,15 @@
 
 The reference normalizes identifiers lexically only (``app/go_parser.py:
 97-100``); the north rule requires canonicalizing surface forms / duplicate
-CURIEs through the alias graph (term ↔ cross_reference edges, P5). This is
-the alternating **large-star / small-star** algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond") expressed as DataFrame
-self-joins:
+CURIEs through the alias graph (term ↔ cross_reference edges, P5). One
+ontology's alias graph is dimension-sized: ``canonical_rows`` runs a driver
+union-find over the collected term rows (shared by ``canonical_mapping``
+and ``build_triples``).
+
+Corpus-sized graphs (the dedup pair graphs) go through
+``connected_components``, whose big-input path is the alternating
+**large-star / small-star** algorithm (Kiveris et al., "Connected
+Components in MapReduce and Beyond") expressed as DataFrame self-joins:
 
 - per-node minima come from ``groupBy(u).agg(min(v))`` — partial (map-side)
   aggregation absorbs hub-key skew before the shuffle;
@@ -24,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dims import local_dim_df
+from .mentions import collect_driver_rows
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -90,19 +96,16 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    strategy: str = "auto",
 ) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id.
 
     Node ids are compared as their natural type (strings compare
     lexicographically). Self-loops and duplicates are tolerated.
 
-    ``strategy``: 'auto' collects broadcast-sized edge lists
-    (≤ DRIVER_CC_MAX_EDGES, cheap count first) to a driver union-find —
-    the alias graph of a single ontology is dimension-sized, and an
-    iterative shuffle loop on it wastes whole cluster rounds; 'distributed'
-    forces the star loop (the web-scale surface-form graph path);
-    'driver' forces the union-find.
+    Broadcast-sized edge lists (≤ DRIVER_CC_MAX_EDGES; one limited collect
+    both sizes and fetches) go to a driver union-find — an iterative
+    shuffle loop on them wastes whole cluster rounds. Bigger graphs (the
+    corpus-sized dedup pair graphs) run the large-star/small-star loop.
     """
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -111,26 +114,22 @@ def connected_components(
         .distinct()
     )
     spark = edges.sparkSession
-    if strategy != "distributed":
-        if strategy == "driver":
-            pairs_rows = e.collect()
-        else:  # auto: one job both sizes and fetches
-            pairs_rows = e.limit(DRIVER_CC_MAX_EDGES + 1).collect()
-        if strategy == "driver" or len(pairs_rows) <= DRIVER_CC_MAX_EDGES:
-            comp = _driver_union_find([(r.src, r.dst) for r in pairs_rows])
-            # preserve the NODE ID TYPE: a hardcoded string schema made the
-            # driver path crash on bigint ids the distributed path accepts
-            # (size-dependent API behavior)
-            from pyspark.sql.types import StructField, StructType
+    pairs_rows = e.limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    if len(pairs_rows) <= DRIVER_CC_MAX_EDGES:
+        comp = _driver_union_find([(r.src, r.dst) for r in pairs_rows])
+        # preserve the NODE ID TYPE: a hardcoded string schema made the
+        # driver path crash on bigint ids the distributed path accepts
+        # (size-dependent API behavior)
+        from pyspark.sql.types import StructField, StructType
 
-            node_type = edges.schema[src].dataType
-            out_schema = StructType(
-                [
-                    StructField("node", node_type),
-                    StructField("component", node_type),
-                ]
-            )
-            return local_dim_df(spark, list(comp.items()), out_schema)
+        node_type = edges.schema[src].dataType
+        out_schema = StructType(
+            [
+                StructField("node", node_type),
+                StructField("component", node_type),
+            ]
+        )
+        return local_dim_df(spark, list(comp.items()), out_schema)
     all_nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -267,47 +266,44 @@ def clusters_from_pairs_best(
     )
 
 
-def canonical_mapping(
-    terms: DataFrame,
-    id_col: str = "term_id",
-    xref_col: str = "cross_references",
-) -> DataFrame:
-    """terms → (term_id, canonical_id): terms connected through shared
-    cross-references collapse to one canonical CURIE (the lexicographic min
-    term id in the component).
+def canonical_rows(term_rows: list) -> list[tuple[str, str]]:
+    """term rows → sorted (term_id, canonical_id) rows: terms connected
+    through shared cross-references collapse to one canonical CURIE (the
+    lexicographic min term id in the component); xref-less terms map to
+    themselves. Rows need attribute access to ``term_id`` and
+    ``cross_references``; null and empty xrefs add no edge.
 
     Xref values are namespaced with a sentinel prefix so they can never
     collide with (or win over) a real term id when taking component minima.
     """
-    edges = (
-        terms.select(
-            F.col(id_col).alias("src"),
-            F.explode_outer(F.col(xref_col)).alias("_x"),
-        )
-        .where(F.col("_x").isNotNull() & (F.col("_x") != ""))
-        .select("src", F.concat(F.lit("xref:"), F.col("_x")).alias("dst"))
-    )
-
-    cc = connected_components(edges)
+    edges = [
+        (r.term_id, f"xref:{x}")
+        for r in term_rows
+        for x in r.cross_references or []
+        if x
+    ]
+    comp = _driver_union_find(edges)
     # components may be keyed by an xref node; re-key each component by its
-    # minimum REAL term id.
-    term_nodes = cc.join(
-        terms.select(F.col(id_col).alias("node")).distinct(), "node"
+    # minimum REAL term id
+    term_ids = {r.term_id for r in term_rows}
+    by_comp: dict[str, str] = {}
+    for t in term_ids:
+        c = comp.get(t)
+        if c is not None:
+            by_comp[c] = min(by_comp.get(c, t), t)
+    return [(t, by_comp[comp[t]] if t in comp else t) for t in sorted(term_ids)]
+
+
+def canonical_mapping(terms: DataFrame) -> DataFrame:
+    """terms(term_id, cross_references) → (term_id, canonical_id) per
+    ``canonical_rows``, as a single-slice local relation. The alias graph
+    of one ontology is dimension-sized: one bounded collect, then the same
+    driver union-find ``build_triples`` uses."""
+    rows = collect_driver_rows(
+        terms.select("term_id", "cross_references"), "canonical_mapping terms"
     )
-    canon = term_nodes.groupBy("component").agg(
-        F.min("node").alias("canonical_id")
-    )
-    mapped = term_nodes.join(canon, "component").select(
-        F.col("node").alias(id_col), "canonical_id"
-    )
-    # xref-less terms never enter the edge list; they canonicalize to
-    # themselves.
-    return (
-        terms.select(F.col(id_col))
-        .distinct()
-        .join(mapped, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("canonical_id"), F.col(id_col)).alias("canonical_id"),
-        )
+    return local_dim_df(
+        terms.sparkSession,
+        canonical_rows(rows),
+        "term_id string, canonical_id string",
     )

@@ -82,49 +82,50 @@ class AhoCorasick:
         return sorted(self.patterns[i] for i in hits)
 
 
-def build_surface_map(terms: DataFrame, include_name: bool = True) -> DataFrame:
-    """ontology terms → (surface, term_id, is_exact) dictionary relation.
+# Ontology-side relations up to this many rows are prepared on the driver
+# with ONE bounded collect: every surface goes into one driver-built
+# automaton (or codegen filter), so the surfaces have to reach the driver
+# anyway. Full GO+DOID is ~60k terms (3x headroom); the cap also bounds
+# what the collect hauls through py4j. Past it the collect raises.
+DRIVER_TERMS_MAX = 200_000
 
-    Surfaces are the term name plus every entry of ``all_synonyms``
-    (duplicate-preserving source arrays collapse to distinct pairs here —
-    a mention either links a term or it doesn't). Lowercased for the
-    case-insensitive scan. ``is_exact`` marks surfaces that are the term's
-    name or an exact synonym — precomputing it here lets the rerank stage
-    score exactness without joining the terms table back in.
-    """
-    syn = terms.select(
-        F.explode(F.col("all_synonyms")).alias("surface"),
-        F.col("term_id"),
-        F.col("name"),
-        F.coalesce(F.col("exact_synonyms"), F.array().cast("array<string>")).alias(
-            "_ex"
-        ),
-    )
-    if include_name:
-        syn = terms.select(
-            F.col("name").alias("surface"),
-            "term_id",
-            F.col("name"),
-            F.coalesce(F.col("exact_synonyms"), F.array().cast("array<string>")).alias(
-                "_ex"
-            ),
-        ).unionByName(syn)
-    return (
-        syn.where(F.col("surface").isNotNull() & (F.col("surface") != ""))
-        .select(
-            F.lower(F.col("surface")).alias("surface"),
-            "term_id",
-            (
-                (F.lower(F.col("surface")) == F.lower(F.col("name")))
-                | F.array_contains(
-                    F.transform(F.col("_ex"), lambda s: F.lower(s)),
-                    F.lower(F.col("surface")),
-                )
-            ).alias("is_exact"),
+
+def check_driver_rows(rows: list, what: str) -> list:
+    """``rows`` unchanged, or ``ValueError`` past ``DRIVER_TERMS_MAX``."""
+    if len(rows) > DRIVER_TERMS_MAX:
+        raise ValueError(
+            f"{what} exceeds DRIVER_TERMS_MAX={DRIVER_TERMS_MAX} rows: every "
+            "surface goes into one driver-built automaton"
         )
-        .groupBy("surface", "term_id")
-        .agg(F.max("is_exact").alias("is_exact"))
-    )
+    return rows
+
+
+def collect_driver_rows(df: DataFrame, what: str) -> list:
+    """One bounded collect of a dimension-sized relation:
+    ``limit(DRIVER_TERMS_MAX + 1)`` both sizes and fetches it."""
+    return check_driver_rows(df.limit(DRIVER_TERMS_MAX + 1).collect(), what)
+
+
+def surface_map_rows(term_rows: list) -> list[tuple[str, str, bool]]:
+    """term rows → sorted distinct (surface, term_id, is_exact) rows.
+
+    Rows need attribute access to ``term_id``, ``name``,
+    ``exact_synonyms`` and ``all_synonyms``. Surfaces are the term name
+    plus every entry of ``all_synonyms``, lowercased for the
+    case-insensitive scan; null/empty surfaces are skipped. ``is_exact``
+    marks surfaces that are the term's name or an exact synonym —
+    precomputing it here lets the rerank stage score exactness without
+    joining the terms table back in.
+    """
+    exact_of: dict[tuple[str, str], bool] = {}
+    for r in term_rows:
+        exact = {s.lower() for s in (r.exact_synonyms or []) if s}
+        exact.add((r.name or "").lower())
+        for s in [r.name, *(r.all_synonyms or [])]:
+            if s:
+                key = (s.lower(), r.term_id)
+                exact_of[key] = exact_of.get(key, False) or key[0] in exact
+    return [(s, t, e) for (s, t), e in sorted(exact_of.items())]
 
 
 def broadcast_scanner(spark, surfaces: list[str]):
@@ -207,9 +208,10 @@ def mention_candidates(
     surface_map = surface_map.withColumn("surface", F.lower(F.col("surface")))
     # dedupe DRIVER-side: .distinct() would add a shuffle job (32 tasks at
     # default shuffle partitions) to every plan build; the dictionary is
-    # dimension-sized by contract, so one single-stage collect + a set is
-    # the same list for ~0.2 s less per build
-    surfaces = sorted({r.surface for r in surface_map.select("surface").collect()})
+    # dimension-sized by contract, so one bounded collect + a set is the
+    # same list for ~0.2 s less per build
+    rows = collect_driver_rows(surface_map.select("surface"), "surface map")
+    surfaces = sorted({r.surface for r in rows})
     # under-partitioned input → the Python scan stage would serialize on
     # one task; a round-robin shuffle restores parallelism (no-op for
     # properly split inputs — the 100 TB case)

@@ -23,11 +23,12 @@ from ..functions.embed import hash_embed_py
 
 
 # Ontologies up to this many terms resolve with dense driver-side math (one
-# collect at construction — same judgement call as triples.DRIVER_TERMS_MAX).
-# Bigger ontologies switch to the DISTRIBUTED candidate path: scoring runs
-# as a Spark job per resolve with the top-n LIMIT pushed into the plan
-# (TakeOrderedAndProject), so only ~2k candidate rows — never the full
-# score vector — cross to the driver.
+# collect at construction). Bigger ontologies switch to the DISTRIBUTED
+# candidate path: scoring runs as a Spark job per resolve with the top-n
+# LIMIT pushed into the plan (TakeOrderedAndProject), so only ~2k candidate
+# rows — never the full score vector — cross to the driver. The batch scan
+# raises past operators.mentions.DRIVER_TERMS_MAX instead: it builds one
+# driver-side automaton from every surface, this path builds none.
 RESOLVER_DRIVER_TERMS_MAX = 200_000
 
 _TERM_COLS = [
@@ -40,8 +41,9 @@ class Resolver:
     """Holds the broadcast-shaped term state; resolve() is driver-side math
     (one passage ≡ one row — no cluster job per request, matching the
     reference's sub-second interactive latency). Past
-    ``max_driver_terms``, candidate generation becomes a bounded Spark job
-    instead (full-ontology recall, driver traffic capped at ~2k rows)."""
+    ``RESOLVER_DRIVER_TERMS_MAX`` terms, candidate generation becomes a
+    bounded Spark job instead (full-ontology recall, driver traffic capped
+    at ~2k rows)."""
 
     def __init__(
         self,
@@ -49,7 +51,6 @@ class Resolver:
         k: int = 5,
         chat_provider=None,
         explain: bool = False,
-        max_driver_terms: int = RESOLVER_DRIVER_TERMS_MAX,
     ):
         """``chat_provider`` (name in CHAT_PROVIDERS or a callable) turns on
         the reference's LLM rerank for the interactive path — prompt,
@@ -59,8 +60,9 @@ class Resolver:
         self.k = k
         self.chat_provider = chat_provider
         self.explain = explain
-        probe = terms.select(*_TERM_COLS).limit(max_driver_terms + 1).collect()
-        self.distributed = len(probe) > max_driver_terms
+        cap = RESOLVER_DRIVER_TERMS_MAX
+        probe = terms.select(*_TERM_COLS).limit(cap + 1).collect()
+        self.distributed = len(probe) > cap
         if self.distributed:
             from ..functions.embed import with_hash_embedding
 

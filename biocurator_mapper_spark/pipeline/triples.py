@@ -33,10 +33,13 @@ from ..functions.embed import (
     certainty_expr,
     cosine_from_norms_expr,
     norm_expr,
-    with_hash_embedding,
 )
-from ..operators.canonicalize import canonical_mapping
-from ..operators.mentions import build_surface_map
+from ..operators.canonicalize import canonical_rows
+from ..operators.mentions import (
+    check_driver_rows,
+    collect_driver_rows,
+    surface_map_rows,
+)
 from ..sources.catalog import ParquetCatalog
 
 class RunCancelled(RuntimeError):
@@ -47,79 +50,40 @@ class RunCancelled(RuntimeError):
 DEFAULT_K = 5  # reference app/config.py:10
 TRIPLE_BUCKETS = 256  # bucket(url) partition transform width
 
-# Ontology tables up to this many terms are prepared driver-side with ONE
-# collect (surface map, canonical mapping, term vectors) instead of ~a dozen
-# dimension-sized Spark stages — the same judgement call as broadcasting a
-# small join side. Full GO+DOID is ~60k terms (3x headroom); the cap also
-# bounds what the collect hauls through py4j and what hash_embed_py runs
-# single-threaded on the driver. Bigger ontologies take the distributed path.
-DRIVER_TERMS_MAX = 200_000
-
-
-_TERM_COLS = {
-    "term_id", "name", "exact_synonyms", "all_synonyms",
-    "cross_references", "searchable_text",
-}
-
-
-def _is_plain_terms(terms: DataFrame) -> bool:
-    return _TERM_COLS.issubset(set(terms.columns))
-
-
 def _driver_side_inputs(
     spark, term_rows: list, need_vecs: bool = True
 ) -> tuple[list[str], "DataFrame", "DataFrame | None", "DataFrame"]:
     """Surface list, surface map, term vectors and canonical mapping from
-    collected term rows — zero extra cluster jobs. ``need_vecs=False`` skips
-    per-term embedding (the caller supplies cache-backed vectors)."""
-    from ..functions.embed import hash_embed_py
-    from ..operators.canonicalize import _driver_union_find
+    collected term rows — zero extra cluster jobs instead of ~a dozen
+    dimension-sized Spark stages, the same judgement call as broadcasting
+    a small join side. ``need_vecs=False`` skips per-term embedding (the
+    caller supplies cache-backed vectors).
 
-    surface_map_rows: dict[tuple[str, str], bool] = {}
-    vec_rows = []
-    edges = []
-    for r in term_rows:
-        exact = {s.lower() for s in (r.exact_synonyms or [])}
-        exact.add((r.name or "").lower())
-        for s in [r.name, *(r.all_synonyms or [])]:
-            if s:
-                key = (s.lower(), r.term_id)
-                surface_map_rows[key] = surface_map_rows.get(key, False) or (
-                    s.lower() in exact
-                )
-        if need_vecs:
-            vec_rows.append((r.term_id, hash_embed_py(r.searchable_text)))
-        for x in r.cross_references or []:
-            if x:
-                edges.append((r.term_id, f"xref:{x}"))
-    comp = _driver_union_find(edges)
-    # re-key components by min REAL term id, map every term
-    term_ids = {r.term_id for r in term_rows}
-    by_comp: dict[str, str] = {}
-    for t in term_ids:
-        c = comp.get(t)
-        if c is not None:
-            by_comp[c] = min(by_comp.get(c, t), t)
-    canon_rows = [
-        (t, by_comp[comp[t]] if t in comp else t) for t in sorted(term_ids)
-    ]
+    ``build_triples`` caps the term rows at
+    ``operators.mentions.DRIVER_TERMS_MAX`` and raises past it: every
+    surface goes into one driver-built automaton."""
+    from ..functions.embed import hash_embed_py
+
+    smap = surface_map_rows(term_rows)
     # single-slice dimension frames: the default 32-slice parallelize made
     # every broadcast-hash build over these a 32-Python-task job (~0.2 s
     # of constant overhead per build; see functions.dims)
     surface_map = local_dim_df(
-        spark,
-        [(s, t, e) for (s, t), e in sorted(surface_map_rows.items())],
-        "surface string, term_id string, is_exact boolean",
+        spark, smap, "surface string, term_id string, is_exact boolean"
     )
     term_vecs = (
-        local_dim_df(spark, vec_rows, "term_id string, term_embedding array<float>")
+        local_dim_df(
+            spark,
+            [(r.term_id, hash_embed_py(r.searchable_text)) for r in term_rows],
+            "term_id string, term_embedding array<float>",
+        )
         if need_vecs
         else None
     )
     canon = local_dim_df(
-        spark, canon_rows, "term_id string, canonical_id string"
+        spark, canonical_rows(term_rows), "term_id string, canonical_id string"
     )
-    surfaces = sorted({s for s, _ in surface_map_rows})
+    surfaces = sorted({s for s, _, _ in smap})
     return surfaces, surface_map, term_vecs, canon
 
 
@@ -397,38 +361,25 @@ def build_triples(
     """
     spark = pages.sparkSession
 
-    # ontology side: ONE collect when dimension-sized (the common case),
-    # else the distributed operators. A caller that already holds the
-    # term rows on the driver (e.g. a constant vocabulary) passes
-    # ``term_rows`` — attribute access per _driver_side_inputs:
-    # term_id, name, exact_synonyms, all_synonyms, cross_references,
-    # searchable_text — and skips the collect job entirely (~0.2 s of
-    # pure round-trip per fresh plan build).
+    # ontology side: ONE bounded collect of the term rows (raises past
+    # DRIVER_TERMS_MAX). A caller that already holds the term rows on the
+    # driver (e.g. a constant vocabulary) passes ``term_rows`` — attribute
+    # access: term_id, name, exact_synonyms, all_synonyms,
+    # cross_references, searchable_text — and skips the collect job
+    # entirely (~0.2 s of pure round-trip per fresh plan build).
     if term_rows is None:
-        term_rows = terms.select(
-            "term_id", "name", "exact_synonyms", "all_synonyms",
-            "cross_references", "searchable_text",
-        ).limit(DRIVER_TERMS_MAX + 1).collect() if _is_plain_terms(terms) else None
-    if term_rows is not None and len(term_rows) <= DRIVER_TERMS_MAX:
-        surfaces, surface_map, default_term_vecs, canon = _driver_side_inputs(
-            spark, term_rows, need_vecs=term_vecs is None
+        term_rows = collect_driver_rows(
+            terms.select(
+                "term_id", "name", "exact_synonyms", "all_synonyms",
+                "cross_references", "searchable_text",
+            ),
+            "ontology terms",
         )
     else:
-        terms = terms.cache()
-        surface_map = build_surface_map(terms)
-        surfaces = [
-            r.surface for r in surface_map.select("surface").distinct().collect()
-        ]
-        default_term_vecs = (
-            with_hash_embedding(
-                terms.select("term_id", "searchable_text"),
-                "searchable_text",
-                "term_embedding",
-            ).select("term_id", "term_embedding")
-            if term_vecs is None
-            else None
-        )
-        canon = canonical_mapping(terms)
+        check_driver_rows(term_rows, "ontology terms")
+    surfaces, surface_map, default_term_vecs, canon = _driver_side_inputs(
+        spark, term_rows, need_vecs=term_vecs is None
+    )
 
     # --- stage A: one narrow pass over the corpus -------------------------
     # extract + passage + mention scan + page embedding run as ONE

@@ -53,7 +53,7 @@ def incremental_triples_query(
     The ontology side is prepared ONCE, not per micro-batch: the term
     vectors (the expensive driver-side embedding pass) are computed up
     front and injected into every batch's ``build_triples`` call, and the
-    terms relation is cached so the per-batch surface-map collect reads
+    terms relation is cached so the per-batch term-row collect reads
     from storage memory instead of recomputing its plan. Draining a
     backlog of N batches pays the embed cost once, not N times.
     """

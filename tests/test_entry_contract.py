@@ -28,6 +28,22 @@ def test_entry_smoke(spark):
     assert df.columns[0] == "subj"
 
 
+def test_read_sees_parquet_rewritten_in_place(spark, tmp_path, monkeypatch):
+    """The parquet schema cache is keyed on (path, mtime, size): a file
+    rewritten in the same process is read with its NEW schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setenv("SPARK_GRAFT_QUERY_MEMO", "0")
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert entrymod._read(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    df = entrymod._read(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_query_runs_and_schema_sane(spark, name):
     df = entrymod.queries()[name](spark, SF_DIR)

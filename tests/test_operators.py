@@ -11,7 +11,6 @@ from biocurator_mapper_spark.operators import (
     AhoCorasick,
     broadcast_topk,
     brute_force_topk_join,
-    build_surface_map,
     canonical_mapping,
     connected_components,
     mention_candidates,
@@ -45,7 +44,14 @@ def test_aho_corasick_matches_naive_substring():
 
 
 def test_mention_candidates(spark, terms, monkeypatch):
-    surface_map = build_surface_map(terms)
+    from biocurator_mapper_spark.functions.dims import local_dim_df
+    from biocurator_mapper_spark.operators.mentions import surface_map_rows
+
+    surface_map = local_dim_df(
+        spark,
+        surface_map_rows(terms.collect()),
+        "surface string, term_id string, is_exact boolean",
+    )
     pages = spark.createDataFrame(
         [
             ("u1", "Patients with hemangiosarcoma were studied."),
@@ -147,16 +153,22 @@ def test_parse_llm_json(spark):
 # ------------------------------------------------- connected components / canon
 import pytest
 
+import biocurator_mapper_spark.operators.canonicalize as canonicalize_mod
 
-@pytest.mark.parametrize("strategy", ["driver", "distributed"])
-def test_connected_components_chain_and_star(spark, strategy):
+
+@pytest.mark.parametrize("engine", ["driver", "distributed"])
+def test_connected_components_chain_and_star(spark, engine, monkeypatch):
+    # the star loop serves edge lists past DRIVER_CC_MAX_EDGES: a cap of 0
+    # routes this small graph through it
+    if engine == "distributed":
+        monkeypatch.setattr(canonicalize_mod, "DRIVER_CC_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"),  # chain
          ("hub", "x1"), ("hub", "x2"), ("hub", "x3"),  # star
          ("solo1", "solo2")],
         "src string, dst string",
     )
-    cc = connected_components(edges, strategy=strategy)
+    cc = connected_components(edges)
     comp = {r.node: r.component for r in cc.collect()}
     assert comp["a"] == comp["b"] == comp["c"] == comp["d"] == "a"
     assert comp["hub"] == comp["x1"] == comp["x2"] == comp["x3"] == "hub"
@@ -209,7 +221,7 @@ def test_memo_evicts_stopped_sessions():
         entrymod._MEMO.pop((id(dead), ("x",)), None)
 
 
-def test_connected_components_random_vs_networkx_style(spark):
+def test_connected_components_random_vs_networkx_style(spark, monkeypatch):
     # union-find oracle in plain python
     import random
 
@@ -232,10 +244,8 @@ def test_connected_components_random_vs_networkx_style(spark):
     expected = {n: groups[find(n)] for n in nodes if any(n in e for e in edges)}
 
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.node: r.component
-        for r in connected_components(df, strategy="distributed").collect()
-    }
+    monkeypatch.setattr(canonicalize_mod, "DRIVER_CC_MAX_EDGES", 0)  # star loop
+    got = {r.node: r.component for r in connected_components(df).collect()}
     touched = {n for e in edges for n in e if e[0] != e[1]}
     for n in touched:
         assert got[n] == expected[n], (n, got.get(n), expected[n])
@@ -248,6 +258,10 @@ def test_canonical_mapping_shared_xref(spark):
             ("DOID:1", ["MESH:1", "OMIM:9"]),  # shares MESH:1 → same component
             ("DOID:3", ["ICD:7"]),
             ("DOID:4", []),  # xref-less → maps to itself
+            ("DOID:5", None),  # null xrefs → maps to itself
+            # empty/null xrefs add no edge: a shared "" must not merge these
+            ("DOID:6", [""]),
+            ("DOID:7", ["", None]),
         ],
         "term_id string, cross_references array<string>",
     )
@@ -257,6 +271,9 @@ def test_canonical_mapping_shared_xref(spark):
         "DOID:2": "DOID:1",
         "DOID:3": "DOID:3",
         "DOID:4": "DOID:4",
+        "DOID:5": "DOID:5",
+        "DOID:6": "DOID:6",
+        "DOID:7": "DOID:7",
     }
 
 

@@ -69,6 +69,59 @@ def test_no_mention_pages_produce_no_triples(spark, terms):
     assert build_triples(pages, terms).count() == 0
 
 
+def test_ontology_side_cap_raises(spark, terms, monkeypatch):
+    """The ontology side is prepared on the driver from one bounded collect:
+    past DRIVER_TERMS_MAX, build_triples (collected or caller-supplied term
+    rows), canonical_mapping and mention_candidates each raise a ValueError
+    naming the cap instead of hauling the relation to the driver."""
+    import pytest
+
+    import __spark_entry__ as em
+    from biocurator_mapper_spark.functions.dims import local_dim_df
+    from biocurator_mapper_spark.operators import canonical_mapping, mention_candidates
+    from biocurator_mapper_spark.operators import mentions as M
+
+    pages = pages_dataframe(spark, SURFACES, n_pages=4, seed=5)
+    surface_map = local_dim_df(
+        spark,
+        M.surface_map_rows(terms.collect()),
+        "surface string, term_id string, is_exact boolean",
+    )
+    n_vocab = len(em.VOCAB_TERM_ROWS)
+    monkeypatch.setattr(M, "DRIVER_TERMS_MAX", n_vocab)
+    assert terms.count() > n_vocab and surface_map.count() > n_vocab
+    # at the cap nothing changes: the caller-supplied rows build a plan
+    build_triples(pages, None, term_rows=em.VOCAB_TERM_ROWS)
+
+    cap = f"DRIVER_TERMS_MAX={n_vocab}"
+    with pytest.raises(ValueError, match=cap):
+        build_triples(pages, terms)
+    with pytest.raises(ValueError, match=cap):
+        build_triples(pages, None, term_rows=em.VOCAB_TERM_ROWS + [None])
+    with pytest.raises(ValueError, match=cap):
+        canonical_mapping(terms)
+    docs = pages.select("url", F.col("text").alias("extracted_text"))
+    with pytest.raises(ValueError, match=cap):
+        mention_candidates(docs, surface_map)
+
+
+def test_empty_pipeline_run(spark, terms, tmp_path):
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    pipe = TriplesPipeline(catalog, n_buckets=4)
+    # pages with NO ontology surfaces → zero triples; must not crash
+    pages = spark.createDataFrame(
+        [("u1", None, None, "nothing relevant at all", "en"),
+         ("u2", None, None, "still nothing here", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    out = pipe.run(pages, terms, run_fingerprint="empty1")
+    assert out.count() == 0
+    assert "subj" in out.columns
+    # catalog pointer registered → catalog.read path also tolerable
+    m = catalog.read_log("_metrics").collect()
+    assert m[0].rows_in == 2 and m[0].rows_out == 0
+
+
 def test_pipeline_checkpoint_resume(spark, terms, tmp_path):
     catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
     pipe = TriplesPipeline(catalog, n_buckets=4)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import biocurator_mapper_spark.pipeline.resolve as resolve_mod
 from biocurator_mapper_spark.pipeline.resolve import Resolver
 
 
@@ -34,10 +35,12 @@ def test_resolve_no_surface_still_answers(spark, terms):
     assert len(out["alternatives"]) == 4
 
 
-def test_resolve_distributed_path_parity_and_limit_pushdown(spark, terms):
-    """Past max_driver_terms the Resolver must NOT collect the ontology:
-    candidate generation becomes a Spark job with the top-n limit pushed
-    into the plan (TakeOrderedAndProject — per-task k-heaps, never a full
+def test_resolve_distributed_path_parity_and_limit_pushdown(
+    spark, terms, monkeypatch
+):
+    """Past RESOLVER_DRIVER_TERMS_MAX the Resolver must NOT collect the
+    ontology: candidate generation becomes a Spark job with the top-n limit
+    pushed into the plan (TakeOrderedAndProject — per-task k-heaps, never a full
     score vector driver-side), and the answer must match the dense path."""
     import numpy as np
     from pyspark.sql import functions as F
@@ -61,7 +64,8 @@ def test_resolve_distributed_path_parity_and_limit_pushdown(spark, terms):
     big = terms.select(*cols).unionByName(filler)
     passage = "Intracellular membrane-bounded organelle activity was observed"
     dense = Resolver(big, k=5)  # default cap: everything driver-side
-    dist = Resolver(big, k=5, max_driver_terms=1000)
+    monkeypatch.setattr(resolve_mod, "RESOLVER_DRIVER_TERMS_MAX", 1000)
+    dist = Resolver(big, k=5)
     assert not dense.distributed and dist.distributed
     got_dense, got_dist = dense.resolve(passage), dist.resolve(passage)
     assert got_dist["best_match"] == got_dense["best_match"]
@@ -78,7 +82,7 @@ def test_resolve_distributed_path_parity_and_limit_pushdown(spark, terms):
         assert "TakeOrderedAndProject" in plan, plan[:500]
 
 
-def test_resolve_distributed_with_llm_rerank(spark, terms):
+def test_resolve_distributed_with_llm_rerank(spark, terms, monkeypatch):
     """The LLM rerank layer must work unchanged on the distributed
     candidate path — candidates carry every prompt field (definition,
     synonyms, namespace) through the Spark job."""
@@ -93,10 +97,11 @@ def test_resolve_distributed_with_llm_rerank(spark, terms):
         )
 
     passage = "apoptosis of T cells in culture"
-    dist = Resolver(terms, k=3, chat_provider=chat_pick_other, max_driver_terms=5)
+    monkeypatch.setattr(resolve_mod, "RESOLVER_DRIVER_TERMS_MAX", 5)
+    dist = Resolver(terms, k=3, chat_provider=chat_pick_other)
     assert dist.distributed
     out = dist.resolve(passage)
-    base = Resolver(terms, k=3, max_driver_terms=5).resolve(passage)
+    base = Resolver(terms, k=3).resolve(passage)
     assert out["reason"] == "llm override" and out["confidence"] == 0.9
     assert out["best_match"]["id"] != base["best_match"]["id"]
     assert out["best_match"]["id"] in {a["id"] for a in base["alternatives"]}
