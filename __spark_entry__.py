@@ -39,9 +39,8 @@ from biocurator_mapper_spark.functions.text import (  # noqa: E402
     LANG_STOPWORDS as _LANGS,
 )
 
-# single-slice dimension frames: the default createDataFrame parallelizes
-# tiny local rows into defaultParallelism slices, making every collect /
-# broadcast build over them a 32-Python-task job (see functions.dims)
+# dimension frames as Arrow-backed local relations: no Python-worker job
+# builds their collects or broadcasts (see functions.dims)
 from biocurator_mapper_spark.functions.dims import (  # noqa: E402
     local_dim_df as _local_dim,
 )

@@ -18,7 +18,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.catalog import ParquetCatalog
+from ..sources.catalog import ParquetCatalog, utc_now
 
 OBO_FORMAT_PRED = "http://www.geneontology.org/formats/oboInOwl#hasOBOFormatVersion"
 VERSION_INFO_PRED = "http://www.w3.org/2002/07/owl#versionInfo"
@@ -102,12 +102,10 @@ class OntologyVersionGate:
             return self.catalog.read(self.terms_table), False
         terms = build_fn(obo_df)
         self.catalog.write_replace(terms, self.terms_table)
-        spark = obo_df.sparkSession
-        self.catalog.append(
-            spark.createDataFrame(
-                [(self.name, new_hash)], "ontology string, content_hash string"
-            ).withColumn("stored_ts", F.current_timestamp()),
+        self.catalog.append_rows(
             self.versions_table,
+            [(self.name, new_hash, utc_now())],
+            "ontology string, content_hash string, stored_ts timestamp",
         )
         return self.catalog.read(self.terms_table), True
 

@@ -296,7 +296,7 @@ def canonical_rows(term_rows: list) -> list[tuple[str, str]]:
 
 def canonical_mapping(terms: DataFrame) -> DataFrame:
     """terms(term_id, cross_references) → (term_id, canonical_id) per
-    ``canonical_rows``, as a single-slice local relation. The alias graph
+    ``canonical_rows``, as an Arrow-backed local relation. The alias graph
     of one ontology is dimension-sized: one bounded collect, then the same
     driver union-find ``build_triples`` uses."""
     rows = collect_driver_rows(

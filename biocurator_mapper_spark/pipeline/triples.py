@@ -40,7 +40,7 @@ from ..operators.mentions import (
     collect_driver_rows,
     surface_map_rows,
 )
-from ..sources.catalog import ParquetCatalog
+from ..sources.catalog import ParquetCatalog, utc_now
 
 class RunCancelled(RuntimeError):
     """Raised by ``TriplesPipeline.run`` when ``cancel()`` interrupts it
@@ -49,6 +49,11 @@ class RunCancelled(RuntimeError):
 
 DEFAULT_K = 5  # reference app/config.py:10
 TRIPLE_BUCKETS = 256  # bucket(url) partition transform width
+# the term columns the ontology side reads, collected once per plan build
+TERM_ROW_COLS = (
+    "term_id", "name", "exact_synonyms", "all_synonyms",
+    "cross_references", "searchable_text",
+)
 
 def _driver_side_inputs(
     spark, term_rows: list, need_vecs: bool = True
@@ -65,9 +70,8 @@ def _driver_side_inputs(
     from ..functions.embed import hash_embed_py
 
     smap = surface_map_rows(term_rows)
-    # single-slice dimension frames: the default 32-slice parallelize made
-    # every broadcast-hash build over these a 32-Python-task job (~0.2 s
-    # of constant overhead per build; see functions.dims)
+    # Arrow-backed local relations: no Python-worker job builds these
+    # broadcasts (see functions.dims)
     surface_map = local_dim_df(
         spark, smap, "surface string, term_id string, is_exact boolean"
     )
@@ -363,17 +367,12 @@ def build_triples(
 
     # ontology side: ONE bounded collect of the term rows (raises past
     # DRIVER_TERMS_MAX). A caller that already holds the term rows on the
-    # driver (e.g. a constant vocabulary) passes ``term_rows`` — attribute
-    # access: term_id, name, exact_synonyms, all_synonyms,
-    # cross_references, searchable_text — and skips the collect job
-    # entirely (~0.2 s of pure round-trip per fresh plan build).
+    # driver (``TriplesPipeline.run``, a constant vocabulary) passes
+    # ``term_rows`` — attribute access on the TERM_ROW_COLS — and skips
+    # the collect job entirely.
     if term_rows is None:
         term_rows = collect_driver_rows(
-            terms.select(
-                "term_id", "name", "exact_synonyms", "all_synonyms",
-                "cross_references", "searchable_text",
-            ),
-            "ontology terms",
+            terms.select(*TERM_ROW_COLS), "ontology terms"
         )
     else:
         check_driver_rows(term_rows, "ontology terms")
@@ -617,10 +616,18 @@ class TriplesPipeline:
 
             obs_in = Observation(f"triples_in_{run_id}")
             todo = todo.observe(obs_in, F.count(F.lit(1)).alias("n"))
+            # ONE evaluation of the ontology lineage per run: the embed
+            # cache and build_triples both read the collected rows
+            term_rows = collect_driver_rows(
+                terms.select(*TERM_ROW_COLS), "ontology terms"
+            )
+            term_text = local_dim_df(
+                spark,
+                [(r.term_id, r.searchable_text) for r in term_rows],
+                "term_id string, searchable_text string",
+            )
             term_vecs = embed_with_cache(
-                terms.select("term_id", "searchable_text"),
-                "searchable_text",
-                self.catalog,
+                term_text, "searchable_text", self.catalog
             ).select("term_id", F.col("embedding").alias("term_embedding"))
             triples = build_triples(
                 todo.drop("part_bucket"),
@@ -628,6 +635,7 @@ class TriplesPipeline:
                 k=k,
                 n_buckets=self.n_buckets,
                 term_vecs=term_vecs,
+                term_rows=term_rows,
             )
             triples_schema = triples.schema
             obs_out = Observation(f"triples_out_{run_id}")
@@ -655,30 +663,26 @@ class TriplesPipeline:
 
         self._check_cancelled(run_id)
         elapsed = time.monotonic() - t0
+        # commit logs: driver-written parquet files, no Spark job
+        now = utc_now()
         ckpt_rows = [
-            (run_id, run_fingerprint, "triples", int(b), "committed")
+            (run_id, run_fingerprint, "triples", int(b), "committed", now)
             for b in range(self.n_buckets)
             if b not in set(done)
         ]
         if ckpt_rows:
-            self.catalog.append(
-                spark.createDataFrame(
-                    ckpt_rows,
-                    "run_id string, fingerprint string, stage string, part_bucket int, status string",
-                ).withColumn("committed_ts", F.current_timestamp()),
+            self.catalog.append_rows(
                 "_checkpoints",
+                ckpt_rows,
+                "run_id string, fingerprint string, stage string, "
+                "part_bucket int, status string, committed_ts timestamp",
             )
-        metrics_rows = [
-            (run_id, run_fingerprint, "triples", n_in, n_out, float(elapsed),
-             float(n_in / elapsed) if elapsed > 0 else 0.0)
-        ]
-        self.catalog.append(
-            spark.createDataFrame(
-                metrics_rows,
-                "run_id string, fingerprint string, stage string, rows_in long, "
-                "rows_out long, elapsed_s double, rows_per_s double",
-            ).withColumn("ts", F.current_timestamp()),
+        self.catalog.append_rows(
             "_metrics",
+            [(run_id, run_fingerprint, "triples", n_in, n_out, float(elapsed),
+              float(n_in / elapsed) if elapsed > 0 else 0.0, now)],
+            "run_id string, fingerprint string, stage string, rows_in long, "
+            "rows_out long, elapsed_s double, rows_per_s double, ts timestamp",
         )
         if fp_version is not None and len(set(done)) >= self.n_buckets:
             # full resume: no new snapshot was published — return THIS

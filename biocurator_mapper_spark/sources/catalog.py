@@ -10,11 +10,15 @@ guarantees are provided at the interface level over parquet directories:
   zero-downtime collection pointer swap, ``app/config_updater.py:36-93``);
 - readers resolve the pointer first, so a half-written version is never
   visible (snapshot isolation per table);
-- ``append`` tables (e.g. ``_metrics``/``_checkpoints`` commit logs) add
-  parquet files under one directory — append-only, order-free.
+- append-only logs add parquet files under one ``<table>/log`` directory,
+  order-free. Driver-held rows (the ``_metrics``/``_checkpoints`` commit
+  logs, merge, download and ontology-version history) go through
+  ``append_rows``: one pyarrow-written file per call, renamed into place,
+  no Spark job. ``append`` writes a distributed DataFrame (the embedding
+  cache).
 
 Swapping this class for an Iceberg catalog changes no pipeline code: only
-``write_replace/read/append`` call sites.
+``write_replace/read/append/append_rows`` call sites.
 
 Writer model: ONE writer per table at a time (the reference's
 config-updater model — readers are lock-free against the pointer, writers
@@ -30,8 +34,18 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.dims import arrow_table, struct_schema
+
+
+def utc_now() -> datetime:
+    """The commit timestamp ``append_rows`` callers stamp their rows with."""
+    return datetime.now(timezone.utc)
 
 
 class ParquetCatalog:
@@ -302,13 +316,11 @@ class ParquetCatalog:
         # (n_kept = pre-existing rows carried through the rewritten
         # buckets; rewritten-bucket total = n_kept + n_source). Stats ride
         # the write job's Observation — no extra scan.
-        self.append(
-            self.spark.createDataFrame(
-                [(table, version, n_source, n_kept, len(affected))],
-                "table string, version string, n_source long, n_kept long, "
-                "n_buckets_rewritten long",
-            ).withColumn("ts", F.current_timestamp()),
+        self.append_rows(
             f"_merge_log_{table}",
+            [(table, version, n_source, n_kept, len(affected), utc_now())],
+            "table string, version string, n_source long, n_kept long, "
+            "n_buckets_rewritten long, ts timestamp",
         )
         return version
 
@@ -372,13 +384,39 @@ class ParquetCatalog:
         return removed
 
     # ------------------------------------------------------------ append log
+    def _log_dir(self, table: str) -> str:
+        return os.path.join(self._table_dir(table), "log")
+
     def append(self, df: DataFrame, table: str) -> None:
-        """Append-only commit log (metrics / checkpoints)."""
-        df.write.mode("append").parquet(os.path.join(self._table_dir(table), "log"))
+        """Append a distributed DataFrame to the table's log (one Spark
+        write job)."""
+        df.write.mode("append").parquet(self._log_dir(table))
+
+    def append_rows(self, table: str, rows: list, schema) -> None:
+        """Append driver-held rows (tuples in ``schema`` order; ``schema`` a
+        ``StructType`` or DDL string) to the table's log as ONE parquet file
+        written by pyarrow — no Spark job. The file is written and fsynced
+        under a dot-prefixed name, which Spark's file listing skips, then
+        renamed into place, so a reader sees all of the rows or none.
+        Column types follow the Spark schema (``timestamp`` as
+        ``timestamp[us, UTC]``, ``int`` as int32), so these files and
+        Spark-written ones read back as one relation."""
+        log_dir = self._log_dir(table)
+        os.makedirs(log_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(log_dir, f".{name}.tmp")
+        with open(tmp, "wb") as f:
+            pq.write_table(arrow_table(rows, struct_schema(schema)), f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(log_dir, name))
 
     def read_log(self, table: str) -> DataFrame | None:
-        path = os.path.join(self._table_dir(table), "log")
+        """The table's log, or None when nothing was ever appended."""
+        path = self._log_dir(table)
+        if not os.path.isdir(path):
+            return None
         try:
             return self.spark.read.parquet(path)
-        except Exception:
-            return None
+        except AnalysisException:
+            return None  # no data file yet: no schema to infer

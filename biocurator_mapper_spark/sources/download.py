@@ -25,7 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .catalog import ParquetCatalog
+from .catalog import ParquetCatalog, utc_now
 
 CHUNK_SIZE = 8192
 HISTORY_TABLE = "_download_history"
@@ -77,14 +77,12 @@ def record_download(
     size_bytes: int,
     status: str = "completed",
 ) -> None:
-    spark = catalog.spark
-    row = [(ontology, filename, int(size_bytes), round(size_bytes / 1024 / 1024, 2), status)]
-    catalog.append(
-        spark.createDataFrame(
-            row,
-            "ontology string, filename string, size_bytes long, size_mb double, status string",
-        ).withColumn("ts", F.current_timestamp()),
+    catalog.append_rows(
         HISTORY_TABLE,
+        [(ontology, filename, int(size_bytes),
+          round(size_bytes / 1024 / 1024, 2), status, utc_now())],
+        "ontology string, filename string, size_bytes long, size_mb double, "
+        "status string, ts timestamp",
     )
 
 

@@ -417,3 +417,32 @@ def test_str_array_lit_under_both_parser_settings(spark):
             assert "chr(" not in plan and "concat(" not in plan, plan
     finally:
         spark.conf.set(key, saved)
+
+
+def test_local_dim_df_arrow_round_trip(spark):
+    """Dimension rows cross to the JVM as one Arrow table typed by the Spark
+    schema: values come back exactly (a nullable long keeps all 64 bits,
+    which a pandas float64 column would round) and the relation plans as a
+    LocalRelation, not a Python-RDD scan. Empty rows keep the schema."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from biocurator_mapper_spark.functions.dims import local_dim_df
+
+    ddl = "n long, s string, v array<float>, w array<long>, b boolean"
+    rows = [
+        (None, "İstanbul", [0.5, -1.25], [2**62 + 1, None], None),
+        (2**62 + 1, "Straẞe", None, [], True),
+        (-(2**63), "", [], None, False),
+    ]
+    df = local_dim_df(spark, rows, ddl)
+    assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_dim_df(spark, [], ddl)
+    assert empty.collect() == [] and empty.schema == df.schema
+
+    schema = StructType(
+        [StructField("k", StringType()), StructField("t", LongType())]
+    )
+    typed = local_dim_df(spark, [("a", 2**62 + 1), ("b", None)], schema)
+    assert typed.schema == schema
+    assert [tuple(r) for r in typed.collect()] == [("a", 2**62 + 1), ("b", None)]

@@ -151,6 +151,55 @@ def test_metrics_rows_emitted(spark, terms, tmp_path):
     assert m[0].rows_in == 14  # 10 + 4 edge rows
     assert m[0].rows_per_s > 0
 
+def _sql_executions(spark) -> list[int]:
+    """Ids of the SQL executions in the status store, once the listener
+    bus has delivered every event so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i).executionId() for i in range(execs.size())]
+
+
+def _scan_nodes(spark, since_exec_id: int) -> list[str]:
+    """Names of the scan nodes in the plan graphs of every SQL execution
+    after ``since_exec_id``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    names = []
+    for eid in _sql_executions(spark):
+        if eid > since_exec_id:
+            nodes = store.planGraph(eid).allNodes()
+            names += [nodes.apply(j).name() for j in range(nodes.size())]
+    return [n for n in names if n.startswith("Scan ")]
+
+
+def test_run_scans_ontology_json_once(spark, tmp_path):
+    """The ontology lineage (JSON scan → parse) runs once per run: the embed
+    cache and build_triples share one collect, every dimension side is an
+    Arrow LocalRelation and the commit logs are written without Spark, so
+    no pickled-RDD scan appears either."""
+    import json
+
+    from biocurator_mapper_spark.ontology import nodes_from_obo_graph, parse_terms
+    from biocurator_mapper_spark.sources.obo_json import read_obo_graph
+    from biocurator_mapper_spark.testdata import full_fixture_graph
+
+    onto = tmp_path / "ontology.json"
+    onto.write_text(json.dumps(full_fixture_graph(perf_n=20)))
+    terms = parse_terms(nodes_from_obo_graph(read_obo_graph(spark, str(onto))))
+    pages_dataframe(spark, SURFACES, n_pages=20, seed=5).write.parquet(
+        str(tmp_path / "pages")
+    )
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    since = max(_sql_executions(spark), default=-1)
+    out = TriplesPipeline(catalog, n_buckets=4).run(
+        pages, terms, run_fingerprint="scan1"
+    )
+    scans = _scan_nodes(spark, since)
+    assert sum(n.startswith("Scan json") for n in scans) == 1, scans
+    assert not any(n.startswith("Scan ExistingRDD") for n in scans), scans
+    assert out.count() > 0
+
+
 def test_snapshot_isolation_concurrent_reader(spark, terms, tmp_path):
     """A reader holding the previous snapshot keeps a consistent view while
     a new run publishes: old-or-new, never a mix (Iceberg-pointer semantics

@@ -370,6 +370,54 @@ def test_merge_log_commit_stats(spark, tmp_path):
     assert rewritten_total >= 2  # matched bucket's survivors + the 2 source rows
 
 
+def test_append_rows_shares_a_log_with_spark_appends(spark, tmp_path):
+    """A Spark-written batch (INT96 timestamps) and a pyarrow-written
+    ``append_rows`` batch in one log read back as one relation with
+    Spark's types. A leftover dot-prefixed temp file and a log directory
+    with no data file are invisible to ``read_log``."""
+    from datetime import datetime, timezone
+
+    import pyarrow.parquet as pq
+
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    assert cat.read_log("_checkpoints") is None
+    ddl = "run_id string, part_bucket int, n_rows long"
+    cat.append(
+        spark.createDataFrame([("r1", 0, 5)], ddl).withColumn(
+            "ts", F.current_timestamp()
+        ),
+        "_checkpoints",
+    )
+    log_dir = tmp_path / "wh" / "_checkpoints" / "log"
+    spark_file = next(log_dir.glob("part-*.parquet"))
+    ts_col = pq.ParquetFile(spark_file).schema.column(3)
+    assert ts_col.physical_type == "INT96"
+    ts = datetime(2026, 1, 2, 3, 4, 5, 678901, tzinfo=timezone.utc)
+    cat.append_rows(
+        "_checkpoints", [("r2", 7, 2**40, ts)], ddl + ", ts timestamp"
+    )
+    (log_dir / ".part-leftover.parquet.tmp").write_bytes(b"not parquet")
+
+    log = cat.read_log("_checkpoints")
+    assert log.schema.simpleString() == (
+        "struct<run_id:string,part_bucket:int,n_rows:bigint,ts:timestamp>"
+    )
+    got = {
+        r.run_id: r
+        for r in log.select(
+            "run_id", "part_bucket", "n_rows",
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+        ).collect()
+    }
+    assert sorted(got) == ["r1", "r2"]
+    assert (got["r2"].part_bucket, got["r2"].n_rows) == (7, 2**40)
+    assert got["r2"].ts == "2026-01-02 03:04:05.678901"  # session tz is UTC
+
+    (tmp_path / "wh" / "_empty" / "log").mkdir(parents=True)
+    (tmp_path / "wh" / "_empty" / "log" / "_SUCCESS").touch()
+    assert cat.read_log("_empty") is None
+
+
 def test_merge_snapshot_isolation_for_readers(spark, tmp_path):
     """A reader that resolved the pre-merge snapshot keeps its exact view
     while (and after) a merge commits — old-or-new, never a mix."""
