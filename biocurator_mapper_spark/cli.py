@@ -182,8 +182,11 @@ def cmd_curate(args) -> int:
             .drop("_q", "quality_bucket")
         )
     kept.write.mode("overwrite").parquet(args.out)
+    # count the written files (footers only): kept.count() would re-run
+    # the whole curate → MinHash → cluster chain
     print(json.dumps({"rows_in": docs.count(), "funnel": funnel,
-                      "rows_out": kept.count(), "out": args.out}))
+                      "rows_out": spark.read.parquet(args.out).count(),
+                      "out": args.out}))
     return 0
 
 

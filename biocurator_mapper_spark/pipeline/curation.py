@@ -11,14 +11,16 @@ pipeline every large-scale pretraining corpus goes through:
 4. emit the kept corpus + a per-stage funnel report (rows in/out per gate,
    the reference's filter-rejection tally A4 writ large).
 
-Everything is built-in expressions + hash aggregates: two shuffles total
-(fingerprint dedup, funnel counts), no Python in the hot path, all stages
+Everything is built-in expressions: one scan and one gate evaluation per
+``curate`` evaluation, one shuffle for the fingerprint dedup window (plus
+one for the funnel counts), no Python in the hot path, all stages
 oracle-checkable in SQL.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -143,22 +145,24 @@ def curate(
                 ),
             ).alias("_gate"),
         )
-    # dedup among gate survivors only: representative = min id per fingerprint
-    survivors = gated.where(F.col("_gate").isNull())
-    reps = survivors.groupBy("fingerprint").agg(
-        F.min(id_col).alias("_rep_id")
+    # dedup among gate survivors only: representative = min surviving id
+    # per fingerprint, read off ONE window over the narrow gated rows — a
+    # self-join would scan the docs and run the gate HOFs on both sides.
+    # A NULL fingerprint reads as kept, as a NULL equi-join key would.
+    rep = F.min(F.when(F.col("_gate").isNull(), F.col(id_col))).over(
+        Window.partitionBy("fingerprint")
     )
-    return (
-        gated.join(reps, "fingerprint", "left")
-        .select(
-            id_col,
-            "fingerprint",
-            F.coalesce(
-                F.col("_gate"),
-                F.when(F.col(id_col) != F.col("_rep_id"), F.lit("duplicate")),
-                F.lit("kept"),
-            ).alias("curation_stage"),
-        )
+    return gated.select(
+        id_col,
+        "fingerprint",
+        F.coalesce(
+            F.col("_gate"),
+            F.when(
+                F.col("fingerprint").isNotNull() & (F.col(id_col) != rep),
+                F.lit("duplicate"),
+            ),
+            F.lit("kept"),
+        ).alias("curation_stage"),
     )
 
 

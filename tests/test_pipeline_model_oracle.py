@@ -272,3 +272,99 @@ def test_curation_lm_gate(spark):
     }
     assert got[1] == "kept"
     assert got[2] == "low_lm_score"
+
+
+def test_curate_stages_match_python_reference(spark):
+    """curate's stages equal a plain-Python funnel on planted docs: the
+    planted first failed gate, else 'duplicate' unless the doc is the
+    min-id gate survivor of its normalized-fingerprint group (a NULL
+    fingerprint is never a duplicate). Covers a group whose min-id member
+    fails a gate (the representative is the next survivor), upper-cased
+    exact duplicates, a NULL-text doc, a group of copies, and the
+    min_lm_score gate, which removes docs from the survivors before dedup."""
+    import hashlib
+    import re
+
+    from biocurator_mapper_spark.operators.lm_quality import train_char_lm
+    from biocurator_mapper_spark.pipeline.curation import curate
+
+    prose = [
+        "the quick brown fox jumps over a lazy dog and then walks into the "
+        "house where it sits by the fire for a while resting its paws",
+        "a small boat drifts along the quiet river while the old fisherman "
+        "watches the clouds and waits for the evening tide to turn again",
+        "in the morning the market fills with traders who sell bread and "
+        "fruit and fish to the people of the town that sits by the sea",
+    ]
+    # passes every heuristic gate, fails a prose-trained char LM
+    noise = "the " + " ".join(f"xq{i}zvkj qwz{i}jxv" for i in range(12))
+    noise += " and some xkcd zq"
+    # (doc_id, text, lang, planted heuristic gate)
+    planted = [
+        (1, prose[0], "de", "wrong_language"),  # min id of its group, gated
+        (4, prose[0], "en", None),  # → the group's representative
+        (7, prose[0].upper(), "en", None),  # upper-cased exact duplicate
+        (9, prose[0] + "!!", "en", None),  # same normalized text
+        (2, prose[1], "en", None),  # a group of copies: 2 kept, rest dups
+        (3, prose[1], "en", None),
+        (5, prose[1], "en", None),
+        (6, prose[2], "en", None),  # a singleton
+        (8, prose[2][:60], "en", "too_short"),
+        (10, None, "en", "too_short"),  # NULL text fails, never dedups
+        (11, prose[2], None, "wrong_language"),  # NULL lang reads 'und'
+        (12, noise, "en", None),
+        (13, noise, "en", None),
+    ]
+    docs = spark.createDataFrame(
+        [(i, t, lang) for i, t, lang, _ in planted],
+        "doc_id long, text string, lang string",
+    )
+
+    def fingerprint(text):
+        if text is None:
+            return None
+        norm = re.sub(r"[^a-z0-9]+", " ", text.lower()).strip(" ")
+        return hashlib.md5(norm.encode()).hexdigest()
+
+    def reference(gate_of):
+        rep = {}
+        for i, text, _, _ in planted:
+            if gate_of[i] is None:
+                fp = fingerprint(text)
+                rep[fp] = min(rep.get(fp, i), i)
+        want = {}
+        for i, text, _, _ in planted:
+            fp = fingerprint(text)
+            if gate_of[i] is not None:
+                want[i] = gate_of[i]
+            else:
+                want[i] = "duplicate" if fp is not None and rep[fp] != i else "kept"
+        return want
+
+    def stages(df):
+        rows = df.collect()
+        assert {r.doc_id: r.fingerprint for r in rows} == {
+            i: fingerprint(t) for i, t, _, _ in planted
+        }
+        return {r.doc_id: r.curation_stage for r in rows}
+
+    heuristic = {i: g for i, _, _, g in planted}
+    want = reference(heuristic)
+    assert [want[i] for i in (1, 4, 7, 9, 2, 3, 5, 12, 13)] == [
+        "wrong_language", "kept", "duplicate", "duplicate",
+        "kept", "duplicate", "duplicate", "kept", "duplicate",
+    ]
+    assert stages(curate(docs)) == want
+
+    model = train_char_lm(
+        spark.createDataFrame(
+            [(i, p) for i in range(50) for p in prose], "doc_id long, text string"
+        ),
+        "text",
+    )
+    with_lm = {
+        i: g or ("low_lm_score" if t == noise else None) for i, t, _, g in planted
+    }
+    want_lm = reference(with_lm)
+    assert want_lm[12] == want_lm[13] == "low_lm_score"
+    assert stages(curate(docs, min_lm_score=0.2, lm_model=model)) == want_lm

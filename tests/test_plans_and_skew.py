@@ -229,3 +229,68 @@ def test_kg_triples_plan_shape_pinned(spark, terms):
     ]
     assert len(hash_shuffles) == 1, hash_shuffles
     assert "url" in hash_shuffles[0]  # the one wide exchange keys on url
+
+
+
+def test_curate_plan_scans_docs_once(spark):
+    """One curate evaluation reads the docs once and runs the gate chain
+    once: its final executed plan has ONE parquet scan and no broadcast
+    (a gated ⋈ reps self-join scans and gates on both sides)."""
+    from biocurator_mapper_spark.pipeline.curation import curate
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    staged = curate(docs)
+    staged.collect()
+    plan = (
+        staged._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert plan.count("FileScan parquet") == 1
+    assert "BroadcastExchange" not in plan
+
+
+def test_partition_probe_on_curated_frame_launches_no_job(spark):
+    """Probing a curated frame's partition count reads the planned plan:
+    ``df.rdd.getNumPartitions()`` EXECUTES the shuffle and broadcast
+    stages below the root under AQE. Same answer, zero jobs."""
+    from pyspark.sql import functions as F
+
+    from biocurator_mapper_spark.functions.partitions import (
+        estimated_source_partitions,
+    )
+    from biocurator_mapper_spark.pipeline.curation import curate
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs_so_far():
+        sc.listenerBus().waitUntilEmpty()
+        seq = sc.statusStore().jobsList(None)
+        return seq.apply(0).jobId() + 1 if seq.size() else 0
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    kept_ids = (
+        curate(docs).where(F.col("curation_stage") == "kept").select("doc_id")
+    )
+    kept = docs.join(kept_ids, "doc_id", "left_semi")
+    j0 = jobs_so_far()
+    n = estimated_source_partitions(kept)
+    assert jobs_so_far() == j0, "the probe must plan, not execute"
+    assert n == kept.rdd.getNumPartitions()
+    assert jobs_so_far() > j0  # the counter does see the RDD probe's jobs
+
+
+def test_partition_probe_agrees_with_rdd_probe_off_the_curate_path(spark):
+    """A union (two children, no declared partitioning: the plan walk gives
+    up and the RDD probe answers) and a local relation, alone and joined
+    to a file scan (the walk answers), all get the RDD probe's count."""
+    from biocurator_mapper_spark.functions.partitions import (
+        estimated_source_partitions,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    both = docs.union(docs.where(F.col("doc_id") % 2 == 0))
+    local = spark.createDataFrame([(i,) for i in range(10)], "x long")
+    for df in (both, local, local.join(docs, F.col("x") == F.col("doc_id"))):
+        assert estimated_source_partitions(df) == df.rdd.getNumPartitions()
