@@ -436,6 +436,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     from biocurator_mapper_spark.operators.dedup import (
         exact_dedup,
+        fingerprint_dedup,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
         simhash_near_dup_pairs,
@@ -806,11 +807,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def dedup_fingerprint(spark, sf_dir):
-        d = _docs(spark, sf_dir)
-        return d.groupBy(doc_fingerprint(F.col("text")).alias("fingerprint")).agg(
-            F.min("doc_id").alias("representative_id"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
+        return fingerprint_dedup(_docs(spark, sf_dir), "doc_id", "text")
 
     def dedup_ngram_jaccard(spark, sf_dir):
         return ngram_jaccard_pairs(
@@ -1835,59 +1832,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #      always covers all of them — coverage never goes >2 rounds stale),
     #   3. the evergreens (green last round) in stable order.
     return {
-        # --- flagship + reshaped (r6 err -> scalarized) + new this round -
+        # --- flagship -------------------------------------------------
         "kg_triples": kg_triples,
-        "text_bpe_ids": text_bpe_ids,
-        "pack_materialize_ids": pack_materialize_ids,
-        "url_registrable_psl": url_registrable_psl,
-        "mix_epoch_plan": mix_epoch_plan,
-        "dedup_clusters_best": dedup_clusters_best,
-        "sample_ccnet_buckets": sample_ccnet_buckets,
-        "kg_pagerank": kg_pagerank,
-        "url_blocklist_filter": url_blocklist_filter,
-        "url_snapshot_diff": url_snapshot_diff,
-        "sim_ann_q8_topk": sim_ann_q8_topk,
-        "text_bpe_roundtrip": text_bpe_roundtrip,
-        # --- no driver row in r6 (r5-green; r6 ∪ r7 must cover all) ------
-        "sim_ann_lsh_topk": sim_ann_lsh_topk,
-        "sim_ann_ivf_topk": sim_ann_ivf_topk,
-        "text_simhash": text_simhash,
-        "text_token_count": text_token_count,
-        "lex_bm25_topk": lex_bm25_topk,
-        "sample_stratified": sample_stratified,
-        "sample_capped": sample_capped,
-        "text_pii_scrub": text_pii_scrub,
-        "text_repetition": text_repetition,
-        "text_bpe_token_count": text_bpe_token_count,
-        "events_rollup_report": events_rollup_report,
-        "skew_salted_join": skew_salted_join,
-        "text_quality": text_quality,
-        "kg_exact_winner": kg_exact_winner,
-        "kg_co_mentions": kg_co_mentions,
-        "kg_exact_degree": kg_exact_degree,
-        "dedup_decontaminate_exact": dedup_decontaminate_exact,
-        "emb_dedup_clusters": emb_dedup_clusters,
-        "text_lm_score": text_lm_score,
-        "j7_canonical_mapping": j7_canonical_mapping,
-        "kg_mention_recall": kg_mention_recall,
-        "text_lang_id": text_lang_id,
-        "text_fingerprint": text_fingerprint,
-        "text_dup_ngrams": text_dup_ngrams,
-        "text_chunks": text_chunks,
-        "catalog_merge_upsert": catalog_merge_upsert,
-        "p1_parse_terms": p1_parse_terms,
-        "p2_curie_normalize": p2_curie_normalize,
-        "p7_searchable_text": p7_searchable_text,
-        "p8_searchable_config": p8_searchable_config,
-        "emb_cosine_pairs_exact": emb_cosine_pairs_exact,
-        "p9_truncate_text": p9_truncate_text,
-        "p13_content_hash": p13_content_hash,
-        "f2_quality_filter": f2_quality_filter,
-        "w2_keep_last_n": w2_keep_last_n,
-        "w3_latest_record": w3_latest_record,
-        # --- evergreens (r6 driver-green), perf-fixed families first -----
-        "dedup_decontaminate_bloom": dedup_decontaminate_bloom,
-        "dedup_cross_pairs": dedup_cross_pairs,
+        # --- no snapshot row in r8 (r8 ∪ r9 must cover all) -----------
         "dedup_decontaminate": dedup_decontaminate,
         "dedup_substring_candidates": dedup_substring_candidates,
         "dedup_substring_spans": dedup_substring_spans,
@@ -1933,6 +1880,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_contamination_report": dedup_contamination_report,
         "sim_ann_ivf_indexed": sim_ann_ivf_indexed,
         "dedup_simhash": dedup_simhash,
+        # --- evergreens (green in r8), in their r8 order ---------------
+        "text_bpe_ids": text_bpe_ids,
+        "pack_materialize_ids": pack_materialize_ids,
+        "url_registrable_psl": url_registrable_psl,
+        "mix_epoch_plan": mix_epoch_plan,
+        "dedup_clusters_best": dedup_clusters_best,
+        "sample_ccnet_buckets": sample_ccnet_buckets,
+        "kg_pagerank": kg_pagerank,
+        "url_blocklist_filter": url_blocklist_filter,
+        "url_snapshot_diff": url_snapshot_diff,
+        "sim_ann_q8_topk": sim_ann_q8_topk,
+        "text_bpe_roundtrip": text_bpe_roundtrip,
+        "sim_ann_lsh_topk": sim_ann_lsh_topk,
+        "sim_ann_ivf_topk": sim_ann_ivf_topk,
+        "text_simhash": text_simhash,
+        "text_token_count": text_token_count,
+        "lex_bm25_topk": lex_bm25_topk,
+        "sample_stratified": sample_stratified,
+        "sample_capped": sample_capped,
+        "text_pii_scrub": text_pii_scrub,
+        "text_repetition": text_repetition,
+        "text_bpe_token_count": text_bpe_token_count,
+        "events_rollup_report": events_rollup_report,
+        "skew_salted_join": skew_salted_join,
+        "text_quality": text_quality,
+        "kg_exact_winner": kg_exact_winner,
+        "kg_co_mentions": kg_co_mentions,
+        "kg_exact_degree": kg_exact_degree,
+        "dedup_decontaminate_exact": dedup_decontaminate_exact,
+        "emb_dedup_clusters": emb_dedup_clusters,
+        "text_lm_score": text_lm_score,
+        "j7_canonical_mapping": j7_canonical_mapping,
+        "kg_mention_recall": kg_mention_recall,
+        "text_lang_id": text_lang_id,
+        "text_fingerprint": text_fingerprint,
+        "text_dup_ngrams": text_dup_ngrams,
+        "text_chunks": text_chunks,
+        "catalog_merge_upsert": catalog_merge_upsert,
+        "p1_parse_terms": p1_parse_terms,
+        "p2_curie_normalize": p2_curie_normalize,
+        "p7_searchable_text": p7_searchable_text,
+        "p8_searchable_config": p8_searchable_config,
+        "emb_cosine_pairs_exact": emb_cosine_pairs_exact,
+        "p9_truncate_text": p9_truncate_text,
+        "p13_content_hash": p13_content_hash,
+        "f2_quality_filter": f2_quality_filter,
+        "w2_keep_last_n": w2_keep_last_n,
+        "w3_latest_record": w3_latest_record,
+        "dedup_decontaminate_bloom": dedup_decontaminate_bloom,
+        "dedup_cross_pairs": dedup_cross_pairs,
     }
 
 

@@ -161,13 +161,9 @@ def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup on the normalized-content fingerprint."""
     from ..functions.text import doc_fingerprint
 
-    return (
-        df.withColumn("fingerprint", doc_fingerprint(F.col(text_col)))
-        .groupBy("fingerprint")
-        .agg(
-            F.min(id_col).alias("representative_id"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
+    return df.groupBy(doc_fingerprint(F.col(text_col)).alias("fingerprint")).agg(
+        F.min(id_col).alias("representative_id"),
+        F.count(F.lit(1)).alias("dup_count"),
     )
 
 
@@ -184,7 +180,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    size_prefilter: bool = True,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with shingle-set Jaccard ≥ threshold.
 
@@ -197,17 +192,15 @@ def ngram_jaccard_pairs(
     map-side partial combine. Prefer ``minhash_lsh_pairs`` when the corpus
     is large enough that even capped exact intersection counting is wide.
 
-    ``size_prefilter``: Jaccard ≥ t needs inter/union ≥ t, and since
+    Size prefilter: Jaccard ≥ t needs inter/union ≥ t, and since
     inter ≤ min(|A|,|B|) and union ≥ max(|A|,|B|), min/max ≥ t is a
     NECESSARY condition — so per-doc sizes broadcast onto both sides of the
     shingle self-join let mismatched-size pairs die BEFORE the intersection
     aggregate (the plan's one wide shuffle). The pruning is conservative
     (t is a representable double and x ≥ t ⟹ fl(x) ≥ t, so no qualifying
-    pair is dropped); results are identical with it on or off (pinned in
-    tests). The broadcast side is one (id, size) long-pair per doc — fine
-    into the tens of millions of docs; past that pass False (the plan
-    reverts to post-aggregate filtering) or use ``minhash_lsh_pairs``,
-    which is the intended tier at that scale anyway.
+    pair is dropped). The broadcast side is one (id, size) long-pair per
+    doc — fine into the tens of millions of docs; past that,
+    ``minhash_lsh_pairs`` is the intended tier.
     """
     # Hashed shingle rows (_id, h): the 60-bit integer hash replaces the
     # shingle string in every downstream shuffle/join — the self-join key,
@@ -229,36 +222,28 @@ def ngram_jaccard_pairs(
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
     sizes_a = sizes.withColumnRenamed("_id", "id_a").withColumnRenamed("_sz", "_sza")
     sizes_b = sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("_sz", "_szb")
-    a = sh.withColumnRenamed("_id", "id_a")
-    b = sh.withColumnRenamed("_id", "id_b")
-    if size_prefilter:
-        # sizes ride along on the self-join inputs (broadcast hash probes,
-        # no extra shuffle) so the ratio test prunes pre-aggregate rows
-        a = a.join(F.broadcast(sizes_a), "id_a")
-        b = b.join(F.broadcast(sizes_b), "id_b")
-        pair_cond = (F.col("id_a") < F.col("id_b")) & (
-            F.least("_sza", "_szb").cast("double")
-            / F.greatest("_sza", "_szb").cast("double")
-            >= F.lit(float(threshold))
-        )
-    else:
-        pair_cond = F.col("id_a") < F.col("id_b")
+    # sizes ride along on the self-join inputs (broadcast hash probes, no
+    # extra shuffle) so the ratio test prunes pre-aggregate rows
+    a = sh.withColumnRenamed("_id", "id_a").join(F.broadcast(sizes_a), "id_a")
+    b = sh.withColumnRenamed("_id", "id_b").join(F.broadcast(sizes_b), "id_b")
     inter = (
         a.join(b, "h")
-        .where(pair_cond)
+        .where(
+            (F.col("id_a") < F.col("id_b"))
+            & (
+                F.least("_sza", "_szb").cast("double")
+                / F.greatest("_sza", "_szb").cast("double")
+                >= F.lit(float(threshold))
+            )
+        )
         .groupBy("id_a", "id_b")
         .agg(
             F.count(F.lit(1)).alias("_inter"),
-            *(
-                [F.first("_sza").alias("_sza"), F.first("_szb").alias("_szb")]
-                if size_prefilter
-                else []
-            ),
+            F.first("_sza").alias("_sza"),
+            F.first("_szb").alias("_szb"),
         )
     )
-    if not size_prefilter:
-        inter = inter.join(sizes_a, "id_a").join(sizes_b, "id_b")
-    out = (
+    return (
         inter.withColumn(
             "jaccard",
             F.col("_inter")
@@ -267,7 +252,6 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 # ------------------------------------------------------------------ MinHash
@@ -312,20 +296,7 @@ def minhash_lsh_pairs(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-    sa = sets.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
-    sb = sets.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    union = F.size("_sha") + F.size("_shb") - inter
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0)),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verified(cands, sets, sets, "id_a", "id_b", threshold)
 
 
 def cross_minhash_pairs_flagged(
@@ -365,19 +336,8 @@ def cross_minhash_pairs_flagged(
         .select(F.col("_id").alias("corpus_id"), F.col("_bid").alias("benchmark_id"))
         .distinct()
     )
-    sa = sets.where(~bm).select(F.col("_id").alias("corpus_id"), F.col("_sh").alias("_sha"))
-    sb = sets.where(bm).select(F.col("_id").alias("benchmark_id"), F.col("_sh").alias("_shb"))
-    inter = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    union = F.size("_sha") + F.size("_shb") - inter
-    return (
-        cands.join(sa, "corpus_id")
-        .join(sb, "benchmark_id")
-        .withColumn(
-            "jaccard",
-            F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0)),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("corpus_id", "benchmark_id", "jaccard")
+    return _jaccard_verified(
+        cands, sets.where(~bm), sets.where(bm), "corpus_id", "benchmark_id", threshold
     )
 
 
@@ -411,16 +371,12 @@ def _band_key_cols(num_hashes: int, bands: int) -> list[Column]:
     ]
 
 
-def _banded_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
+def _signatures(
+    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int
 ) -> tuple[DataFrame, DataFrame]:
-    """(banded(_id, band_no, band_val), sets(_id, _sh)) for one corpus —
-    the shared explode→hash-agg signature path of the LSH family."""
+    """(sigs(_id, mh_0..), sets(_id, _sh)) for one corpus — the shared
+    explode→hash-agg signature path of the LSH family, in flight and
+    stored alike."""
     # (_id, h) hashed shingle rows — ONE md5 per shingle; the 16 signature
     # minima and the exact-verify sets are both integer aggregates over
     # these rows (the previous per-seed-md5 scheme paid 16 md5s/shingle
@@ -432,6 +388,22 @@ def _banded_signatures(
     sigs = exploded.select("_id", hm).groupBy("_id").agg(
         *_minhash_sig_aggs(num_hashes)
     )
+    # exact-verify sets carry the full 60-bit hashes (31-bit minima would
+    # start colliding at web-scale set sizes)
+    sets = exploded.groupBy("_id").agg(F.collect_list("h").alias("_sh"))
+    return sigs, sets
+
+
+def _banded_signatures(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+) -> tuple[DataFrame, DataFrame]:
+    """(banded(_id, band_no, band_val), sets(_id, _sh)) for one corpus."""
+    sigs, sets = _signatures(df, id_col, text_col, n, num_hashes)
     # band key: plain base-10 concat of the band's minima (both engines
     # render integers identically; no md5 compression needed)
     banded = sigs.select("_id", *_band_key_cols(num_hashes, bands)).select(
@@ -445,10 +417,34 @@ def _banded_signatures(
             )
         ).alias("band"),
     ).select("_id", F.col("band.band_no"), F.col("band.band_val"))
-    # exact-verify sets carry the full 60-bit hashes (31-bit minima would
-    # start colliding at web-scale set sizes)
-    sets = exploded.groupBy("_id").agg(F.collect_list("h").alias("_sh"))
     return banded, sets
+
+
+def _jaccard_verified(
+    cands: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    id_a: str,
+    id_b: str,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) — the LSH family's one verify step: candidate
+    pairs joined to both docs' exact hash sets (``sets_*`` are (_id, _sh)
+    relations), kept at Jaccard ≥ threshold."""
+    sa = sets_a.select(F.col("_id").alias(id_a), F.col("_sh").alias("_sha"))
+    sb = sets_b.select(F.col("_id").alias(id_b), F.col("_sh").alias("_shb"))
+    inter = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
+    union = F.size("_sha") + F.size("_shb") - inter
+    return (
+        cands.join(sa, id_a)
+        .join(sb, id_b)
+        .withColumn(
+            "jaccard",
+            F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0)),
+        )
+        .where(F.col("jaccard") >= F.lit(float(threshold)))
+        .select(id_a, id_b, "jaccard")
+    )
 
 
 def cross_minhash_pairs(
@@ -474,18 +470,7 @@ def cross_minhash_pairs(
         .select(F.col("_id").alias("corpus_id"), F.col("_bid").alias("benchmark_id"))
         .distinct()
     )
-    inter = F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-    union = F.size("_sha") + F.size("_shb") - inter
-    return (
-        cands.join(sa.select(F.col("_id").alias("corpus_id"), F.col("_sh").alias("_sha")), "corpus_id")
-        .join(sb.select(F.col("_id").alias("benchmark_id"), F.col("_sh").alias("_shb")), "benchmark_id")
-        .withColumn(
-            "jaccard",
-            F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0)),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("corpus_id", "benchmark_id", "jaccard")
-    )
+    return _jaccard_verified(cands, sa, sb, "corpus_id", "benchmark_id", threshold)
 
 
 def decontaminate(
@@ -827,16 +812,11 @@ def signature_state(
     corpus (e.g. ``ParquetCatalog.merge_upsert`` keyed on the id) so later
     increments dedup against the store WITHOUT re-hashing history.
     Identical seeds/keys to ``minhash_lsh_pairs`` BY CONSTRUCTION — the
-    signature aggregate and band layout come from the same
-    ``_minhash_sig_aggs`` / ``_band_key_cols`` helpers the in-flight path
+    signatures and hash sets come from the same ``_signatures`` builder
+    and the band layout from the same ``_band_key_cols`` the in-flight path
     uses, so stored and fresh signatures can never drift."""
-    exploded = _hashed_shingle_rows(df, id_col, text_col, n)
-    hm = (F.col("h") % MINHASH_MOD).alias("hm")
-    sigs = exploded.select("_id", hm).groupBy("_id").agg(
-        *_minhash_sig_aggs(num_hashes)
-    )
+    sigs, sets = _signatures(df, id_col, text_col, n, num_hashes)
     band_arr = F.array(*_band_key_cols(num_hashes, bands))
-    sets = exploded.groupBy("_id").agg(F.collect_list("h").alias("_sh"))
     return (
         sigs.select("_id", band_arr.alias("_bands"))
         .join(sets, "_id")
@@ -889,21 +869,8 @@ def incremental_dedup(
 
     nb = _explode_bands(new_state, "_nid")
     ob = _explode_bands(state, "_oid")
-    ns = new_state.select(F.col(id_col).alias("_nid"), F.col("_sh").alias("_shn"))
-    os_ = state.select(F.col(id_col).alias("_oid"), F.col("_sh").alias("_sho"))
-
-    def _verified(cands: DataFrame, other_sets: DataFrame, other_id: str, other_sh: str) -> DataFrame:
-        inter = F.size(F.array_intersect(F.col("_shn"), F.col(other_sh)))
-        union = F.size("_shn") + F.size(other_sh) - inter
-        return (
-            cands.join(ns, "_nid")
-            .join(other_sets, other_id)
-            .where(
-                F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
-                >= F.lit(float(threshold))
-            )
-            .select("_nid")
-        )
+    ns = new_state.select(F.col(id_col).alias("_id"), "_sh")
+    os_ = state.select(F.col(id_col).alias("_id"), "_sh")
 
     cross = (
         nb.join(ob, ["band_no", "band_val"])
@@ -922,10 +889,12 @@ def incremental_dedup(
         .select("_nid", "_nid2")
         .distinct()
     )
-    ns2 = ns.select(F.col("_nid").alias("_nid2"), F.col("_shn").alias("_shn2"))
     dropped = (
-        _verified(cross, os_, "_oid", "_sho")
-        .union(_verified(within, ns2, "_nid2", "_shn2"))
+        _jaccard_verified(cross, ns, os_, "_nid", "_oid", threshold)
+        .select("_nid")
+        .union(
+            _jaccard_verified(within, ns, ns, "_nid", "_nid2", threshold).select("_nid")
+        )
         .distinct()
         .select(F.col("_nid").alias(id_col))
     )
@@ -939,8 +908,8 @@ def incremental_dedup(
 # The winnowing tier's k-gram hash: a DOUBLE 31-bit polynomial hash
 # combined into one < 2⁶² long (h₁·2³¹ + h₂, each hᵢ = foldₗ₍ᵣ
 # (acc·Bᵢ + codepoint) mod Mᵢ starting from 0). Every fold step keeps
-# acc·B + c < 2³⁹, so signed 64-bit arithmetic is exact in Spark
-# expressions, DuckDB SQL, and numpy alike — and unlike the md5-per-
+# acc·B + c < 2³⁹, so signed 64-bit arithmetic is exact in numpy and in
+# the contract's DuckDB oracle SQL alike — and unlike the md5-per-
 # position scheme it vectorizes: the Arrow kernel computes all positions
 # with k shifted multiply-adds over the codepoint array instead of one
 # Python-level hashlib call per character (the suite's former cost
@@ -952,69 +921,6 @@ WINNOW_B2, WINNOW_M2 = 137, 2_147_483_629
 _WINNOW_COMBINE = 2_147_483_648  # 2³¹
 
 
-def winnow_anchors_expr(text: Column, k: int = 20, w: int = 30) -> Column:
-    """Winnowed fingerprint anchors of the normalized text — the MOSS /
-    exact-substring-dedup scheme: hash every character ``k``-gram, then in
-    every window of ``w`` consecutive k-gram hashes keep the minimum;
-    distinct kept hashes are the document's anchors.
-
-    GUARANTEE (Schleimer et al., SIGMOD'03): two documents sharing any
-    normalized substring of length ≥ w + k − 1 share at least one anchor
-    VALUE — so anchor-bucket collisions are a complete candidate generator
-    for exact repeated spans of that length, the tier word-shingle MinHash
-    cannot see (it detects whole-document similarity, not a long common
-    run inside otherwise-different docs).
-
-    Expression shape: one normalize, one k-gram polynomial-hash array
-    (O(k) fold per position, bound once via let_expr), one windowed-min
-    pass (slice+array_min per window — O(n·w) expression work, fine at
-    contract scale and ORACLE-REPLICABLE in SQL; the production path is
-    :func:`winnow_anchor_rows_arrow`'s vectorized numpy kernel, pinned
-    value-identical in tests). Docs shorter than k chars yield no anchors;
-    docs with < w k-grams yield one anchor (min of all their hashes)."""
-    from ..functions.exprs import let_expr
-
-    def _poly_hash(s: Column, i: Column) -> Column:
-        def fold(b: int, mod: int) -> Column:
-            return F.aggregate(
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, j: (acc * F.lit(b) + F.ascii(s.substr(i + j, F.lit(1))))
-                % F.lit(mod),
-            )
-
-        return fold(WINNOW_B1, WINNOW_M1) * F.lit(_WINNOW_COMBINE) + fold(
-            WINNOW_B2, WINNOW_M2
-        )
-
-    def _with_s(s: Column) -> Column:
-        n = F.length(s)
-        m = n - F.lit(k - 1)  # k-gram count
-
-        def _with_hashes(hs: Column) -> Column:
-            nh = F.size(hs)
-            windows = F.transform(
-                F.sequence(F.lit(1), nh - F.lit(w - 1)),
-                lambda j: F.array_min(F.slice(hs, j, w)),
-            )
-            return F.when(nh >= w, F.array_distinct(windows)).otherwise(
-                F.when(
-                    nh >= 1, F.array(F.array_min(hs))
-                ).otherwise(F.array().cast("array<long>"))
-            )
-
-        hashes = F.transform(
-            F.sequence(F.lit(1), F.greatest(m, F.lit(0))),
-            lambda i: _poly_hash(s, i),
-        )
-        return F.when(m >= 1, let_expr(hashes, _with_hashes)).otherwise(
-            F.array().cast("array<long>")
-        )
-
-    s = F.trim(F.regexp_replace(F.lower(F.coalesce(text, F.lit(""))), "[^a-z0-9]+", " "))
-    return let_expr(s, _with_s)
-
-
 def substring_dup_candidates(
     df: DataFrame,
     id_col: str,
@@ -1022,7 +928,6 @@ def substring_dup_candidates(
     k: int = 20,
     w: int = 30,
     max_anchor_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, n_shared_anchors) — pairs of documents sharing ≥ 1
     winnowed anchor, i.e. the COMPLETE candidate set for exact shared
@@ -1031,24 +936,15 @@ def substring_dup_candidates(
     extracting the actual shared spans — is per-pair work downstream;
     this relation is the scale-critical part.
 
-    ``use_arrow`` (default) computes anchors in one Arrow-batched stage
-    with an O(n) rolling deque; False takes the pure-expression form
-    (O(n·w) slice-mins — the SQL-oracle-shaped twin, value-identical,
-    pinned in tests). Same safety valves as the shingle family: hub
-    anchors past ``max_anchor_df`` are dropped (a site-wide footer would
-    otherwise contribute O(df²) pairs), and the anchor rows repartition
-    when the source is under-split."""
+    Anchors come from one Arrow-batched stage
+    (:func:`winnow_anchor_rows_arrow`, linear per char). Same safety
+    valves as the shingle family: hub anchors past ``max_anchor_df`` are
+    dropped (a site-wide footer would otherwise contribute O(df²) pairs),
+    and the anchor rows repartition when the source is under-split."""
     from ..functions.partitions import estimated_source_partitions
 
-    spark = df.sparkSession
-    if use_arrow:
-        rows = winnow_anchor_rows_arrow(df, id_col, text_col, k, w)
-    else:
-        rows = df.select(
-            F.col(id_col).alias("_id"),
-            F.explode_outer(winnow_anchors_expr(F.col(text_col), k, w)).alias("a"),
-        ).where(F.col("a").isNotNull())
-    default_p = spark.sparkContext.defaultParallelism
+    rows = winnow_anchor_rows_arrow(df, id_col, text_col, k, w)
+    default_p = df.sparkSession.sparkContext.defaultParallelism
     if estimated_source_partitions(df) < max(default_p // 2, 1):
         rows = rows.repartition(default_p)
     if max_anchor_df is not None:
@@ -1115,39 +1011,59 @@ def _sliding_min_np(a, w: int):
     return np.minimum(suff[: n - w + 1], pref[w - 1 : n])
 
 
-def winnow_anchors_py(s: str, k: int = 20, w: int = 30) -> list[int]:
-    """Vectorized twin of :func:`winnow_anchors_expr` over an ALREADY
-    normalized string: same double-polynomial k-gram hashes, same windowed
-    minima — all in numpy (hash array via k shifted multiply-adds, rolling
-    min via the block accumulate trick), no per-character Python work.
-    Returns the distinct anchor SET (sorted); the implementations are
-    pinned value-equal in tests."""
+def _norm_codes_np(s: str):
+    """Codepoint array of an already-normalized string (ASCII fast path,
+    exact codepoints otherwise — matching Spark/DuckDB ``ascii()``)."""
     import numpy as np
 
-    n = len(s)
-    m = n - (k - 1)
-    if m < 1:
-        return []
     raw = s.encode()
-    if len(raw) == n:  # pure-ASCII fast path (normalized text always is)
-        codes = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-    else:  # arbitrary codepoints, matching Spark/DuckDB ascii()
-        codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(
-            np.int64
-        )
-    hashes = _winnow_kgram_hashes_np(codes, k)
+    if len(raw) == len(s):
+        return np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+
+
+def _kgram_hashes_and_anchors(s: str, k: int, w: int):
+    """(k-gram hash array, distinct sorted anchor values) of an ALREADY
+    normalized string, or None when it is shorter than k chars. Anchors
+    are the minima of every window of ``w`` consecutive hashes; a string
+    with fewer than ``w`` k-grams has one anchor, the min of all its
+    hashes."""
+    import numpy as np
+
+    m = len(s) - (k - 1)
+    if m < 1:
+        return None
+    hashes = _winnow_kgram_hashes_np(_norm_codes_np(s), k)
     if m < w:
-        return [int(hashes.min())]
-    mins = np.unique(_sliding_min_np(hashes, w))
-    return [int(x) for x in mins]
+        return hashes, hashes.min(keepdims=True)
+    return hashes, np.unique(_sliding_min_np(hashes, w))
+
+
+def winnow_anchors_py(s: str, k: int = 20, w: int = 30) -> list[int]:
+    """Winnowed fingerprint anchors of an ALREADY normalized string — the
+    MOSS / exact-substring-dedup scheme: hash every character ``k``-gram,
+    then in every window of ``w`` consecutive k-gram hashes keep the
+    minimum; the distinct kept hashes (sorted) are the anchors. All numpy
+    (hash array via k shifted multiply-adds, rolling min via the block
+    accumulate trick), no per-character Python work.
+
+    GUARANTEE (Schleimer et al., SIGMOD'03): two documents sharing any
+    normalized substring of length ≥ w + k − 1 share at least one anchor
+    VALUE — so anchor-bucket collisions are a complete candidate generator
+    for exact repeated spans of that length, the tier word-shingle MinHash
+    cannot see (it detects whole-document similarity, not a long common
+    run inside otherwise-different docs). Strings shorter than k chars
+    have no anchors."""
+    ha = _kgram_hashes_and_anchors(s, k, w)
+    return [] if ha is None else ha[1].tolist()
 
 
 def winnow_anchor_rows_arrow(
     df: DataFrame, id_col: str, text_col: str, k: int = 20, w: int = 30
 ) -> DataFrame:
-    """(_id, a) anchor rows via ONE Arrow-batched stage — the 100 TB path
-    (linear per char; the expression form pays O(n·w) slice-mins). Values
-    identical to exploding :func:`winnow_anchors_expr`."""
+    """(_id, a) anchor rows via ONE Arrow-batched stage (linear per char):
+    :func:`winnow_anchors_py` of each lower-cased, ``[^a-z0-9]+``-collapsed,
+    trimmed text, exploded."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -1173,17 +1089,6 @@ def winnow_anchor_rows_arrow(
     ).where(F.col("a").isNotNull())
 
 
-def _norm_codes_np(s: str):
-    """Codepoint array of an already-normalized string (ASCII fast path,
-    exact codepoints otherwise — matching Spark/DuckDB ``ascii()``)."""
-    import numpy as np
-
-    raw = s.encode()
-    if len(raw) == len(s):
-        return np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-
-
 def anchor_occurrences_py(s: str, k: int = 20, w: int = 30):
     """(values, positions) of EVERY occurrence of every winnow-anchor value
     in the normalized string ``s`` — the seed table for anchor-seeded span
@@ -1194,17 +1099,11 @@ def anchor_occurrences_py(s: str, k: int = 20, w: int = 30):
     entries per doc plus repeats, vs the n-long hash array."""
     import numpy as np
 
-    n = len(s)
-    m = n - (k - 1)
-    if m < 1:
+    ha = _kgram_hashes_and_anchors(s, k, w)
+    if ha is None:
         e = np.empty(0, dtype=np.int64)
         return e, e.astype(np.int32)
-    codes = _norm_codes_np(s)
-    hashes = _winnow_kgram_hashes_np(codes, k)
-    if m < w:
-        anchors = hashes.min(keepdims=True)
-    else:
-        anchors = np.unique(_sliding_min_np(hashes, w))
+    hashes, anchors = ha
     mask = np.isin(hashes, anchors)
     poss = np.nonzero(mask)[0].astype(np.int32)
     return hashes[poss], poss
@@ -1213,8 +1112,7 @@ def anchor_occurrences_py(s: str, k: int = 20, w: int = 30):
 # per-(value, doc) occurrence cap and per-pair seed budget for the
 # anchor-seeded extension: only wildly repetitive text (one k-gram
 # repeating > _SEED_CAP times per doc) can exceed them, at the cost of
-# possibly seeding a shorter-than-maximal span there — the exact-DP
-# fallback stays available via use_anchors=False / small pairs.
+# possibly seeding a shorter-than-maximal span there.
 _SEED_CAP = 64
 _SEED_BUDGET = 100_000
 
@@ -1312,31 +1210,6 @@ def match_span_anchor_seeded_py(
     return best_a, best_b, best_len
 
 
-def longest_common_substring_py(a: str, b: str) -> str:
-    """Longest common substring via the classic rolling-row DP (O(len(a)·
-    len(b)) time, O(min) memory). Ties break to the earliest start in
-    ``a``. The per-pair verify kernel for the winnowing tier."""
-    if not a or not b:
-        return ""
-    if len(b) > len(a):
-        # DP rows sized by the shorter string; result substring of a —
-        # LCS-of-strings is symmetric so swapping is safe
-        a, b = b, a
-    best_len, best_end = 0, 0
-    prev = [0] * (len(b) + 1)
-    for i in range(1, len(a) + 1):
-        cur = [0] * (len(b) + 1)
-        ai = a[i - 1]
-        for j in range(1, len(b) + 1):
-            if ai == b[j - 1]:
-                v = prev[j - 1] + 1
-                cur[j] = v
-                if v > best_len:
-                    best_len, best_end = v, i
-        prev = cur
-    return a[best_end - best_len : best_end]
-
-
 def substring_dup_spans(
     docs: DataFrame,
     pairs: DataFrame,
@@ -1345,28 +1218,20 @@ def substring_dup_spans(
     min_len: int = 49,
     k: int = 20,
     w: int = 30,
-    use_anchors: bool | None = None,
-    dp_small: int = 0,
 ) -> DataFrame:
     """(id_a, id_b, span_len, span) — the VERIFY step of the exact-substring
     tier: for each candidate pair (from :func:`substring_dup_candidates`),
     the longest shared NORMALIZED substring, kept when ≥ ``min_len``.
 
-    Two kernels. The default (``use_anchors=None`` → auto) is
-    ANCHOR-SEEDED extension when ``min_len ≥ w + k − 1``: each doc's
-    winnow-anchor occurrence table (sparse, ~2n/w entries) is computed
-    once per doc in one Arrow stage, pairs join those tables, and shared
-    anchors seed aligned matches extended with chunked numpy compares —
-    O(span chars) per pair, exact for every span the filter can keep
-    (the winnowing guarantee puts an aligned seed in every shared run
-    ≥ w+k−1; a 200 KB book-length dup pair costs ~the span length, not
-    the 10¹⁰-char DP — and a doc shorter than w+k−1 chars cannot contain
-    a keepable span, so NO pair needs the DP in the guarantee regime).
-    ``min_len`` below the guarantee threshold takes the exact O(n·m) DP,
-    as does ``use_anchors=False`` everywhere (the oracle-shaped twin) and
-    pairs of combined length < ``dp_small`` (opt-in belt-and-braces;
-    default 0 — at ~5 ms per 300-char pair the DP costs ~70× the seeded
-    kernel, and a web corpus is DOMINATED by such pairs).
+    Kernel: ANCHOR-SEEDED extension. Each doc's winnow-anchor occurrence
+    table (sparse, ~2n/w entries) is computed once per doc in one Arrow
+    stage, pairs join those tables, and shared anchors seed aligned
+    matches extended with chunked numpy compares — O(span chars) per
+    pair, exact for every span the filter can keep (the winnowing
+    guarantee puts an aligned seed in every shared run ≥ w+k−1; a 200 KB
+    book-length dup pair costs ~the span length, not the 10¹⁰ char
+    compares of an O(n·m) DP). Exactness needs ``min_len ≥ w + k − 1``;
+    a smaller ``min_len`` raises ``ValueError``.
 
     Scale shape: texts/occurrence tables join onto the (already small)
     candidate pair relation — broadcast-or-shuffle hash joins keyed on
@@ -1382,9 +1247,11 @@ def substring_dup_spans(
         StructType,
     )
 
-    if use_anchors is None:
-        use_anchors = min_len >= w + k - 1
-
+    if min_len < w + k - 1:
+        raise ValueError(
+            f"min_len ({min_len}) must be >= w + k - 1 ({w + k - 1}); the "
+            "anchor-seeded verify is exact only at or above that length"
+        )
     norm = F.trim(
         F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z0-9]+", " ")
     )
@@ -1395,35 +1262,7 @@ def substring_dup_spans(
         ]
     )
 
-    if not use_anchors:
-        texts = docs.select(F.col(id_col).alias("_tid"), norm.alias("_s"))
-
-        def _lcs_fn(a_s, b_s):
-            import pandas as pd
-
-            spans = [
-                longest_common_substring_py(x or "", y or "")
-                for x, y in zip(a_s, b_s)
-            ]
-            return pd.DataFrame(
-                {"span_len": [len(s) for s in spans], "span": spans}
-            )
-
-        _lcs = pandas_udf(_lcs_fn, span_schema)
-        joined = (
-            pairs.select("id_a", "id_b")
-            .join(texts.select(F.col("_tid").alias("id_a"), F.col("_s").alias("_sa")), "id_a")
-            .join(texts.select(F.col("_tid").alias("id_b"), F.col("_s").alias("_sb")), "id_b")
-        )
-        out = joined.withColumn("_r", _lcs(F.col("_sa"), F.col("_sb"))).select(
-            "id_a",
-            "id_b",
-            F.col("_r.span_len").alias("span_len"),
-            F.col("_r.span").alias("span"),
-        )
-        return out.where(F.col("span_len") >= min_len)
-
-    # ---- anchor-seeded path: one occurrence-table stage per doc ----
+    # one occurrence-table stage per doc
     ids = (
         pairs.select(F.col("id_a").alias("_tid"))
         .union(pairs.select(F.col("id_b").alias("_tid")))
@@ -1465,11 +1304,6 @@ def substring_dup_spans(
         for sa, va, pa, sb, vb, pb in zip(a_s, av, ap, b_s, bv, bp):
             sa = sa or ""
             sb = sb or ""
-            if len(sa) + len(sb) < dp_small:
-                sp = longest_common_substring_py(sa, sb)
-                lens.append(len(sp))
-                spans.append(sp)
-                continue
             occ_a = (np.asarray(va, np.int64), np.asarray(pa, np.int64))
             occ_b = (np.asarray(vb, np.int64), np.asarray(pb, np.int64))
             a0, _, ln = match_span_anchor_seeded_py(sa, sb, occ_a, occ_b, k)
@@ -1517,90 +1351,3 @@ def substring_dup_spans(
     )
     return out.where(F.col("span_len") >= min_len)
 
-
-def cut_duplicate_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str,
-    text_col: str,
-    broadcast_spans: bool = True,
-) -> DataFrame:
-    """(id, text_cut, n_cut_chars) — the CUT step closing the
-    exact-substring tier (Lee et al.'s ExactSubstr dedup removes the
-    repeated span, not the whole document): every verified span from
-    :func:`substring_dup_spans` is removed from the LATER document
-    (``id_b``) at its first occurrence, the earlier document keeps its
-    copy — the same corpus-wide first-wins rule the other tiers use.
-    Documents appearing in no pair pass through untouched.
-
-    Cuts apply to the NORMALIZED text (what the spans were found in), in
-    deterministic order (longest span first, then id_a) so overlapping
-    spans resolve identically on every run; removed spans are replaced by
-    a single space and whitespace re-collapsed. Plan: spans aggregate to
-    one array per id_b (they are pair-bounded), broadcast-joined onto the
-    docs, one Arrow stage applies the cuts. If a corpus ever produced a
-    GB-scale span relation, pass ``broadcast_spans=False``: the join
-    becomes an ordinary shuffle hash join on the doc id (same valve
-    pattern as ``decontaminate_exact``'s oversized-benchmark path) with
-    identical output."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    per_doc = spans.groupBy(F.col("id_b").alias("_cid")).agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("span_len")).alias("_neg"),
-                        F.col("id_a").alias("_a"),
-                        F.col("span").alias("_sp"),
-                    )
-                )
-            ),
-            lambda x: x["_sp"],
-        ).alias("_cuts")
-    )
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z0-9]+", " "
-        )
-    )
-
-    def _cut_fn(texts, cuts_s):
-        import re
-
-        import pandas as pd
-
-        ws = re.compile(r"\s+")
-        out_t, out_n = [], []
-        for t, cuts in zip(texts, cuts_s):
-            s = t or ""
-            before = len(s)
-            # cuts arrives as a numpy array (Arrow list column) — `cuts
-            # or []` truth-tests the array and raises for len >= 2
-            for sp in [] if cuts is None else list(cuts):
-                if sp:
-                    s = s.replace(sp, " ", 1)
-            s = ws.sub(" ", s).strip()
-            out_t.append(s)
-            out_n.append(before - len(s))
-        return pd.DataFrame({"text_cut": out_t, "n_cut_chars": out_n})
-
-    _cut = pandas_udf(
-        _cut_fn,
-        StructType(
-            [
-                StructField("text_cut", StringType()),
-                StructField("n_cut_chars", LongType()),
-            ]
-        ),
-    )
-    base = docs.select(F.col(id_col), norm.alias("_s"))
-    if broadcast_spans:
-        per_doc = F.broadcast(per_doc)
-    joined = base.join(per_doc, base[id_col] == per_doc["_cid"], "left")
-    return joined.withColumn("_r", _cut(F.col("_s"), F.col("_cuts"))).select(
-        F.col(id_col),
-        F.col("_r.text_cut").alias("text_cut"),
-        F.col("_r.n_cut_chars").alias("n_cut_chars"),
-    )

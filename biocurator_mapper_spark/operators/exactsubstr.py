@@ -290,19 +290,15 @@ def cut_spans_by_range(
     spans: DataFrame,
     id_col: str,
     text_col: str,
-    broadcast_spans: bool = True,
 ) -> DataFrame:
     """(<id_col>, text_cut, n_cut_chars) — the CUT step of the exact tier:
     every span's [start, end) range is removed from the NORMALIZED text,
-    kept segments re-join on a single space with whitespace collapsed
-    (the same replacement semantics as ``dedup.cut_duplicate_spans``).
+    kept segments re-join on a single space with whitespace collapsed.
     Docs with no span pass through as their normalized text with
     n_cut_chars = 0. Spans are already non-overlapping (maximal-island
-    output), so n_cut_chars = Σ (end − start).
-
-    ``broadcast_spans=False`` switches the span join to an ordinary
-    shuffle hash join — the valve for a corpus whose aggregated span
-    relation outgrows the broadcast threshold."""
+    output), so n_cut_chars = Σ (end − start). Plan: spans aggregate to
+    one sorted array per doc, broadcast-joined onto the docs, and one
+    Arrow stage applies the cuts."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -346,8 +342,7 @@ def cut_spans_by_range(
         ),
     )
     base = docs.select(F.col(id_col), _norm_col(F.col(text_col)).alias("_s"))
-    if broadcast_spans:
-        per_doc = F.broadcast(per_doc)
+    per_doc = F.broadcast(per_doc)
     joined = base.join(per_doc, base[id_col] == per_doc["_cid"], "left")
     return joined.withColumn("_r", _cut(F.col("_s"), F.col("_spans"))).select(
         F.col(id_col),

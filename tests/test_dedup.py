@@ -24,6 +24,10 @@ def _toks(t):
     return [w for w in re.split(r"[^a-z0-9]+", t.lower()) if w]
 
 
+def _norm(t):
+    return re.sub(r"[^a-z0-9]+", " ", (t or "").lower()).strip()
+
+
 def _shingles(t, n=3):
     toks = _toks(t)
     if len(toks) >= n:
@@ -86,25 +90,6 @@ def test_ngram_jaccard_pairs_match_oracle(spark, docs):
     assert (0, 100) in got  # exact dup pair found
 
 
-def test_ngram_jaccard_size_prefilter_is_result_identical(spark, docs):
-    """The min/max size-ratio prune is conservative: with it off, the exact
-    post-aggregate relation is bit-identical (it only removes pairs the
-    Jaccard filter would remove anyway)."""
-    on = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.5, size_prefilter=True
-        ).collect()
-    }
-    off = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.5, size_prefilter=False
-        ).collect()
-    }
-    assert on == off and on
-
-
 def test_winnow_substring_candidates_guarantee(spark):
     """The winnowing guarantee: docs sharing an exact normalized substring
     of length ≥ w+k-1 ALWAYS share an anchor (candidate pair emitted);
@@ -114,7 +99,7 @@ def test_winnow_substring_candidates_guarantee(spark):
 
     from biocurator_mapper_spark.operators.dedup import (
         substring_dup_candidates,
-        winnow_anchors_expr,
+        winnow_anchors_py,
     )
 
     k, w = 20, 30
@@ -140,12 +125,7 @@ def test_winnow_substring_candidates_guarantee(spark):
     }
     assert (1, 2) in pairs and pairs[(1, 2)] >= 1
     assert all(p == (1, 2) for p in pairs)  # no spurious pairs on this corpus
-    anchors = {
-        r.doc_id: r.n
-        for r in df.select(
-            "doc_id", F.size(winnow_anchors_expr(F.col("text"), k, w)).alias("n")
-        ).collect()
-    }
+    anchors = {i: len(winnow_anchors_py(_norm(t), k, w)) for i, t in rows}
     assert anchors[5] == 0
     assert anchors[1] > 0
 
@@ -160,52 +140,93 @@ def test_winnow_substring_candidates_guarantee(spark):
         assert any((r.id_a, r.id_b) == (10, 20) for r in got), f"trial {trial}"
 
 
-def test_winnow_arrow_path_equals_expression_path(spark):
-    """The O(n) Arrow rolling-deque anchors must be value-identical to the
-    O(n·w) expression form, per doc and end-to-end through the pair
-    generator."""
+def _winnow_anchors_ref(s, k=20, w=30):
+    """Plain-Python winnowing: per-position (acc·B + ord(c)) % M folds of
+    each k-gram under both hash pairs, then min of every w-window."""
     from biocurator_mapper_spark.operators.dedup import (
+        WINNOW_B1,
+        WINNOW_B2,
+        WINNOW_M1,
+        WINNOW_M2,
+    )
+
+    def fold(g, b, m):
+        acc = 0
+        for c in g:
+            acc = (acc * b + ord(c)) % m
+        return acc
+
+    hs = [
+        fold(s[i : i + k], WINNOW_B1, WINNOW_M1) * 2**31
+        + fold(s[i : i + k], WINNOW_B2, WINNOW_M2)
+        for i in range(len(s) - k + 1)
+    ]
+    if not hs:
+        return set()
+    if len(hs) < w:
+        return {min(hs)}
+    return {min(hs[j : j + w]) for j in range(len(hs) - w + 1)}
+
+
+def test_winnow_arrow_path_equals_expression_path(spark):
+    """The Arrow anchor stage is value-identical to a plain-Python
+    winnowing reference, per doc (sf0.001 docs plus docs shorter than k
+    and docs with fewer than w k-grams) and end-to-end through the pair
+    generator (pairs and shared-anchor counts under the anchor-DF cap)."""
+    from collections import Counter
+
+    from biocurator_mapper_spark.operators.dedup import (
+        DEFAULT_MAX_SHINGLE_DF,
         substring_dup_candidates,
         winnow_anchor_rows_arrow,
-        winnow_anchors_expr,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    expr_rows = {
-        (r._id, r.a)
-        for r in docs.select(
-            F.col("doc_id").alias("_id"),
-            F.explode_outer(winnow_anchors_expr(F.col("text"))).alias("a"),
-        )
-        .where(F.col("a").isNotNull())
-        .collect()
-    }
+    edge = [
+        (-1, "tiny"),                               # < k chars: no anchors
+        (-2, "Nineteen chars ok!!"),                # normalizes to < k
+        (-3, "exactly twenty chars"),               # one k-gram
+        (-4, "forty-eight characters, fewer than w grams here"),
+        (-5, None),
+    ]
+    docs = docs.select("doc_id", "text").union(
+        spark.createDataFrame(edge, "doc_id long, text string")
+    )
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    ref = {i: _winnow_anchors_ref(_norm(t)) for i, t in texts.items()}
+    assert ref[-1] == ref[-2] == ref[-5] == set()
+    assert len(ref[-3]) == 1 and len(ref[-4]) == 1
     arrow_rows = {
         (r._id, r.a)
         for r in winnow_anchor_rows_arrow(docs, "doc_id", "text").collect()
     }
-    assert arrow_rows == expr_rows and arrow_rows
+    assert arrow_rows == {(i, a) for i, anc in ref.items() for a in anc}
 
-    pa = {
+    by_anchor: dict = {}
+    for i, anc in ref.items():
+        for a in anc:
+            by_anchor.setdefault(a, []).append(i)
+    want = Counter()
+    for ids in by_anchor.values():
+        if len(ids) <= DEFAULT_MAX_SHINGLE_DF:
+            want.update(itertools.combinations(sorted(ids), 2))
+    got = {
         (r.id_a, r.id_b): r.n_shared_anchors
-        for r in substring_dup_candidates(docs, "doc_id", "text", use_arrow=True).collect()
+        for r in substring_dup_candidates(docs, "doc_id", "text").collect()
     }
-    pe = {
-        (r.id_a, r.id_b): r.n_shared_anchors
-        for r in substring_dup_candidates(docs, "doc_id", "text", use_arrow=False).collect()
-    }
-    assert pa == pe
+    assert got == dict(want) and got
 
 
 def test_substring_span_verify_recovers_planted_runs(spark):
-    """The LCS verify step recovers the exact planted shared span for every
-    winnowing candidate pair; the DP kernel matches difflib (independent
-    implementation) on random pairs; sub-threshold spans are filtered."""
+    """The anchor-seeded verify step reports, for every doc pair whose true
+    longest common normalized substring (difflib, an independent
+    implementation) is at least min_len, exactly that length — and emits
+    no other pair; the planted span itself is recovered; sub-threshold
+    spans are filtered; min_len below w + k - 1 is rejected."""
     import difflib
     import random
 
     from biocurator_mapper_spark.operators.dedup import (
-        longest_common_substring_py,
         substring_dup_candidates,
         substring_dup_spans,
     )
@@ -214,42 +235,49 @@ def test_substring_span_verify_recovers_planted_runs(spark):
     alpha = "abcdefghij "
     rand = lambda n: "".join(rng.choice(alpha) for _ in range(n))  # noqa: E731
 
-    # kernel vs difflib on random pairs (length parity — difflib may pick a
-    # different equal-length span)
-    for _ in range(30):
-        a, b = rand(rng.randint(0, 80)), rand(rng.randint(0, 80))
-        got = longest_common_substring_py(a, b)
-        m = difflib.SequenceMatcher(None, a, b, autojunk=False)
-        want = m.find_longest_match(0, len(a), 0, len(b)).size
-        assert len(got) == want and (got in a and got in b or not got)
-
     shared = "the license text every mirror of this page carries verbatim today"
     docs_rows = [
         (1, rand(150) + " " + shared + " " + rand(150)),
         (2, rand(250) + " " + shared),
         (3, rand(420)),
     ]
+    # planted runs straddling the min_len = w + k - 1 = 49 threshold
+    for i, run_len in enumerate([30, 48, 49, 50, 75, 140]):
+        run = rand(run_len)
+        docs_rows.append((10 + 2 * i, rand(rng.randint(20, 200)) + run + rand(rng.randint(0, 150))))
+        docs_rows.append((11 + 2 * i, rand(rng.randint(0, 150)) + run + rand(rng.randint(20, 200))))
     df = spark.createDataFrame(docs_rows, "doc_id long, text string")
     pairs = substring_dup_candidates(df, "doc_id", "text", k=20, w=30)
     spans = {
         (r.id_a, r.id_b): (r.span_len, r.span)
         for r in substring_dup_spans(df, pairs, "doc_id", "text").collect()
     }
-    assert (1, 2) in spans
+    norm = {i: _norm(t) for i, t in docs_rows}
+    want = {}
+    for a, b in itertools.combinations(sorted(norm), 2):
+        m = difflib.SequenceMatcher(None, norm[a], norm[b], autojunk=False)
+        size = m.find_longest_match(0, len(norm[a]), 0, len(norm[b])).size
+        if size >= 49:
+            want[(a, b)] = size
+    assert {kk: v[0] for kk, v in spans.items()} == want
+    assert len(want) >= 4  # the shared licence + the >= 49 planted runs
+    for (a, b), (ln, sp) in spans.items():
+        assert len(sp) == ln and sp in norm[a] and sp in norm[b]
     ln, sp = spans[(1, 2)]
     assert shared in sp and ln >= len(shared)
     # min_len filter: raising the bar above the span drops the pair
     high = substring_dup_spans(df, pairs, "doc_id", "text", min_len=10_000)
     assert high.count() == 0
-    # anchor-seeded path == DP path on the same candidate relation (the
-    # seeded kernel is exact for every span the >= w+k-1 filter can keep)
-    dp = {
-        (r.id_a, r.id_b): r.span_len
-        for r in substring_dup_spans(
-            df, pairs, "doc_id", "text", use_anchors=False
-        ).collect()
-    }
-    assert {kk: v[0] for kk, v in spans.items()} == dp
+
+
+def test_substring_spans_reject_min_len_below_guarantee(spark):
+    """The seeded kernel is exact only for min_len >= w + k - 1."""
+    from biocurator_mapper_spark.operators.dedup import substring_dup_spans
+
+    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="min_len"):
+        substring_dup_spans(df, pairs, "doc_id", "text", min_len=48)
 
 
 def test_substring_span_long_doc_pair_fast(spark):
@@ -284,88 +312,6 @@ def test_substring_span_long_doc_pair_fast(spark):
     assert got[0].span_len >= len(norm_lifted)
     assert norm_lifted in got[0].span
     assert elapsed < 30, f"long-doc span verify took {elapsed:.1f}s"
-
-
-def test_cut_duplicate_spans_removes_later_copy_only(spark):
-    """The cut step: verified spans vanish from the LATER doc (first
-    occurrence, normalized text), the earlier doc keeps its copy, untouched
-    docs pass through; n_cut_chars accounts for the removal."""
-    import random
-
-    from biocurator_mapper_spark.operators.dedup import (
-        cut_duplicate_spans,
-        substring_dup_candidates,
-        substring_dup_spans,
-    )
-
-    rng = random.Random(23)
-    alpha = "abcdefghij "
-    rand = lambda n: "".join(rng.choice(alpha) for _ in range(n))  # noqa: E731
-    boiler = "all rights reserved please contact the site operator for details"
-    rows = [
-        (1, rand(150) + " " + boiler + " " + rand(150)),
-        (2, rand(200) + " " + boiler),
-        (3, rand(300)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = substring_dup_candidates(df, "doc_id", "text", k=20, w=30)
-    spans = substring_dup_spans(df, pairs, "doc_id", "text")
-    got = {
-        r.doc_id: (r.text_cut, r.n_cut_chars)
-        for r in cut_duplicate_spans(df, spans, "doc_id", "text").collect()
-    }
-    assert len(got) == 3
-    assert boiler in got[1][0] and got[1][1] == 0      # earlier copy kept
-    # cut: span removed (net chars ≈ span length minus the one joining
-    # space the replacement leaves behind)
-    assert boiler not in got[2][0] and got[2][1] >= len(boiler) - 2
-    assert got[3][1] == 0                               # untouched
-
-
-def test_cut_duplicate_spans_multiple_spans_per_doc(spark):
-    """A doc carrying TWO verified spans (from different earlier docs) has
-    BOTH removed — regression for the Arrow array truthiness crash on the
-    multi-span path ('truth value of an array … is ambiguous'), which only
-    a >=2-span doc exercises — and the non-broadcast fallback join returns
-    the identical result."""
-    import random
-
-    from biocurator_mapper_spark.operators.dedup import (
-        cut_duplicate_spans,
-        substring_dup_candidates,
-        substring_dup_spans,
-    )
-
-    rng = random.Random(41)
-    alpha = "abcdefghij "
-    rand = lambda n: "".join(rng.choice(alpha) for _ in range(n))  # noqa: E731
-    b1 = "all rights reserved please contact the site operator for details"
-    b2 = "subscribe to our newsletter for weekly updates and special offers"
-    rows = [
-        (1, rand(150) + " " + b1 + " " + rand(150)),
-        (2, rand(150) + " " + b2 + " " + rand(150)),
-        (3, rand(100) + " " + b1 + " " + rand(100) + " " + b2 + " " + rand(100)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = substring_dup_candidates(df, "doc_id", "text", k=20, w=30)
-    spans = substring_dup_spans(df, pairs, "doc_id", "text")
-    by_b = {r.id_b for r in spans.collect()}
-    assert by_b == {3}  # doc 3 is the later doc in both pairs
-    got = {
-        r.doc_id: (r.text_cut, r.n_cut_chars)
-        for r in cut_duplicate_spans(df, spans, "doc_id", "text").collect()
-    }
-    assert b1 in got[1][0] and b2 in got[2][0]          # earlier copies kept
-    assert b1 not in got[3][0] and b2 not in got[3][0]  # BOTH spans cut
-    assert got[3][1] >= len(b1) + len(b2) - 4
-    # shuffle-join valve: identical output without the broadcast hint
-    fb = {
-        r.doc_id: (r.text_cut, r.n_cut_chars)
-        for r in cut_duplicate_spans(
-            df, spans, "doc_id", "text", broadcast_spans=False
-        ).collect()
-    }
-    assert fb == got
 
 
 def test_incremental_dedup_matches_batch_rule(spark, docs):

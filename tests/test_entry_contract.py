@@ -55,3 +55,25 @@ def test_query_runs_and_schema_sane(spark, name):
     assert n >= 0
     if name not in ("j3_antijoin_unprocessed",):  # legitimately empty
         assert n > 0, name
+
+
+def test_rotation_covers_every_query_within_two_rounds():
+    """Each round's correctness snapshot records the first ~50 queries of
+    queries() in dict order (its observed entry cap). Those, together with
+    the queries recorded in the newest CORRECTNESS_r*.json snapshot, must
+    be every query — the rotation policy that keeps no query's snapshot
+    row more than two rounds stale."""
+    import glob
+    import json
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    newest = max(
+        glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
+        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
+    )
+    with open(newest) as f:
+        last_round = set(json.load(f))
+    keys = list(entrymod.queries())
+    covered = set(keys[:50]) | last_round
+    assert covered == set(keys), sorted(set(keys) - covered)
