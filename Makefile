@@ -26,7 +26,7 @@ check-oracles:
 	$(PY) tools/check_oracles.py /root/testdata/sf0.01
 
 plans:
-	$(PY) tools/plan_audit.py > PLANS.md
+	$(PY) tools/profile.py --plans --sf-dir /root/testdata/sf0.01 > PLANS.md
 
 # zip the package for spark-submit --py-files on a real cluster:
 #   spark-submit --py-files dist/bcms.zip your_job.py

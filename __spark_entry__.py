@@ -1271,9 +1271,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def sim_ann_q8_topk(spark, sf_dir):
         # int8-quantized top-k (the 4×-smaller corpus representation):
         # integer dot product — exact in ANY summation order, so the
-        # expression path, the numpy-matmul scale path, and the DuckDB
-        # oracle can never diverge on the fold; the only floats are two
-        # per-vector maxes and one rescale multiply
+        # expression path and the DuckDB oracle can never diverge on the
+        # fold; the only floats are two per-vector maxes and one rescale
+        # multiply
         from biocurator_mapper_spark.operators.similarity import q8_topk
 
         emb = _read(spark, sf_dir, "embeddings")

@@ -161,3 +161,13 @@ def estimated_source_partitions(df: DataFrame) -> int:
     # greedy packing merges small splits up to max_split per partition
     packed = max(1, math.ceil(total / max(max_split, 1)))
     return min(splits, packed) if splits else 1
+
+
+def spread_partitions(df: DataFrame) -> int | None:
+    """The under-split valve: ``defaultParallelism`` (the count callers
+    repartition to) when ``df``'s source has fewer partitions than half the
+    cores, else None — properly split inputs skip the shuffle."""
+    default_p = df.sparkSession.sparkContext.defaultParallelism
+    if estimated_source_partitions(df) < max(default_p // 2, 1):
+        return default_p
+    return None

@@ -109,16 +109,15 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> D
     re-evaluate the chain in parallel rather than shuffle corpus-scale
     shingle rows.
     """
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
-    spark = df.sparkSession
-    default_p = spark.sparkContext.defaultParallelism
-    under = estimated_source_partitions(df) < max(default_p // 2, 1)
+    n_spread = spread_partitions(df)
+    under = n_spread is not None
     if under:
         # FIRST spread the raw docs (tiny rows): tokenize + shingle + md5
         # then run on every core instead of serializing on the map side of
         # a post-explode exchange (measured 2× on the hashing stage)
-        df = df.select(id_col, text_col).repartition(default_p)
+        df = df.select(id_col, text_col).repartition(n_spread)
     rows = (
         df.select(
             F.col(id_col).alias("_id"),
@@ -142,7 +141,7 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> D
         # Well-partitioned 100 TB inputs skip both exchanges: consumers
         # re-evaluate in parallel rather than shuffle corpus-scale
         # shingle rows.
-        rows = rows.repartition(default_p, F.col("_id"))
+        rows = rows.repartition(n_spread, F.col("_id"))
     return rows
 
 
@@ -737,12 +736,10 @@ def paragraph_dedup(
     # under-partitioned-source valve (same rule as _hashed_shingle_rows):
     # spread exploded paragraph rows so the three consumer subtrees read one
     # parallel materialization; well-split inputs skip it
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
-    spark = docs.sparkSession
-    default_p = spark.sparkContext.defaultParallelism
-    if estimated_source_partitions(docs) < max(default_p // 2, 1):
-        paras = paras.repartition(default_p)
+    if n := spread_partitions(docs):
+        paras = paras.repartition(n)
     first = paras.groupBy("_fp").agg(
         F.min(F.struct(F.col("_id"), F.col("_idx"))).alias("_first")
     )
@@ -941,12 +938,11 @@ def substring_dup_candidates(
     valves as the shingle family: hub anchors past ``max_anchor_df`` are
     dropped (a site-wide footer would otherwise contribute O(df²) pairs),
     and the anchor rows repartition when the source is under-split."""
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
     rows = winnow_anchor_rows_arrow(df, id_col, text_col, k, w)
-    default_p = df.sparkSession.sparkContext.defaultParallelism
-    if estimated_source_partitions(df) < max(default_p // 2, 1):
-        rows = rows.repartition(default_p)
+    if n := spread_partitions(df):
+        rows = rows.repartition(n)
     if max_anchor_df is not None:
         hot = (
             rows.groupBy("a")

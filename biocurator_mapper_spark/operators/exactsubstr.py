@@ -79,16 +79,14 @@ def dup_gram_positions(
     combined 62-bit polynomial hashes of the L-gram starting there. One
     Arrow-batched stage, vectorized per doc (2 × L shifted multiply-adds
     over the codepoint array — no per-position Python work)."""
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
-    spark = df.sparkSession
-    default_p = spark.sparkContext.defaultParallelism
     src = df.select(id_col, text_col)
     # under-split sources serialize the kernel on one task — widen the
     # RAW docs (narrow rows) before the per-char fan-out, per the
     # pre-explode rule (CLAUDE.md / BENCH.md round-4 note)
-    if estimated_source_partitions(df) < max(default_p // 2, 1):
-        src = src.repartition(default_p)
+    if n := spread_partitions(df):
+        src = src.repartition(n)
 
     id_field = src.schema[id_col]
 

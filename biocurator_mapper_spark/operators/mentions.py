@@ -215,11 +215,10 @@ def mention_candidates(
     # under-partitioned input → the Python scan stage would serialize on
     # one task; a round-robin shuffle restores parallelism (no-op for
     # properly split inputs — the 100 TB case)
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
-    default_p = pages.sparkSession.sparkContext.defaultParallelism
-    if estimated_source_partitions(pages) < max(default_p // 2, 1):
-        pages = pages.repartition(default_p)
+    if n := spread_partitions(pages):
+        pages = pages.repartition(n)
     # explode_OUTER: plain explode triggers InferFiltersFromGenerate, whose
     # size(mentions)>0 filter makes Catalyst extract the scan UDF TWICE
     # (the Aho-Corasick pass would run 2x per page). Zero-mention pages

@@ -109,11 +109,10 @@ def with_lsh_buckets(
     ``_sig_udf``. Under-partitioned sources (a small parquet file → a
     handful of splits) are round-robin spread first so the Arrow matmul
     stage uses every core; properly split 100 TB inputs skip this."""
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
-    default_p = df.sparkSession.sparkContext.defaultParallelism
-    if estimated_source_partitions(df) < max(default_p // 2, 1):
-        df = df.repartition(default_p)
+    if n := spread_partitions(df):
+        df = df.repartition(n)
     sig = _sig_udf(df.sparkSession.sparkContext, dim, n_planes, n_tables, seed)
     return df.withColumn(out_col, sig(F.col(vec_col)))
 
@@ -643,8 +642,8 @@ def ivf_index_search(
 # score(a, b) = (max|a|·max|b|·Σ q_a·q_b) / 127².  The 100 TB lever is the
 # CORPUS REPRESENTATION: 4× smaller vectors (int8 vs float32) in broadcast
 # / postings storage and an integer dot product (SIMD-friendly, and —
-# unlike a float fold — EXACT in any summation order, so the numpy matmul
-# path and the expression path can never diverge; the only float ops are
+# unlike a float fold — EXACT in any summation order, so the expression
+# path and any other engine can never diverge; the only float ops are
 # two per-vector maxes and one final multiply, all deterministic). Recall
 # loss vs full precision is the quantization error (~0.4% of max|x| per
 # component) — rankings move only for near-ties.
@@ -699,9 +698,9 @@ def q8_topk(
 ) -> DataFrame:
     """Top-k by quantized dot product (the un-normalized cosine numerator;
     for L2-normalized embeddings the ranking equals cosine ranking up to
-    quantization error). Pure-DataFrame baseline: quantize both sides,
-    broadcast cross join, window rank with id tiebreak — the
-    oracle-checkable twin of :func:`broadcast_q8_topk`.
+    quantization error). Quantize both sides, broadcast cross join, window
+    rank with id tiebreak — every step has a DuckDB oracle counterpart
+    (``sim_ann_q8_topk``).
 
     Output: (query_id, corpus_id, rank, score)."""
     from pyspark.sql import Window
@@ -727,94 +726,4 @@ def q8_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(query_id_col, corpus_id_col, "rank", "score")
-    )
-
-
-def broadcast_q8_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    query_id_col: str = "query_id",
-    corpus_id_col: str = "corpus_id",
-    query_vec: str = "q_embedding",
-    corpus_vec: str = "c_embedding",
-) -> DataFrame:
-    """The scale path of :func:`q8_topk`: the corpus quantizes ONCE into a
-    broadcast int8 matrix (4× smaller than float32 — the whole point at a
-    10⁹-vector corpus), queries quantize per Arrow batch, and scoring is
-    one int32 matmul per batch (exact in any order) + the scalar
-    rescale. Relation-identical to q8_topk (same boundary-tie handling as
-    broadcast_topk: all candidates tied at the k-boundary enter the exact
-    (-score, id) sort)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    spark = queries.sparkSession
-    rows = [
-        r
-        for r in corpus.select(corpus_id_col, corpus_vec).collect()
-        if r[1] is not None
-    ]
-    id_type = corpus.schema[corpus_id_col].dataType
-    ids = np.array([r[0] for r in rows])
-    order = np.argsort(ids)  # deterministic tiebreak by id
-    ids = ids[order]
-    mat = np.array([r[1] for r in rows], dtype=np.float64)[order]
-    maxa = np.abs(mat).max(axis=1) if len(rows) else np.zeros(0)
-    safe = np.where(maxa > 0, maxa, 1.0)
-    qmat = np.floor(mat * 127.0 / safe[:, None] + 0.5).astype(np.int32)
-    qmat[maxa == 0] = 0
-    bc = spark.sparkContext.broadcast((ids, qmat.T, maxa))
-
-    out_schema = StructType(
-        [
-            StructField(query_id_col, queries.schema[query_id_col].dataType),
-            StructField(corpus_id_col, id_type),
-            StructField("rank", IntegerType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    def _score(batches):
-        cids, qt, cmax = bc.value
-        t_count = len(cids)
-        if t_count == 0:
-            return
-        kk = min(k, t_count)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qm = np.stack(pdf[query_vec].map(np.asarray).values).astype(np.float64)
-            qmax = np.abs(qm).max(axis=1)
-            qsafe = np.where(qmax > 0, qmax, 1.0)
-            qq = np.floor(qm * 127.0 / qsafe[:, None] + 0.5).astype(np.int32)
-            qq[qmax == 0] = 0
-            dots = qq @ qt  # exact int32 matmul
-            # ((ma*mb)*dot)/127² — the q8_score_expr parenthesization
-            sims = ((qmax[:, None] * cmax[None, :]) * dots.astype(np.float64)) / (
-                127.0 * 127.0
-            )
-            rows_out = []
-            for bi in range(sims.shape[0]):
-                part = np.argpartition(-sims[bi], kk - 1)[:kk]
-                thresh = sims[bi, part].min()
-                cand = np.nonzero(sims[bi] >= thresh)[0]
-                cand = cand[np.lexsort((cand, -sims[bi, cand]))][:kk]
-                qid = pdf[query_id_col].iat[bi]
-                for rank, ci in enumerate(cand, 1):
-                    rows_out.append((qid, cids[ci].item(), rank, float(sims[bi, ci])))
-            yield pd.DataFrame(
-                rows_out,
-                columns=[query_id_col, corpus_id_col, "rank", "score"],
-            )
-
-    return (
-        queries.select(query_id_col, query_vec)
-        .where(F.col(query_vec).isNotNull())
-        .mapInPandas(_score, out_schema)
     )

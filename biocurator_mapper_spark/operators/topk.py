@@ -139,7 +139,7 @@ def brute_force_topk_join(
     pair evaluates inside the few tasks holding the probes).
     """
     from ..functions.embed import cosine_from_norms_expr, norm_expr
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
     q = queries.select(query_id_col, query_vec)
     c = corpus.select(corpus_id_col, corpus_vec)
@@ -147,11 +147,10 @@ def brute_force_topk_join(
     # small parquet file yields a handful of splits and every per-pair
     # cosine then evaluates inside those few tasks; spread the STREAMED
     # side first. Well-partitioned 100 TB inputs skip this.
-    default_p = queries.sparkSession.sparkContext.defaultParallelism
     stream_is_c = broadcast_side == "queries"
     stream = c if stream_is_c else q
-    if estimated_source_partitions(stream) < max(default_p // 2, 1):
-        stream = stream.repartition(default_p)
+    if n := spread_partitions(stream):
+        stream = stream.repartition(n)
         if stream_is_c:
             c = stream
         else:

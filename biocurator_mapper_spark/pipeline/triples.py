@@ -160,11 +160,10 @@ def _fused_page_scan(
     # partition) would run the whole extract/scan/embed stage on ONE task;
     # one round-robin shuffle of the raw pages buys full parallelism.
     # Properly split 100 TB inputs (maxPartitionBytes-sized) skip this.
-    from ..functions.partitions import estimated_source_partitions
+    from ..functions.partitions import spread_partitions
 
-    default_p = pages.sparkSession.sparkContext.defaultParallelism
-    if estimated_source_partitions(pages) < max(default_p // 2, 1):
-        src = src.repartition(default_p)
+    if n := spread_partitions(pages):
+        src = src.repartition(n)
     return src.mapInPandas(_scan, out_schema)
 
 

@@ -11,14 +11,18 @@ def test_estimated_source_partitions_decision_parity(spark):
     """The cheap driver-side split estimate must land on the same side of
     the under-partitioned threshold (defaultParallelism // 2) as the RDD
     ground truth, across split sizings — it gates a repartition, so a
-    wrong side either serializes a stage or inserts a useless shuffle."""
+    wrong side either serializes a stage or inserts a useless shuffle.
+    ``spread_partitions``, the valve every operator calls, takes the same
+    side."""
     from pyspark.sql import functions as F
 
     from biocurator_mapper_spark.functions.partitions import (
         estimated_source_partitions,
+        spread_partitions,
     )
 
-    thresh = max(spark.sparkContext.defaultParallelism // 2, 1)
+    default_p = spark.sparkContext.defaultParallelism
+    thresh = max(default_p // 2, 1)
     orig = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         for sf in ("0.001", "0.01", "0.1"):
@@ -30,6 +34,8 @@ def test_estimated_source_partitions_decision_parity(spark):
                 assert (est < thresh) == (actual < thresh), (
                     sf, maxpb, est, actual, thresh
                 )
+                want = default_p if actual < thresh else None
+                assert spread_partitions(df) == want, (sf, maxpb)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", orig)
     # non-file sources fall back to the RDD probe exactly

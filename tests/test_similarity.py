@@ -346,26 +346,61 @@ def test_merge_ivf_index_equals_rebuild_same_quantizer(spark, tmp_path):
 
 
 def test_q8_topk_matmul_path_identical(spark):
-    """broadcast_q8_topk (int8 matmul scale path) returns the IDENTICAL
-    relation as the expression-form q8_topk — the integer dot product is
-    exact in any summation order, so the two paths cannot drift."""
+    """q8_topk returns the IDENTICAL relation as a plain-numpy int8
+    reference: per-vector quantization, an exact int64 dot product, the
+    ((ma*mb)*dot)/127² rescale and a (-score, id) sort, so ties at the
+    k-boundary resolve by id. The sf0.001 rows gain a zero vector on both
+    sides (all-zero q, score 0) and a copy of query 0's k-th neighbour under
+    a smaller id, which must take the k-th place from it."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from biocurator_mapper_spark.operators.similarity import (
-        broadcast_q8_topk,
-        q8_topk,
-    )
+    from biocurator_mapper_spark.operators.similarity import Q8_DENOM, q8_topk
 
+    k = 5
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-    )
+    rows = {r.vec_id: list(r.embedding) for r in emb.collect()}
+
+    def quant(v):
+        v = np.asarray(v, dtype=np.float64)
+        m = float(np.abs(v).max())
+        if m == 0:
+            return m, np.zeros(len(v), np.int64)
+        return m, np.floor(v * 127.0 / m + 0.5).astype(np.int64)
+
+    def reference(queries, corpus):
+        cq = [(cid, *quant(v)) for cid, v in corpus.items()]
+        out = []
+        for qid, v in queries.items():
+            ma, qa = quant(v)
+            ranked = sorted(
+                (-(((ma * mb) * float(qa @ qb)) / Q8_DENOM), cid) for cid, mb, qb in cq
+            )
+            out += [(qid, cid, r, -s) for r, (s, cid) in enumerate(ranked[:k], 1)]
+        return sorted(out)
+
+    zero = [0.0] * len(rows[0])
+    queries = {i: rows[i] for i in range(8)} | {-2: zero}
+    corpus = rows | {-2: zero}
+    kth = reference({0: rows[0]}, corpus)[k - 1][1]
+    corpus[-1] = rows[kth]
+    want = reference(queries, corpus)
+    top0 = {cid: r for qid, cid, r, _ in want if qid == 0}
+    assert top0.get(-1) == k and kth not in top0  # the boundary tie, by id
+
+    extra = {-2: zero, -1: rows[kth]}
     c = emb.select(
         F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("c_embedding")
+    ).unionByName(
+        spark.createDataFrame(list(extra.items()), "corpus_id long, c_embedding array<float>")
     )
-    a = sorted(tuple(r) for r in q8_topk(q, c, k=5).collect())
-    b = sorted(tuple(r) for r in broadcast_q8_topk(q, c, k=5).collect())
-    assert a == b and len(a) == 40
+    q = emb.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
+    ).unionByName(
+        spark.createDataFrame([(-2, zero)], "query_id long, q_embedding array<float>")
+    )
+    got = sorted(tuple(r) for r in q8_topk(q, c, k=k).collect())
+    assert got == want and len(got) == 9 * k
 
 
 def test_q8_quantize_edge_cases(spark):

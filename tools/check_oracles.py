@@ -2,6 +2,10 @@
 
 Mimics the driver's CORRECTNESS gate: row count + schema (column names) +
 order-insensitive value comparison (columns sorted by name, rows sorted).
+Each compared query also prints its seconds: ``spark=`` builds and collects
+the query, ``duck=`` runs its oracle once. The run ends with the totals
+(oracle_sql() generation, both sides, grand) and the ten slowest queries:
+the full contract pass, timed.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -9,11 +13,15 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
+import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the repo root replaces this script's directory at the head of sys.path:
+# tools/profile.py would shadow the standard library module pyspark imports
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from biocurator_mapper_spark.session import get_spark  # noqa: E402
@@ -93,8 +101,6 @@ def normalize(rows, cols):
 
 
 def main():
-    import os
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     # data-dependent oracles (IVF centroids) must see the same corpus
@@ -105,16 +111,21 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    t0 = time.monotonic()
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    prep = time.monotonic() - t0
     failures = []
+    secs = {}  # name -> (spark s, duck s)
     for name, fn in qs.items():
         if only and name not in only:
             continue
         try:
+            t0 = time.monotonic()
             df = fn(spark, sf_dir)
             sp_cols = df.columns
             sp_rows = [tuple(r) for r in df.collect()]
+            secs[name] = (time.monotonic() - t0, 0.0)
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"[FAIL-spark] {name}: {str(e)[:200]}")
@@ -124,9 +135,11 @@ def main():
             continue
         try:
             dk_types, _ = _duck_type_classes(con.execute(oracles[name]))
+            t0 = time.monotonic()
             res = con.execute(oracles[name])
             dk_cols = [d[0] for d in res.description]
             dk_rows = res.fetchall()
+            secs[name] = (secs[name][0], time.monotonic() - t0)
         except Exception as e:
             failures.append((name, f"DUCKDB ERROR: {e}"))
             print(f"[FAIL-duck ] {name}: {str(e)[:200]}")
@@ -161,11 +174,21 @@ def main():
                 diff = [x for x, y in zip(a, b) if x != y][:3]
                 diffb = [y for x, y in zip(a, b) if x != y][:3]
                 problems.append(f"values differ, e.g. spark={diff} duck={diffb}")
+        took = "spark={:.2f}s duck={:.2f}s".format(*secs[name])
         if problems:
             failures.append((name, "; ".join(problems)))
-            print(f"[FAIL      ] {name}: {'; '.join(problems)[:400]}")
+            print(f"[FAIL      ] {name}: {took} {'; '.join(problems)[:400]}")
         else:
-            print(f"[OK        ] {name}: {len(sp_rows)} rows")
+            print(f"[OK        ] {name}: {len(sp_rows)} rows {took}")
+    tot_s = sum(s for s, _ in secs.values())
+    tot_d = sum(d for _, d in secs.values())
+    print(
+        f"\nprep(oracle_sql gen)={prep:.2f}s  spark_total={tot_s:.1f}s  "
+        f"duck_total={tot_d:.1f}s  grand={prep + tot_s + tot_d:.1f}s"
+    )
+    print("top10 by combined:")
+    for name, (ts, td) in sorted(secs.items(), key=lambda kv: -sum(kv[1]))[:10]:
+        print(f"  {name:32s} {ts + td:7.2f}s")
     print(f"\n{len(failures)} failures")
     return 1 if failures else 0
 

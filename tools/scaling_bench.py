@@ -31,7 +31,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_level_inprocess(cpus: int, sf_dir: str, replicas: int) -> None:
-    sys.path.insert(0, REPO)
+    # replaces tools/, where profile.py would shadow the standard library
+    # module pyspark imports
+    sys.path[0] = REPO
     import statistics
 
     from pyspark.sql import functions as F

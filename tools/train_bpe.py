@@ -23,7 +23,9 @@ import sys
 from collections import Counter
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+# the repo root replaces tools/, where profile.py would shadow the standard
+# library module pyspark imports
+sys.path[0] = str(Path(__file__).resolve().parent.parent)
 
 from biocurator_mapper_spark.functions.bpe import train_merges  # noqa: E402
 from biocurator_mapper_spark.functions.text import BPE_TOKEN_RE  # noqa: E402
