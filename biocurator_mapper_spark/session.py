@@ -34,6 +34,13 @@ _DEFAULTS = {
     # Quieter local runs.
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # Driver JVM young-generation ceiling. G1 grows the heap whenever its GC
+    # pause share crosses a threshold and lets eden fill up to 60% of it; on
+    # a loaded host that crossing is timing noise, so the same local[4] run
+    # on a shared 4-core box peaked anywhere from 1.3 to 2.2 GB of driver
+    # JVM RSS at a 3g heap. Task garbage dies young either way.
+    # extraJavaOptions still apply after this.
+    "spark.driver.defaultJavaOptions": "-XX:MaxNewSize=256m",
 }
 
 
