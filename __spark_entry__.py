@@ -852,20 +852,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _cross_pairs(spark, sf_dir):
         # cross-corpus LSH pair relation, shared by dedup_cross_pairs AND
-        # dedup_decontaminate (decontaminate = anti-join on these pairs).
-        # FLAGGED variant: both corpora are one table here, so signatures
-        # build once over the union (halves the explode+md5 work vs
-        # splitting first; result-identical, same oracle)
-        from biocurator_mapper_spark.operators.dedup import (
-            cross_minhash_pairs_flagged,
-        )
+        # dedup_decontaminate (decontaminate = anti-join on these pairs):
+        # every 20th doc is the benchmark side, the rest the corpus
+        from biocurator_mapper_spark.operators.dedup import cross_minhash_pairs
 
         def _build():
-            d = _docs(spark, sf_dir).withColumn(
-                "_is_bench", F.col("doc_id") % 20 == 0
-            )
-            return cross_minhash_pairs_flagged(
-                d, "doc_id", "text", "_is_bench",
+            d = _docs(spark, sf_dir)
+            bench = F.col("doc_id") % 20 == 0
+            return cross_minhash_pairs(
+                d.where(~bench), d.where(bench), "doc_id", "text",
                 n=3, num_hashes=16, bands=4, threshold=0.5,
             )
 

@@ -104,38 +104,6 @@ def train_merges(
     return merges
 
 
-def train_merges_distributed(
-    docs,
-    text_col: str = "text",
-    n_merges: int = 48,
-    top_pieces: int | None = 1_000_000,
-) -> list[Pair]:
-    """Engine-native BPE training: piece counting is ONE Spark aggregate
-    (codegen ``regexp_extract_all`` → explode → hash-agg with map-side
-    partials — the only corpus-scale pass), and the deterministic merge
-    loop runs driver-side over the DISTINCT-piece table, which is
-    vocabulary-sized (Zipf: distinct pre-tokenizer pieces grow roughly
-    with the square root of corpus size). ``top_pieces`` bounds the
-    driver table the standard way BPE trainers do — keep the most frequent
-    pieces (ties break on the piece string, so the cut is deterministic);
-    rare singleton pieces contribute no merges anyway. Same output as
-    :func:`train_merges` over exact counts when nothing is cut (pinned in
-    tests against the checked-in table)."""
-    from pyspark.sql import functions as F
-
-    counts = docs.select(
-        F.explode(
-            F.regexp_extract_all(
-                F.coalesce(F.col(text_col), F.lit("")), F.lit(BPE_TOKEN_RE), 0
-            )
-        ).alias("piece")
-    ).groupBy("piece").agg(F.count(F.lit(1)).alias("c"))
-    if top_pieces is not None:
-        counts = counts.orderBy(F.desc("c"), F.asc("piece")).limit(top_pieces)
-    rows = counts.collect()
-    return train_merges(Counter({r["piece"]: r["c"] for r in rows}), n_merges)
-
-
 # ----------------------------------------------------------------- encoders
 
 

@@ -298,48 +298,6 @@ def minhash_lsh_pairs(
     return _jaccard_verified(cands, sets, sets, "id_a", "id_b", threshold)
 
 
-def cross_minhash_pairs_flagged(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    flag_col: str,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """``cross_minhash_pairs`` when corpus and benchmark live in ONE
-    relation (``flag_col`` boolean marks benchmark rows — the usual shape
-    when both sit in the same catalog table tagged by source): signatures
-    are built ONCE over the union, halving the explode+md5+agg work vs
-    splitting first, and the flag rejoins as a bare (id, bool) relation —
-    one narrow exchange instead of a second corpus-wide signature build.
-    Result-identical to splitting first (signatures are per-doc).
-    ``id_col`` must be unique per row (the family's standing contract)."""
-    flags = df.select(
-        F.col(id_col).alias("_id"), F.col(flag_col).cast("boolean").alias("_bm")
-    )
-    banded, sets = _banded_signatures(df, id_col, text_col, n, num_hashes, bands)
-    banded = banded.join(flags, "_id")
-    sets = sets.join(flags, "_id")
-    bm = F.col("_bm")
-    cands = (
-        banded.where(~bm)
-        .select("_id", "band_no", "band_val")
-        .join(
-            banded.where(bm).select(
-                F.col("_id").alias("_bid"), "band_no", "band_val"
-            ),
-            ["band_no", "band_val"],
-        )
-        .select(F.col("_id").alias("corpus_id"), F.col("_bid").alias("benchmark_id"))
-        .distinct()
-    )
-    return _jaccard_verified(
-        cands, sets.where(~bm), sets.where(bm), "corpus_id", "benchmark_id", threshold
-    )
-
-
 def _minhash_sig_aggs(num_hashes: int) -> list[Column]:
     """The 16 universal-hash permutation minima as aggregate columns over
     the ``hm`` column — THE single definition of the signature scheme,

@@ -22,10 +22,9 @@ highest-scoring documents. The classic recipe, Spark-shaped:
 
 Scale notes (100 TB): the corpus crosses the wire never — counts are
 partial-aggregated map-side into ≤ dim rows per task; scoring is one
-generate + broadcast-join + per-doc agg pipeline with integer rows. The
-top-k selection uses TakeOrderedAndProject (no global sort) — for a
-sampled (rather than top-k) selection, threshold the score or add seeded
-Gumbel noise keyed on the id hash, both narrow filters.
+generate + broadcast-join + per-doc agg pipeline with integer rows. To
+sample rather than rank, threshold the score or add seeded Gumbel noise
+keyed on the id hash, both narrow filters.
 
 Reference parity: no analog in the reference (one passage at a time —
 /root/reference/app/models.py:7); training-data extension surface.
@@ -139,24 +138,3 @@ def importance_scores(
             id_col, F.coalesce(F.col("dsir_score"), F.lit(0)).cast("bigint").alias("dsir_score")
         )
     )
-
-
-def dsir_select_topk(
-    raw: DataFrame,
-    target: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    n: int = 2,
-    dim: int = DSIR_DIM,
-) -> DataFrame:
-    """The whole recipe: count both corpora, build ratios, score raw docs,
-    keep the k most target-like — (id, dsir_score), deterministic ties by
-    id. TakeOrderedAndProject: no global sort materializes."""
-    ratios = dsir_log_ratios(
-        bucket_counts(target, text_col, n, dim),
-        bucket_counts(raw, text_col, n, dim),
-        dim,
-    )
-    scores = importance_scores(raw, id_col, text_col, ratios, n, dim)
-    return scores.orderBy(F.desc("dsir_score"), F.asc(id_col)).limit(k)

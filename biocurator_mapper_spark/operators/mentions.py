@@ -94,8 +94,8 @@ def check_driver_rows(rows: list, what: str) -> list:
     """``rows`` unchanged, or ``ValueError`` past ``DRIVER_TERMS_MAX``."""
     if len(rows) > DRIVER_TERMS_MAX:
         raise ValueError(
-            f"{what} exceeds DRIVER_TERMS_MAX={DRIVER_TERMS_MAX} rows: every "
-            "surface goes into one driver-built automaton"
+            f"{what} exceeds DRIVER_TERMS_MAX={DRIVER_TERMS_MAX} rows: the "
+            "ontology side is prepared on the driver"
         )
     return rows
 

@@ -143,18 +143,6 @@ def _wav_decode(blob: bytes) -> np.ndarray:
     return np.concatenate([env, bands]).astype(np.float32)
 
 
-def wav_duration_ms(blob: bytes) -> int | None:
-    """Duration of a WAV blob in ms (header-only — no sample read)."""
-    import io
-    import wave
-
-    if blob is None:
-        return None
-    with wave.open(io.BytesIO(blob)) as w:
-        fr = w.getframerate()
-        return int(w.getnframes() * 1000 / fr) if fr else None
-
-
 MEDIA_DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {
     "deterministic-fake": _fake_decode,
     # gated at import: containers with PIL get a REAL image decoder under

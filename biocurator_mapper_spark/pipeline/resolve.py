@@ -20,16 +20,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..functions.embed import hash_embed_py
+from ..operators.mentions import collect_driver_rows
 
-
-# Ontologies up to this many terms resolve with dense driver-side math (one
-# collect at construction). Bigger ontologies switch to the DISTRIBUTED
-# candidate path: scoring runs as a Spark job per resolve with the top-n
-# LIMIT pushed into the plan (TakeOrderedAndProject), so only ~2k candidate
-# rows — never the full score vector — cross to the driver. The batch scan
-# raises past operators.mentions.DRIVER_TERMS_MAX instead: it builds one
-# driver-side automaton from every surface, this path builds none.
-RESOLVER_DRIVER_TERMS_MAX = 200_000
 
 _TERM_COLS = [
     "term_id", "name", "definition", "exact_synonyms", "all_synonyms",
@@ -40,10 +32,9 @@ _TERM_COLS = [
 class Resolver:
     """Holds the broadcast-shaped term state; resolve() is driver-side math
     (one passage ≡ one row — no cluster job per request, matching the
-    reference's sub-second interactive latency). Past
-    ``RESOLVER_DRIVER_TERMS_MAX`` terms, candidate generation becomes a
-    bounded Spark job instead (full-ontology recall, driver traffic capped
-    at ~2k rows)."""
+    reference's sub-second interactive latency). The terms arrive through
+    the batch scan's guard, ``mentions.collect_driver_rows``: past
+    ``DRIVER_TERMS_MAX`` the constructor raises ``ValueError``."""
 
     def __init__(
         self,
@@ -60,22 +51,7 @@ class Resolver:
         self.k = k
         self.chat_provider = chat_provider
         self.explain = explain
-        cap = RESOLVER_DRIVER_TERMS_MAX
-        probe = terms.select(*_TERM_COLS).limit(cap + 1).collect()
-        self.distributed = len(probe) > cap
-        if self.distributed:
-            from ..functions.embed import with_hash_embedding
-
-            # term vectors computed ONCE, cached cluster-side; per-resolve
-            # cost is one scan of the cached relation + two pushed limits
-            self.scored_base = with_hash_embedding(
-                terms.select(*_TERM_COLS), "searchable_text", "term_embedding"
-            ).cache()
-            self.n_terms = self.scored_base.count()  # materialize the cache
-            self.terms = {}
-            self.ids = []
-            return
-        rows = probe
+        rows = collect_driver_rows(terms.select(*_TERM_COLS), "ontology terms")
         self.n_terms = len(rows)
         self.terms = {r.term_id: r for r in rows}
         vec_rows = [(r.term_id, hash_embed_py(r.searchable_text)) for r in rows]
@@ -88,7 +64,7 @@ class Resolver:
         else:
             self.matrix = np.zeros((0, 1), dtype=np.float32)
 
-    def _candidates_dense(self, passage_l: str, q: np.ndarray) -> list[tuple]:
+    def _candidates(self, passage_l: str, q: np.ndarray) -> list[tuple]:
         """Driver-side candidate generation: (term_row, sim) pairs, surface
         hits first, bounded by k."""
         sims = self.matrix @ q
@@ -114,42 +90,6 @@ class Resolver:
         ]
         return [(self.terms[self.ids[i]], float(sims[i])) for i in filled[:self.k]]
 
-    def _candidate_plan(self, passage_l: str, q: np.ndarray):
-        """(vector top-k DF, surface-hit top-k DF) — both with the LIMIT
-        pushed into the plan (TakeOrderedAndProject: each task keeps a
-        k-sized heap; only ~k rows per partition reach the driver-side
-        merge, never a full score vector)."""
-        from pyspark.sql import functions as F
-
-        from ..functions.embed import cosine_expr
-
-        qvec = F.array(*[F.lit(float(x)) for x in q]).cast("array<float>")
-        scored = (
-            self.scored_base.withColumn("_qvec", qvec)
-            .withColumn("sim", cosine_expr("_qvec", "term_embedding").cast("double"))
-            .drop("term_embedding", "_qvec")
-        )
-        pl = F.lit(passage_l)
-        surface_cond = (
-            (F.length(F.col("name")) > 0)
-            & (F.instr(pl, F.lower(F.col("name"))) > 0)
-        ) | F.exists(
-            F.col("all_synonyms"),
-            lambda s: (F.length(s) > 0) & (F.instr(pl, F.lower(s)) > 0),
-        )
-        order = [F.desc("sim"), F.asc("term_id")]
-        top = scored.orderBy(*order).limit(self.k)
-        surf = scored.where(surface_cond).orderBy(*order).limit(self.k)
-        return top, surf
-
-    def _candidates_distributed(self, passage_l: str, q: np.ndarray) -> list[tuple]:
-        top, surf = self._candidate_plan(passage_l, q)
-        surf_rows = surf.collect()
-        surf_ids = {r.term_id for r in surf_rows}
-        top_rows = [r for r in top.collect() if r.term_id not in surf_ids]
-        cands = surf_rows + top_rows
-        return [(r, float(r.sim)) for r in cands[: self.k]]
-
     def resolve(self, passage: str) -> dict:
         if self.n_terms == 0:
             return {"error": "No candidates provided"}
@@ -158,11 +98,7 @@ class Resolver:
         if qn > 0:
             q = q / qn
         passage_l = passage.lower()
-        cands = (
-            self._candidates_distributed(passage_l, q)
-            if self.distributed
-            else self._candidates_dense(passage_l, q)
-        )
+        cands = self._candidates(passage_l, q)
 
         def stub_score(r, sim: float) -> tuple[float, float, str]:
             certainty = (1.0 + sim) / 2.0

@@ -56,8 +56,3 @@ def plan_summary(df: DataFrame) -> dict:
         "n_scans": sum(1 for l in plan.splitlines() if "FileScan" in l or "Scan parquet" in l),
         "has_pushed_filters": bool(pushed_filters(df)),
     }
-
-
-def shuffles_touching(df: DataFrame, key_fragment: str) -> list[str]:
-    """Shuffle exchanges whose partitioning expression mentions a key."""
-    return [e for e in exchanges(df) if key_fragment in e]

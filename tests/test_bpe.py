@@ -48,22 +48,6 @@ def test_checked_in_table_matches_trainer():
     assert longer[: len(MERGES)] == [tuple(p) for p in MERGES]
 
 
-@pytest.mark.usefixtures("spark")
-def test_distributed_trainer_reproduces_checked_in_table(spark):
-    """The Spark-aggregate counting path must land on the identical merge
-    table as the DuckDB-counted trainer that produced bpe_merges.py — and
-    a top_pieces cap far above the vocab is a no-op."""
-    from biocurator_mapper_spark.functions.bpe import train_merges_distributed
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = train_merges_distributed(docs, "text", n_merges=len(MERGES))
-    assert got == [tuple(p) for p in MERGES]
-    capped = train_merges_distributed(
-        docs, "text", n_merges=len(MERGES), top_pieces=10_000
-    )
-    assert capped == got
-
-
 @given(st.text(alphabet=st.characters(codec="ascii"), max_size=40))
 @settings(max_examples=300, deadline=None)
 def test_encoders_equivalent_on_real_table(piece):

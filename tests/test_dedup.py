@@ -511,40 +511,11 @@ def test_decontaminate_exact_ngram_collision_rule(spark, docs):
         assert 0 not in got and 100 not in got  # exact copy of doc 0 collides
 
 
-def test_cross_pairs_flagged_identical_to_split(spark, docs):
-    """The one-relation flagged variant (signatures built ONCE over the
-    union) returns exactly the pairs of the two-relation formulation."""
-    from pyspark.sql import functions as F
-
-    from biocurator_mapper_spark.operators.dedup import (
-        cross_minhash_pairs,
-        cross_minhash_pairs_flagged,
-    )
-
-    rows = {r.doc_id: r.text for r in docs.collect()}
-    bench = spark.createDataFrame(
-        [(900, rows[0]), (902, "totally novel benchmark prose here")],
-        "doc_id long, text string",
-    )
-    union = docs.select("doc_id", "text").withColumn(
-        "is_bench", F.lit(False)
-    ).unionByName(bench.withColumn("is_bench", F.lit(True)))
-    split = sorted(
-        tuple(r)
-        for r in cross_minhash_pairs(docs, bench, "doc_id", "text").collect()
-    )
-    flagged = sorted(
-        tuple(r)
-        for r in cross_minhash_pairs_flagged(
-            union, "doc_id", "text", "is_bench"
-        ).collect()
-    )
-    assert flagged == split and split  # non-empty: doc 0 is in the benchmark
-
-
 def test_decontaminate_removes_benchmark_near_dups(spark, docs):
     """Train/eval decontamination: corpus docs near-duplicating a benchmark
-    doc are dropped; unrelated docs survive."""
+    doc are dropped; unrelated docs survive. Corpus and benchmark ids are
+    separate namespaces: a benchmark row that reuses a corpus id with
+    unrelated text changes neither the pairs nor the kept ids."""
     from biocurator_mapper_spark.operators.dedup import (
         cross_minhash_pairs,
         decontaminate,
@@ -568,3 +539,15 @@ def test_decontaminate_removes_benchmark_near_dups(spark, docs):
     assert 0 not in clean_ids and 100 not in clean_ids
     contaminated = {c for c, _ in pairs}
     assert clean_ids == {r.doc_id for r in docs.collect()} - contaminated
+    assert 5 in rows and 5 in clean_ids
+    shared_id = bench.unionByName(spark.createDataFrame(
+        [(5, "harbour cranes unload timber while the evening tide turns")],
+        "doc_id long, text string",
+    ))
+    assert {
+        (r.corpus_id, r.benchmark_id)
+        for r in cross_minhash_pairs(docs, shared_id, "doc_id", "text").collect()
+    } == pairs
+    assert {
+        r.doc_id for r in decontaminate(docs, shared_id, "doc_id", "text").collect()
+    } == clean_ids

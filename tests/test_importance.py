@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from biocurator_mapper_spark.operators.importance import (
     bucket_counts,
     dsir_log_ratios,
-    dsir_select_topk,
     importance_scores,
     ngram_occurrences_expr,
 )
@@ -35,13 +34,14 @@ def test_topk_selects_target_like_docs(spark):
         (i, f"{web} promo {web} offer") for i in range(3, 9)
     ]
     raw = spark.createDataFrame(raw_rows, "doc_id long, text string")
-    top = dsir_select_topk(raw, target, "doc_id", "text", k=3)
-    assert {r.doc_id for r in top.collect()} == {0, 1, 2}
-    # and the scores separate the two populations with the right sign
     ratios = dsir_log_ratios(
         bucket_counts(target, "text"), bucket_counts(raw, "text")
     )
-    sc = {r.doc_id: r.dsir_score for r in importance_scores(raw, "doc_id", "text", ratios).collect()}
+    scores = importance_scores(raw, "doc_id", "text", ratios)
+    top = scores.orderBy(F.desc("dsir_score"), F.asc("doc_id")).limit(3)
+    assert {r.doc_id for r in top.collect()} == {0, 1, 2}
+    # and the scores separate the two populations with the right sign
+    sc = {r.doc_id: r.dsir_score for r in scores.collect()}
     assert min(sc[i] for i in range(3)) > max(sc[i] for i in range(3, 9))
 
 

@@ -72,14 +72,16 @@ def test_no_mention_pages_produce_no_triples(spark, terms):
 def test_ontology_side_cap_raises(spark, terms, monkeypatch):
     """The ontology side is prepared on the driver from one bounded collect:
     past DRIVER_TERMS_MAX, build_triples (collected or caller-supplied term
-    rows), canonical_mapping and mention_candidates each raise a ValueError
-    naming the cap instead of hauling the relation to the driver."""
+    rows), canonical_mapping, mention_candidates and the Resolver each raise
+    a ValueError naming the cap instead of hauling the relation to the
+    driver."""
     import pytest
 
     import __spark_entry__ as em
     from biocurator_mapper_spark.functions.dims import local_dim_df
     from biocurator_mapper_spark.operators import canonical_mapping, mention_candidates
     from biocurator_mapper_spark.operators import mentions as M
+    from biocurator_mapper_spark.pipeline.resolve import Resolver
 
     pages = pages_dataframe(spark, SURFACES, n_pages=4, seed=5)
     surface_map = local_dim_df(
@@ -103,6 +105,8 @@ def test_ontology_side_cap_raises(spark, terms, monkeypatch):
     docs = pages.select("url", F.col("text").alias("extracted_text"))
     with pytest.raises(ValueError, match=cap):
         mention_candidates(docs, surface_map)
+    with pytest.raises(ValueError, match=cap):
+        Resolver(terms)
 
 
 def test_empty_pipeline_run(spark, terms, tmp_path):

@@ -57,13 +57,18 @@ from pyspark.sql import functions as F
 
 from biocurator_mapper_spark.plans import (
     broadcast_exchanges,
+    exchanges,
     plan_summary,
     pushed_filters,
 )
-from biocurator_mapper_spark.plans.inspect import shuffles_touching
 from biocurator_mapper_spark.operators.skew import salted_agg, salted_join
 from biocurator_mapper_spark.pipeline import build_triples
 from biocurator_mapper_spark.testdata import pages_dataframe
+
+
+def shuffles_touching(df, key_fragment: str) -> list[str]:
+    """Shuffle exchanges whose partitioning expression mentions a key."""
+    return [e for e in exchanges(df) if key_fragment in e]
 
 
 def test_triples_plan_single_corpus_shuffle(spark, terms):

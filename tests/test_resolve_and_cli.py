@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import json
 
-import biocurator_mapper_spark.pipeline.resolve as resolve_mod
 from biocurator_mapper_spark.pipeline.resolve import Resolver
 
 
@@ -33,78 +32,6 @@ def test_resolve_no_surface_still_answers(spark, terms):
     out = r.resolve("the cell died in a programmed manner")
     assert "best_match" in out and out["confidence"] > 0
     assert len(out["alternatives"]) == 4
-
-
-def test_resolve_distributed_path_parity_and_limit_pushdown(
-    spark, terms, monkeypatch
-):
-    """Past RESOLVER_DRIVER_TERMS_MAX the Resolver must NOT collect the
-    ontology: candidate generation becomes a Spark job with the top-n limit
-    pushed into the plan (TakeOrderedAndProject — per-task k-heaps, never a full
-    score vector driver-side), and the answer must match the dense path."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from biocurator_mapper_spark.functions.embed import hash_embed_py
-
-    # synthetic large-ish ontology: the fixture terms + 3000 filler terms
-    filler = spark.range(3000).select(
-        F.concat(F.lit("FAKE:"), F.col("id").cast("string")).alias("term_id"),
-        F.concat(F.lit("filler term "), F.col("id")).alias("name"),
-        F.concat(F.lit("definition of filler "), F.col("id")).alias("definition"),
-        F.array().cast("array<string>").alias("exact_synonyms"),
-        F.array().cast("array<string>").alias("all_synonyms"),
-        F.concat(F.lit("filler term "), F.col("id")).alias("searchable_text"),
-        F.lit("fake").alias("namespace"),
-    )
-    cols = [
-        "term_id", "name", "definition", "exact_synonyms", "all_synonyms",
-        "searchable_text", "namespace",
-    ]
-    big = terms.select(*cols).unionByName(filler)
-    passage = "Intracellular membrane-bounded organelle activity was observed"
-    dense = Resolver(big, k=5)  # default cap: everything driver-side
-    monkeypatch.setattr(resolve_mod, "RESOLVER_DRIVER_TERMS_MAX", 1000)
-    dist = Resolver(big, k=5)
-    assert not dense.distributed and dist.distributed
-    got_dense, got_dist = dense.resolve(passage), dist.resolve(passage)
-    assert got_dist["best_match"] == got_dense["best_match"]
-    assert got_dist["reason"] == got_dense["reason"]
-    assert {a["id"] for a in got_dist["alternatives"]} == {
-        a["id"] for a in got_dense["alternatives"]
-    }
-    # the limit is IN the plan, not applied after a collect
-    q = np.array(hash_embed_py(passage), dtype=np.float32)
-    q = q / np.linalg.norm(q)
-    top, surf = dist._candidate_plan(passage.lower(), q)
-    for df in (top, surf):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan, plan[:500]
-
-
-def test_resolve_distributed_with_llm_rerank(spark, terms, monkeypatch):
-    """The LLM rerank layer must work unchanged on the distributed
-    candidate path — candidates carry every prompt field (definition,
-    synonyms, namespace) through the Spark job."""
-    import re
-
-    def chat_pick_other(prompt):
-        ids = re.findall(r"\((\w+:\d+)\)", prompt)
-        target = ids[1] if len(ids) > 1 else ids[0]
-        return (
-            f'{{"id": "{target}", "name": "x", "confidence": 0.9, '
-            f'"reason": "llm override"}}'
-        )
-
-    passage = "apoptosis of T cells in culture"
-    monkeypatch.setattr(resolve_mod, "RESOLVER_DRIVER_TERMS_MAX", 5)
-    dist = Resolver(terms, k=3, chat_provider=chat_pick_other)
-    assert dist.distributed
-    out = dist.resolve(passage)
-    base = Resolver(terms, k=3).resolve(passage)
-    assert out["reason"] == "llm override" and out["confidence"] == 0.9
-    assert out["best_match"]["id"] != base["best_match"]["id"]
-    assert out["best_match"]["id"] in {a["id"] for a in base["alternatives"]}
 
 
 def test_resolve_empty_ontology_errors(spark, terms):

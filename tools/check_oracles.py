@@ -29,8 +29,8 @@ from biocurator_mapper_spark.session import get_spark  # noqa: E402
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def _duck_type_classes(res):
-    """Normalized per-column type class from DuckDB's arrow schema.
+def _duck_type_classes(tb):
+    """Normalized per-column type class from a DuckDB result's arrow schema.
 
     Catches representation mismatches the stringified-value compare can't —
     e.g. DuckDB sum() over integers is HUGEINT (arrow decimal128(38,0)) while
@@ -55,8 +55,7 @@ def _duck_type_classes(res):
             return "binary"
         return "str"
 
-    tb = res.fetch_arrow_table()
-    return {f.name: cls(f.type) for f in tb.schema}, tb
+    return {f.name: cls(f.type) for f in tb.schema}
 
 
 def _spark_type_classes(df):
@@ -134,12 +133,11 @@ def main():
             print(f"[rows-only] {name}: {len(sp_rows)} rows")
             continue
         try:
-            dk_types, _ = _duck_type_classes(con.execute(oracles[name]))
             t0 = time.monotonic()
-            res = con.execute(oracles[name])
-            dk_cols = [d[0] for d in res.description]
-            dk_rows = res.fetchall()
+            tb = con.execute(oracles[name]).fetch_arrow_table()
+            dk_rows = list(zip(*(c.to_pylist() for c in tb.columns)))
             secs[name] = (secs[name][0], time.monotonic() - t0)
+            dk_types, dk_cols = _duck_type_classes(tb), tb.column_names
         except Exception as e:
             failures.append((name, f"DUCKDB ERROR: {e}"))
             print(f"[FAIL-duck ] {name}: {str(e)[:200]}")

@@ -2,10 +2,12 @@
 
 Per query, the minimum over ``--repeats`` fresh builds of ``build_s`` (the
 query function), ``plan_s`` (the executed physical plan) and ``exec_s`` (a
-``noop`` sink: every column runs, where ``.count()`` lets Catalyst prune);
-from the last repeat, its stage and per-node rows (``kgbench/trace.py``),
-the shape of its final adaptive plan and ``plan_md5``. The session is
-bench.py's: query memo off, 1 MB splits, max(cpus, 8) shuffle partitions.
+JVM-side ``collect()`` of the query execution ``plan_s`` planned: every
+column runs, where ``.count()`` lets Catalyst prune, and nothing is planned
+again, where a ``noop`` write would build a new query execution); from the
+last repeat, its stage and per-node rows (``kgbench/trace.py``), the shape
+of its final adaptive plan and ``plan_md5``. The session is bench.py's:
+query memo off, 1 MB splits, max(cpus, 8) shuffle partitions.
 
     python tools/profile.py --sf-dir /root/testdata/sf0.1 --cpus 4 --out PROFILE.json
     python tools/profile.py --plans --sf-dir /root/testdata/sf0.01 > PLANS.md
@@ -70,15 +72,15 @@ Notes:
   build side at run time. Shape columns are not an equality check; `plan_md5` is.
 - profile_documents' digest differs between builds: Spark's distinct-aggregate
   rewrite orders the Expand columns by expression-id hashes.
+- dedup_clusters_best reads 2 or 3 shuffles and 7 or 9 codegen spans from one
+  full run to the next with the same `plan_md5`: AQE's run-time join choice.
 """
 
 
 def shape(df) -> dict:
-    """Shape counts of ``df``'s final adaptive plan (runs ``df``)."""
-    # execute THIS dataframe's own query execution (count() would build a
-    # separate plan): AQE finalizes the plan — codegen markers, coalesced
-    # reads, reused exchanges — only as stages actually run
-    df.collect()
+    """Shape counts of ``df``'s final adaptive plan. AQE finalizes the plan
+    (codegen markers, coalesced reads, reused exchanges) only as stages
+    actually run, so ``df`` must have run in its own query execution."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the final AQE plan string appends the pre-execution plan under an
     # "== Initial Plan ==" header — count the FINAL plan only
@@ -117,20 +119,21 @@ def profile_query(spark, name: str, fn, sf_dir: str, repeats: int, store) -> dic
         t2 = time.monotonic()
         stage0, exec0 = store.max_stage_id(), store.max_execution_id()
         t3 = time.monotonic()
-        df.write.format("noop").mode("overwrite").save()
+        # the Dataset's own action runs the planned query execution under a
+        # SQL execution id; the rows stay in the driver JVM
+        df._jdf.collect()
         times.append((t1 - t0, t2 - t1, time.monotonic() - t3))
         digests.append(plan_md5(df))
     out = {k: round(min(t[i] for t in times), 3)
            for i, k in enumerate(("build_s", "plan_s", "exec_s"))}
     out["bench_sink"] = "checksum" if name in FORCE_FULL_EVAL else "count"
-    # bounds before the shape collect: its stages stay out of the noop's rows
-    stage1, exec1 = store.max_stage_id(), store.max_execution_id()
     out |= shape(df)
     out["plan_md5"], out["plan_md5_stable"] = digests[-1], len(set(digests)) == 1
-    out["stages"] = [{k: s[k] for k in STAGE_KEYS}
-                     for s in store.stages_after(stage0) if s["id"] <= stage1]
+    # the status store is filled by the listener bus, asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    out["stages"] = [{k: s[k] for k in STAGE_KEYS} for s in store.stages_after(stage0)]
     out["nodes"] = [{"exec": e, "node": node, "rows": rows}
-                    for e, node, _, rows in store.sql_plan_rows(exec0) if e <= exec1]
+                    for e, node, _, rows in store.sql_plan_rows(exec0)]
     return out
 
 
