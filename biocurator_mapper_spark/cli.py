@@ -63,10 +63,11 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_embed(args) -> int:
+    from .functions.dims import local_dim_df
     from .ontology.parser import embed_text, quality_filter
+    from .operators.mentions import collect_driver_rows
     from .pipeline.model_client import embed_with_cache, preflight_check
     from .sources.catalog import ParquetCatalog
-    from pyspark.sql import functions as F
 
     if not preflight_check():
         print(json.dumps({"error": "embedding provider failed preflight"}))
@@ -75,18 +76,24 @@ def cmd_embed(args) -> int:
     catalog = ParquetCatalog(spark, args.warehouse)
     terms = catalog.read(f"ontology_terms_{args.ontology}")
     kept = quality_filter(terms) if args.apply_filters else terms
-    with_text = kept.withColumn("embed_text", embed_text())
-    embedded = embed_with_cache(with_text, "embed_text", catalog)
+    rows = collect_driver_rows(
+        kept.select("term_id", embed_text().alias("embed_text")), "ontology terms"
+    )
+    vecs = embed_with_cache(rows, catalog)
     catalog.write_replace(
-        embedded.select("term_id", "embed_text", "embedding"),
+        local_dim_df(
+            spark,
+            [(r.term_id, r.embed_text, v) for r, (_, v) in zip(rows, vecs)],
+            "term_id string, embed_text string, embedding array<float>",
+        ),
         f"ontology_embeddings_{args.ontology}",
     )
     print(
         json.dumps(
             {
                 "ontology": args.ontology,
-                "embedded": embedded.count(),
-                "filtered_out": terms.count() - kept.count(),
+                "embedded": len(rows),
+                "filtered_out": terms.count() - len(rows),
             }
         )
     )

@@ -2,7 +2,6 @@ from .embed import (
     EMBED_DIM,
     EMBED_MODEL_STUB,
     hash_embed_py,
-    with_hash_embedding,
     cosine_expr,
     certainty_expr,
 )
@@ -23,7 +22,6 @@ __all__ = [
     "EMBED_DIM",
     "EMBED_MODEL_STUB",
     "hash_embed_py",
-    "with_hash_embedding",
     "cosine_expr",
     "certainty_expr",
     "curie_normalize",

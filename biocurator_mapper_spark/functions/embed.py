@@ -12,10 +12,10 @@ sha256(token); a text's vector is the L2-normalized token sum. Properties:
   pin (FIXTURES.md §4);
 - identical strings get identical vectors.
 
-The real-API adapter (``pipeline.model_client``) has the same batched
-Series→Series signature, so swapping it in changes no plan shape: batching,
-caching and retry semantics stay in the UDF layer exactly as the reference
-does it (batch 100, retry/backoff — openai_client.py:224-301).
+Term vectors come from ``pipeline.model_client.embed_with_cache`` on the
+driver (provider registry, batching, retry/backoff and the cross-run
+cache — openai_client.py:224-301); passages are embedded by
+``embed_series`` inside the fused page pass.
 """
 
 from __future__ import annotations
@@ -25,17 +25,16 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
 
 EMBED_DIM = 64
 EMBED_MODEL_STUB = "stub-hash-v1"
 
 _TOKEN_RE = re.compile(r"[a-z0-9]+")
 
-# Per-process token-vector cache (executor-local; the cross-run cache is the
-# `_embedding_cache` table, see pipeline.embedding_cache).
+# Per-process token-vector cache (the cross-run cache is the
+# `_embedding_cache` log, see pipeline.model_client.embed_with_cache).
 _token_cache: dict[str, np.ndarray] = {}
 
 
@@ -70,21 +69,10 @@ def hash_embed_py(text: str | None, dim: int = EMBED_DIM) -> list[float]:
 
 
 def embed_series(texts: pd.Series, dim: int = EMBED_DIM) -> pd.Series:
-    """Arrow-batched embedding stub: one ``hash_embed_py`` call per row
-    (per-token numpy adds inside). The Arrow transfer is batched; the
-    hashing itself is row-at-a-time Python — a provider-backed
-    ``page_embed`` replaces this whole callable, batch-in/batch-out."""
+    """The passage embedding of the fused page pass: one ``hash_embed_py``
+    call per row (per-token numpy adds inside). The Arrow transfer is
+    batched; the hashing itself is row-at-a-time Python."""
     return texts.map(lambda t: hash_embed_py(t, dim))
-
-
-def with_hash_embedding(
-    df: DataFrame, text_col: str, out_col: str = "embedding", dim: int = EMBED_DIM
-) -> DataFrame:
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _udf(s: pd.Series) -> pd.Series:
-        return embed_series(s, dim)
-
-    return df.withColumn(out_col, _udf(F.col(text_col)))
 
 
 def _sql_ident(name: str) -> str:

@@ -1,45 +1,47 @@
 """Batched model-call layer: retry, backoff, rate limiting, caching (M1–M7).
 
 Reimplements the operational semantics of the reference's OpenAI client
-(``app/openai_client.py``) inside the Arrow-batch UDF layer — the only place
-they belong on a cluster (Spark task retries are too coarse: one flaky call
-must not recompute a whole partition):
+(``app/openai_client.py``). Term embedding runs on the driver, like the
+reference's one-process loop: the ontology side is driver-held by design
+(``operators.mentions.DRIVER_TERMS_MAX``), so its texts never cross into a
+Python worker to be embedded:
 
-- batching: texts are embedded per Arrow batch
-  (``spark.sql.execution.arrow.maxRecordsPerBatch`` = the reference's
-  batch_size 100, embeddings_config.yaml:11);
+- batching: ``embed_with_cache`` calls the provider with ``EMBED_BATCH``
+  texts at a time (the reference's batch_size 100,
+  embeddings_config.yaml:11);
 - retry/backoff: per-call retry with ``min(delay * 2**n, 60)`` exponential
   backoff (openai_client.py:183-187) and the reference's retryable-error
   classifier (rate limit / timeout / 5xx retry; auth / 4xx fail fast,
   openai_client.py:120-160);
-- rate limiting: a per-executor token bucket (delay between calls,
-  embeddings_config.yaml:60) — cluster-wide rate = executors × bucket rate;
-- caching: an ``_embedding_cache`` table keyed by sha2(text) makes reruns
-  free (the reference's version-hash memoization, generalized per text).
+- rate limiting: a token bucket (delay between calls,
+  embeddings_config.yaml:60);
+- caching: an ``_embedding_cache`` log keyed by (sha256(text), model)
+  makes reruns free (the reference's version-hash memoization,
+  generalized per text).
 
 The default provider is the deterministic hash embedder; a real HTTP
-provider plugs in via ``EMBED_PROVIDERS`` without changing plan shape.
+provider plugs in via ``EMBED_PROVIDERS``. Passages are embedded inside
+the fused page pass by ``functions.embed.embed_series``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from ..functions.embed import EMBED_DIM, EMBED_MODEL_STUB, hash_embed_py
-from ..sources.catalog import ParquetCatalog
+from ..functions.dims import local_dim_df
+from ..functions.embed import EMBED_MODEL_STUB, hash_embed_py
+from ..sources.catalog import ParquetCatalog, utc_now
+
+EMBED_BATCH = 100  # texts per provider call
+_CACHE_TABLE = "_embedding_cache"
+_CACHE_SCHEMA = (
+    "text_hash string, embedding array<float>, token_count int, "
+    "model string, cached_ts timestamp"
+)
 
 RETRYABLE_MARKERS = (
     "rate limit", "429", "timeout", "timed out", "connection", "temporarily",
@@ -67,7 +69,7 @@ EMBED_PROVIDERS: dict[str, Callable[[list[str]], list[list[float]]]] = {
 
 
 class RetryingEmbedder:
-    """Executor-side callable with retry/backoff/rate limiting."""
+    """Provider call with retry/backoff/rate limiting."""
 
     def __init__(
         self,
@@ -76,13 +78,8 @@ class RetryingEmbedder:
         base_delay: float = 0.1,
         max_delay: float = 60.0,
         rate_limit_delay: float = 0.0,
-        provider_fn: Callable[[list[str]], list[list[float]]] | None = None,
     ):
         self.provider = provider
-        # dynamically registered providers live in the DRIVER's registry;
-        # executors run forked workers with a fresh module, so the resolved
-        # callable must travel in the closure (provider_fn), not by name
-        self.provider_fn = provider_fn
         self.max_retries = max_retries
         self.base_delay = base_delay
         self.max_delay = max_delay
@@ -91,7 +88,7 @@ class RetryingEmbedder:
         self.retry_count = 0
 
     def __call__(self, texts: list[str]) -> list[list[float]]:
-        fn = self.provider_fn or EMBED_PROVIDERS[self.provider]
+        fn = EMBED_PROVIDERS[self.provider]
         if self.rate_limit_delay > 0:
             wait = self._last_call + self.rate_limit_delay - time.monotonic()
             if wait > 0:
@@ -121,110 +118,54 @@ def preflight_check(provider: str = EMBED_MODEL_STUB) -> bool:
         return False
 
 
-EMBED_RESULT_SCHEMA_FIELDS = [
-    StructField("embedding", ArrayType(FloatType())),
-    StructField("token_count", IntegerType()),
-    StructField("model", StringType()),
-]
-
-
 def embed_with_cache(
-    df: DataFrame,
-    text_col: str,
+    rows: list,
     catalog: ParquetCatalog | None = None,
-    cache_table: str = "_embedding_cache",
     provider: str = EMBED_MODEL_STUB,
-    out_col: str = "embedding",
-) -> DataFrame:
-    """+ embedding column, reusing cached vectors by sha2(text).
+) -> list[tuple]:
+    """``(key, text)`` rows → ``(key, vector)`` rows in input order.
 
-    Cache hits join in (broadcast if small); only misses reach the provider
-    UDF; new vectors are appended back to the cache log. token_count is the
-    whole-batch apportionment the reference performs
-    (openai_client.py:276-284): tokens // len(texts) per text — whitespace
-    token count in the stub.
+    The rows are already on the driver (every caller collects its term
+    rows through ``mentions.collect_driver_rows``), so this runs no Spark
+    job to embed. The cache key is (sha256 hex of the text, model): a NULL
+    text hashes like ``''``, and the hex equals Spark's ``sha2(text, 256)``,
+    so logs written by a Spark job still hit. Vectors embedded by another
+    provider are never served for the same text.
+
+    With a ``catalog``, hits come from one bounded read of the log (a
+    semi-join against the wanted hashes); distinct misses go to the
+    provider in batches of ``EMBED_BATCH`` and are appended with
+    ``append_rows``. token_count is the whole-batch apportionment the
+    reference performs (openai_client.py:276-284): the batch's whitespace
+    tokens // its size.
     """
-    # NULL text hashes like '' so the cache join key is never NULL (NULL
-    # keys never equi-join → the embedded row would silently drop)
-    df = df.withColumn(
-        "_text_hash", F.sha2(F.coalesce(F.col(text_col), F.lit("")), 256)
-    )
-    cache = catalog.read_log(cache_table) if catalog is not None else None
-
-    if cache is not None:
-        # cache key is (text_hash, model): vectors embedded by a different
-        # provider must never be served for the same text
-        cache = cache.where(F.col("model") == provider).select(
-            F.col("text_hash").alias("_text_hash"),
-            F.col("embedding").alias("_cached_vec"),
-        ).dropDuplicates(["_text_hash"])
-        df = df.join(cache, "_text_hash", "left")
-    else:
-        df = df.withColumn("_cached_vec", F.lit(None).cast(ArrayType(FloatType())))
-
-    misses = df.where(F.col("_cached_vec").isNull())
-    hits = df.where(F.col("_cached_vec").isNotNull())
-
-    out_schema = StructType(
-        [StructField("_text_hash", StringType()), *EMBED_RESULT_SCHEMA_FIELDS]
-    )
-
-    provider_fn = EMBED_PROVIDERS[provider]  # resolve driver-side (see init)
-
-    def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        embedder = RetryingEmbedder(provider=provider, provider_fn=provider_fn)
-        for pdf in batches:
-            texts = ["" if t is None else t for t in pdf[text_col]]
-            vecs = embedder(texts)
-            total_tokens = sum(len(t.split()) for t in texts)
-            per_text = total_tokens // max(len(texts), 1)
-            yield pd.DataFrame(
-                {
-                    "_text_hash": pdf["_text_hash"],
-                    "embedding": vecs,
-                    "token_count": [per_text] * len(texts),
-                    "model": [provider] * len(texts),
-                }
-            )
-
-    fresh = (
-        misses.select("_text_hash", text_col)
-        .dropDuplicates(["_text_hash"])
-        .mapInPandas(_embed, out_schema)
-    )
-    if catalog is not None:
-        catalog.append(
-            fresh.select(
-                F.col("_text_hash").alias("text_hash"),
-                "embedding",
-                "token_count",
-                "model",
-            ).withColumn("cached_ts", F.current_timestamp()),
-            cache_table,
+    hashes = [hashlib.sha256((t or "").encode("utf-8")).hexdigest() for _, t in rows]
+    vec_of: dict[str, list[float]] = {}
+    log = catalog.read_log(_CACHE_TABLE) if catalog is not None and rows else None
+    if log is not None:
+        wanted = local_dim_df(
+            catalog.spark, [(h,) for h in dict.fromkeys(hashes)], "text_hash string"
         )
-        # re-read so the plan below consumes materialized vectors, not a
-        # second provider invocation
-        cache_log = catalog.read_log(cache_table)
-        if cache_log is None:
-            # zero-row first call: the append wrote no files so there is no
-            # cache to re-read — and with no prior cache every row was a
-            # miss, so the output is empty (correct schema, zero rows)
-            return (
-                df.drop("_cached_vec")
-                .withColumn(out_col, F.lit(None).cast(ArrayType(FloatType())))
-                .drop("_text_hash")
-                .where(F.lit(False))
-            )
-        fresh = (
-            cache_log
-            .where(F.col("model") == provider)
-            .select(F.col("text_hash").alias("_text_hash"), "embedding")
-            .dropDuplicates(["_text_hash"])
-        )
-    missed_joined = misses.drop("_cached_vec").join(
-        fresh.select("_text_hash", F.col("embedding").alias("_new_vec")),
-        "_text_hash",
-        "left",
-    ).withColumn(out_col, F.col("_new_vec")).drop("_new_vec")
-    hit_joined = hits.withColumn(out_col, F.col("_cached_vec")).drop("_cached_vec")
-    return missed_joined.unionByName(hit_joined).drop("_text_hash")
+        vec_of = {
+            r.text_hash: r.embedding
+            for r in log.where(F.col("model") == provider)
+            .join(wanted, "text_hash", "left_semi")
+            .select("text_hash", "embedding")
+            .collect()
+        }
+    misses = list(
+        {h: t or "" for (_, t), h in zip(rows, hashes) if h not in vec_of}.items()
+    )
+    embedder = RetryingEmbedder(provider=provider)
+    now = utc_now()
+    fresh = []
+    for i in range(0, len(misses), EMBED_BATCH):
+        batch = misses[i : i + EMBED_BATCH]
+        texts = [t for _, t in batch]
+        per_text = sum(len(t.split()) for t in texts) // len(texts)
+        for (h, _), v in zip(batch, embedder(texts)):
+            vec_of[h] = v
+            fresh.append((h, v, per_text, provider, now))
+    if catalog is not None and fresh:
+        catalog.append_rows(_CACHE_TABLE, fresh, _CACHE_SCHEMA)
+    return [(k, vec_of[h]) for (k, _), h in zip(rows, hashes)]

@@ -7,8 +7,7 @@ module wires the same HTTP surface behind the engine's provider registries:
 - ``register_openai_embedding_provider`` puts an ``/v1/embeddings`` adapter
   into ``EMBED_PROVIDERS`` — from there ``embed_with_cache`` /
   ``RetryingEmbedder`` give it the reference's batching, retry/backoff,
-  rate-limit and cache semantics with ZERO plan changes (the UDF layer is
-  provider-agnostic);
+  rate-limit and cache semantics on the driver, where the registry lives;
 - ``register_openai_chat_provider`` puts a ``/v1/chat/completions`` adapter
   into ``CHAT_PROVIDERS`` for the M5 rerank / M6 explanation calls;
 - ``build_match_prompt`` / ``build_explanation_prompt`` reproduce the

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.embed import hash_embed_py
 from ..operators.mentions import collect_driver_rows
+from .model_client import embed_with_cache
 
 
 _TERM_COLS = [
@@ -54,7 +55,7 @@ class Resolver:
         rows = collect_driver_rows(terms.select(*_TERM_COLS), "ontology terms")
         self.n_terms = len(rows)
         self.terms = {r.term_id: r for r in rows}
-        vec_rows = [(r.term_id, hash_embed_py(r.searchable_text)) for r in rows]
+        vec_rows = embed_with_cache([(r.term_id, r.searchable_text) for r in rows])
         self.ids = [t for t, _ in vec_rows]
         if vec_rows:
             mat = np.array([v for _, v in vec_rows], dtype=np.float32)

@@ -56,52 +56,47 @@ TERM_ROW_COLS = (
 )
 
 def _driver_side_inputs(
-    spark, term_rows: list, need_vecs: bool = True
-) -> tuple[list[str], "DataFrame", "DataFrame | None", "DataFrame"]:
+    spark, term_rows: list, term_vecs: list | None = None
+) -> tuple[list[str], "DataFrame", "DataFrame", "DataFrame"]:
     """Surface list, surface map, term vectors and canonical mapping from
     collected term rows — zero extra cluster jobs instead of ~a dozen
     dimension-sized Spark stages, the same judgement call as broadcasting
-    a small join side. ``need_vecs=False`` skips per-term embedding (the
-    caller supplies cache-backed vectors).
+    a small join side. ``term_vecs`` are ``(term_id, vector)`` rows from
+    ``model_client.embed_with_cache``; without them the terms are embedded
+    here through it, with no cache.
 
     ``build_triples`` caps the term rows at
     ``operators.mentions.DRIVER_TERMS_MAX`` and raises past it: every
     surface goes into one driver-built automaton."""
-    from ..functions.embed import hash_embed_py
+    if term_vecs is None:
+        from .model_client import embed_with_cache
 
+        term_vecs = embed_with_cache(
+            [(r.term_id, r.searchable_text) for r in term_rows]
+        )
     smap = surface_map_rows(term_rows)
     # Arrow-backed local relations: no Python-worker job builds these
     # broadcasts (see functions.dims)
     surface_map = local_dim_df(
         spark, smap, "surface string, term_id string, is_exact boolean"
     )
-    term_vecs = (
-        local_dim_df(
-            spark,
-            [(r.term_id, hash_embed_py(r.searchable_text)) for r in term_rows],
-            "term_id string, term_embedding array<float>",
-        )
-        if need_vecs
-        else None
+    vecs = local_dim_df(
+        spark, term_vecs, "term_id string, term_embedding array<float>"
     )
     canon = local_dim_df(
         spark, canonical_rows(term_rows), "term_id string, canonical_id string"
     )
     surfaces = sorted({s for s, _, _ in smap})
-    return surfaces, surface_map, term_vecs, canon
+    return surfaces, surface_map, vecs, canon
 
 
-def _fused_page_scan(
-    pages: DataFrame, surfaces: list[str], page_embed=None
-) -> DataFrame:
+def _fused_page_scan(pages: DataFrame, surfaces: list[str]) -> DataFrame:
     """(url, warc_ts, html, text?, lang) → (url, warc_ts, lang, mentions,
     page_embedding) in ONE Arrow pass: byte-identical HTML→text extraction
     (``extract_text_py``), passage fallback (empty extraction → ``text``),
-    broadcast Aho-Corasick dictionary scan, and the page embedding.
-    ``page_embed`` is a batched ``pd.Series → pd.Series``
-    callable — the hash stub by default, a provider-backed embedder with
-    the same contract otherwise (M1). Narrow: scales with input splits,
-    zero shuffle."""
+    broadcast Aho-Corasick dictionary scan, and the page embedding
+    (``embed_series``, M1). Narrow: scales with input splits, zero
+    shuffle."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -121,7 +116,6 @@ def _fused_page_scan(
     spark = pages.sparkSession
     has_text = "text" in pages.columns
     get_scanner = broadcast_scanner(spark, surfaces)
-    embed = page_embed if page_embed is not None else embed_series
     out_schema = StructType(
         [
             StructField("url", StringType()),
@@ -150,7 +144,7 @@ def _fused_page_scan(
                     "warc_ts": pdf["warc_ts"],
                     "lang": pdf["lang"],
                     "mentions": [find(p) for p in passages],
-                    "page_embedding": embed(pd.Series(passages, dtype=object)),
+                    "page_embedding": embed_series(pd.Series(passages, dtype=object)),
                 }
             )
 
@@ -338,8 +332,7 @@ def build_triples(
     k: int = DEFAULT_K,
     pred_suffix: str = "mapped_to",
     n_buckets: int = TRIPLE_BUCKETS,
-    term_vecs: DataFrame | None = None,
-    page_embed=None,
+    term_vecs: list | None = None,
     term_rows: list | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) × terms → triples DataFrame.
@@ -368,15 +361,16 @@ def build_triples(
     # DRIVER_TERMS_MAX). A caller that already holds the term rows on the
     # driver (``TriplesPipeline.run``, a constant vocabulary) passes
     # ``term_rows`` — attribute access on the TERM_ROW_COLS — and skips
-    # the collect job entirely.
+    # the collect job entirely; with ``term_vecs`` (``(term_id, vector)``
+    # rows from ``embed_with_cache``) it also skips the term embedding.
     if term_rows is None:
         term_rows = collect_driver_rows(
             terms.select(*TERM_ROW_COLS), "ontology terms"
         )
     else:
         check_driver_rows(term_rows, "ontology terms")
-    surfaces, surface_map, default_term_vecs, canon = _driver_side_inputs(
-        spark, term_rows, need_vecs=term_vecs is None
+    surfaces, surface_map, term_vecs, canon = _driver_side_inputs(
+        spark, term_rows, term_vecs
     )
 
     # --- stage A: one narrow pass over the corpus -------------------------
@@ -387,7 +381,7 @@ def build_triples(
     # UDF chain (the plan showed FOUR ArrowEvalPython nodes: extract and
     # scan each evaluated twice); fusing removes the duplication and the
     # repeated html/text Arrow transfers.
-    enriched = _fused_page_scan(pages, surfaces, page_embed=page_embed)
+    enriched = _fused_page_scan(pages, surfaces)
 
     # explode mentions; zero-mention pages exit here (the reference returns
     # an error response for no-candidate passages — metrics, not triples).
@@ -408,12 +402,8 @@ def build_triples(
         )
     )
 
-    # scoring: term vectors broadcast; cosine in codegen (M1/J5). A caller
-    # can pass cache-backed vectors (pipeline.model_client.embed_with_cache)
-    # — same (term_id, term_embedding) shape, zero plan change. The term
+    # scoring: term vectors broadcast; cosine in codegen (M1/J5). The term
     # norm folds once per term on the broadcast side.
-    if term_vecs is None:
-        term_vecs = default_term_vecs
     scored = (
         cand.join(
             F.broadcast(
@@ -620,14 +610,9 @@ class TriplesPipeline:
             term_rows = collect_driver_rows(
                 terms.select(*TERM_ROW_COLS), "ontology terms"
             )
-            term_text = local_dim_df(
-                spark,
-                [(r.term_id, r.searchable_text) for r in term_rows],
-                "term_id string, searchable_text string",
-            )
             term_vecs = embed_with_cache(
-                term_text, "searchable_text", self.catalog
-            ).select("term_id", F.col("embedding").alias("term_embedding"))
+                [(r.term_id, r.searchable_text) for r in term_rows], self.catalog
+            )
             triples = build_triples(
                 todo.drop("part_bucket"),
                 terms,

@@ -12,13 +12,12 @@ guarantees are provided at the interface level over parquet directories:
   visible (snapshot isolation per table);
 - append-only logs add parquet files under one ``<table>/log`` directory,
   order-free. Driver-held rows (the ``_metrics``/``_checkpoints`` commit
-  logs, merge, download and ontology-version history) go through
-  ``append_rows``: one pyarrow-written file per call, renamed into place,
-  no Spark job. ``append`` writes a distributed DataFrame (the embedding
-  cache).
+  logs, the embedding cache, merge, download and ontology-version
+  history) go through ``append_rows``: one pyarrow-written file per call,
+  renamed into place, no Spark job.
 
 Swapping this class for an Iceberg catalog changes no pipeline code: only
-``write_replace/read/append/append_rows`` call sites.
+``write_replace/read/append_rows`` call sites.
 
 Writer model: ONE writer per table at a time (the reference's
 config-updater model — readers are lock-free against the pointer, writers
@@ -386,11 +385,6 @@ class ParquetCatalog:
     # ------------------------------------------------------------ append log
     def _log_dir(self, table: str) -> str:
         return os.path.join(self._table_dir(table), "log")
-
-    def append(self, df: DataFrame, table: str) -> None:
-        """Append a distributed DataFrame to the table's log (one Spark
-        write job)."""
-        df.write.mode("append").parquet(self._log_dir(table))
 
     def append_rows(self, table: str, rows: list, schema) -> None:
         """Append driver-held rows (tuples in ``schema`` order; ``schema`` a

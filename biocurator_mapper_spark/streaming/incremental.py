@@ -22,7 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..pipeline.triples import build_triples
+from ..pipeline.triples import TERM_ROW_COLS, build_triples
 from ..testdata.pages_gen import PAGES_SCHEMA
 
 
@@ -50,28 +50,26 @@ def incremental_triples_query(
     checkpoint makes re-delivery exactly-once at the batch level; the
     append sink partitions like the batch writer.
 
-    The ontology side is prepared ONCE, not per micro-batch: the term
-    vectors (the expensive driver-side embedding pass) are computed up
-    front and injected into every batch's ``build_triples`` call, and the
-    terms relation is cached so the per-batch term-row collect reads
-    from storage memory instead of recomputing its plan. Draining a
-    backlog of N batches pays the embed cost once, not N times.
+    The ontology side is prepared ONCE, not per micro-batch: the term rows
+    are collected (bounded by ``DRIVER_TERMS_MAX``) and embedded through
+    ``embed_with_cache`` on the driver up front, and every batch's
+    ``build_triples`` call reads them from driver memory. Draining a
+    backlog of N batches pays the collect and the embed once, not N times.
     """
-    from pyspark.sql import functions as F
+    from ..operators.mentions import collect_driver_rows
+    from ..pipeline.model_client import embed_with_cache
 
-    from ..functions.embed import with_hash_embedding
-
-    terms = terms.cache()
-    term_vecs = (
-        with_hash_embedding(
-            terms.select("term_id", "searchable_text"), "searchable_text"
-        )
-        .select("term_id", F.col("embedding").alias("term_embedding"))
-        .localCheckpoint(eager=True)  # materialize once, reuse every batch
+    term_rows = collect_driver_rows(
+        terms.select(*TERM_ROW_COLS), "ontology terms"
+    )
+    term_vecs = embed_with_cache(
+        [(r.term_id, r.searchable_text) for r in term_rows]
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        triples = build_triples(batch_df, terms, k=k, term_vecs=term_vecs)
+        triples = build_triples(
+            batch_df, terms, k=k, term_vecs=term_vecs, term_rows=term_rows
+        )
         # idempotent per micro-batch: each batch owns a deterministic
         # batch_id=<n> directory and OVERWRITES it, so a post-write,
         # pre-checkpoint crash followed by replay rewrites the same files

@@ -163,23 +163,26 @@ def _sql_executions(spark) -> list[int]:
     return [execs.apply(i).executionId() for i in range(execs.size())]
 
 
-def _scan_nodes(spark, since_exec_id: int) -> list[str]:
-    """Names of the scan nodes in the plan graphs of every SQL execution
-    after ``since_exec_id``."""
+def _plan_nodes(spark, since_exec_id: int) -> list[str]:
+    """Names of the nodes in the plan graphs of every SQL execution after
+    ``since_exec_id``."""
     store = spark._jsparkSession.sharedState().statusStore()
     names = []
     for eid in _sql_executions(spark):
         if eid > since_exec_id:
             nodes = store.planGraph(eid).allNodes()
             names += [nodes.apply(j).name() for j in range(nodes.size())]
-    return [n for n in names if n.startswith("Scan ")]
+    return names
 
 
 def test_run_scans_ontology_json_once(spark, tmp_path):
     """The ontology lineage (JSON scan → parse) runs once per run: the embed
     cache and build_triples share one collect, every dimension side is an
     Arrow LocalRelation and the commit logs are written without Spark, so
-    no pickled-RDD scan appears either."""
+    no pickled-RDD scan appears either. On a fresh warehouse the run is
+    two SQL executions, the term-row collect and the triples write: the
+    term embedding and its cache append run no Spark job, and the one
+    Python node in the plans is the fused page pass."""
     import json
 
     from biocurator_mapper_spark.ontology import nodes_from_obo_graph, parse_terms
@@ -198,9 +201,13 @@ def test_run_scans_ontology_json_once(spark, tmp_path):
     out = TriplesPipeline(catalog, n_buckets=4).run(
         pages, terms, run_fingerprint="scan1"
     )
-    scans = _scan_nodes(spark, since)
+    execs = [e for e in _sql_executions(spark) if e > since]
+    nodes = _plan_nodes(spark, since)
+    scans = [n for n in nodes if n.startswith("Scan ")]
     assert sum(n.startswith("Scan json") for n in scans) == 1, scans
     assert not any(n.startswith("Scan ExistingRDD") for n in scans), scans
+    assert len(execs) == 2, execs
+    assert nodes.count("MapInPandas") == 1, nodes
     assert out.count() > 0
 
 

@@ -66,11 +66,14 @@ class FlakyTransport:
 
 def test_retrying_embedder_recovers_from_rate_limit():
     t = FlakyTransport(2)
-    fn = make_openai_embedding_provider(
+    EMBED_PROVIDERS["fake"] = make_openai_embedding_provider(
         "http://fake/v1", "test-key", dim=DIM, transport=t
     )
-    emb = RetryingEmbedder(provider="fake", provider_fn=fn, base_delay=0.001)
-    out = emb(["x"])
+    try:
+        emb = RetryingEmbedder(provider="fake", base_delay=0.001)
+        out = emb(["x"])
+    finally:
+        del EMBED_PROVIDERS["fake"]
     assert out == [_fake_vec("x")]
     assert t.calls == 3
     assert emb.retry_count == 2
@@ -78,43 +81,36 @@ def test_retrying_embedder_recovers_from_rate_limit():
 
 def test_retrying_embedder_fails_fast_on_auth():
     t = FlakyTransport(10, message="401 authentication failed: invalid api key")
-    fn = make_openai_embedding_provider(
+    EMBED_PROVIDERS["fake"] = make_openai_embedding_provider(
         "http://fake/v1", "test-key", dim=DIM, transport=t
     )
-    emb = RetryingEmbedder(provider="fake", provider_fn=fn, base_delay=0.001)
-    with pytest.raises(RuntimeError):
-        emb(["x"])
+    try:
+        emb = RetryingEmbedder(provider="fake", base_delay=0.001)
+        with pytest.raises(RuntimeError):
+            emb(["x"])
+    finally:
+        del EMBED_PROVIDERS["fake"]
     assert t.calls == 1  # no retries burned on a non-retryable error
 
 
 def test_embed_with_cache_through_registered_provider(spark, tmp_path):
+    from biocurator_mapper_spark.functions.embed import hash_embed_py
     from biocurator_mapper_spark.sources.catalog import ParquetCatalog
-
-    # self-contained transport: the closure ships to Spark workers by VALUE
-    # (module-level test functions aren't importable there)
-    def transport(url, body, headers, timeout):
-        data = [
-            {"index": i, "embedding": [float(len(t)), 1.0, 2.0, 3.0]}
-            for i, t in enumerate(body["input"])
-        ]
-        return {"data": data}
 
     name = "fake-remote-embed"
     EMBED_PROVIDERS[name] = make_openai_embedding_provider(
-        "http://fake/v1", "test-key", dim=DIM, transport=transport
+        "http://fake/v1", "test-key", dim=DIM, transport=fake_embed_transport
     )
     try:
         catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
-        df = spark.createDataFrame(
-            [("t1", "abc"), ("t2", "defgh")], "term_id string, searchable_text string"
-        )
-        out = embed_with_cache(df, "searchable_text", catalog, provider=name)
-        got = {r.term_id: r.embedding for r in out.collect()}
-        assert got["t1"] == _fake_vec("abc")
+        rows = [("t1", "abc"), ("t2", "defgh")]
+        got = embed_with_cache(rows, catalog, provider=name)
+        assert got == [("t1", _fake_vec("abc")), ("t2", _fake_vec("defgh"))]
         # a DIFFERENT provider must not be served this provider's vectors
-        out_stub = embed_with_cache(df, "searchable_text", catalog)
-        got_stub = {r.term_id: r.embedding for r in out_stub.collect()}
-        assert got_stub["t1"] != _fake_vec("abc")
+        got_stub = embed_with_cache(rows, catalog)
+        assert got_stub == [("t1", hash_embed_py("abc")), ("t2", hash_embed_py("defgh"))]
+        # and each provider is served its own vectors from the cache
+        assert embed_with_cache(rows, catalog, provider=name) == got
     finally:
         EMBED_PROVIDERS.pop(name, None)
 

@@ -382,13 +382,10 @@ def test_append_rows_shares_a_log_with_spark_appends(spark, tmp_path):
     cat = ParquetCatalog(spark, str(tmp_path / "wh"))
     assert cat.read_log("_checkpoints") is None
     ddl = "run_id string, part_bucket int, n_rows long"
-    cat.append(
-        spark.createDataFrame([("r1", 0, 5)], ddl).withColumn(
-            "ts", F.current_timestamp()
-        ),
-        "_checkpoints",
-    )
     log_dir = tmp_path / "wh" / "_checkpoints" / "log"
+    spark.createDataFrame([("r1", 0, 5)], ddl).withColumn(
+        "ts", F.current_timestamp()
+    ).write.mode("append").parquet(str(log_dir))
     spark_file = next(log_dir.glob("part-*.parquet"))
     ts_col = pq.ParquetFile(spark_file).schema.column(3)
     assert ts_col.physical_type == "INT96"

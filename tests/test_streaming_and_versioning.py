@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from biocurator_mapper_spark.functions.embed import EMBED_MODEL_STUB, hash_embed_py
 from biocurator_mapper_spark.ontology.version import (
     OntologyVersionGate,
     content_hash_of,
@@ -101,21 +102,76 @@ def test_retrying_embedder_backoff(monkeypatch):
         del EMBED_PROVIDERS["_flaky_test"]
 
 
-def test_embed_with_cache(spark, tmp_path):
+def _counting_stub(monkeypatch) -> list[str]:
+    """Texts the stub provider is called with, from now on."""
+    seen: list[str] = []
+    stub = EMBED_PROVIDERS[EMBED_MODEL_STUB]
+
+    def counting(texts):
+        seen.extend(texts)
+        return stub(texts)
+
+    monkeypatch.setitem(EMBED_PROVIDERS, EMBED_MODEL_STUB, counting)
+    return seen
+
+
+def test_embed_with_cache(spark, tmp_path, monkeypatch):
     catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha beta")], "id long, t string"
-    )
-    out1 = embed_with_cache(df, "t", catalog)
-    rows1 = {r.id: r.embedding for r in out1.collect()}
-    assert rows1[1] == rows1[3]  # same text → same vector
-    # cache now holds 2 distinct texts
-    cache = catalog.read_log("_embedding_cache")
-    assert cache.select("text_hash").distinct().count() == 2
-    # second run: all hits — cache row count unchanged after rerun
-    out2 = embed_with_cache(df, "t", catalog)
-    assert {r.id: r.embedding for r in out2.collect()} == rows1
-    assert catalog.read_log("_embedding_cache").select("text_hash").distinct().count() == 2
+    rows = [(1, "alpha beta"), (2, "gamma delta epsilon zeta"), (3, "alpha beta")]
+    seen = _counting_stub(monkeypatch)
+    out1 = embed_with_cache(rows, catalog)
+    assert [k for k, _ in out1] == [1, 2, 3]  # input order
+    vecs = dict(out1)
+    assert vecs[1] == vecs[3] != vecs[2]  # same text → same vector
+    assert seen == ["alpha beta", "gamma delta epsilon zeta"]  # distinct misses
+    # cache now holds 2 distinct texts, token_count apportioned per batch:
+    # 6 whitespace tokens // 2 texts
+    cache = catalog.read_log("_embedding_cache").collect()
+    assert len({r.text_hash for r in cache}) == 2
+    assert {r.token_count for r in cache} == {3}
+    # second run: all hits — nothing embedded, no log file added
+    log_files = sorted((tmp_path / "wh" / "_embedding_cache" / "log").iterdir())
+    seen.clear()
+    assert embed_with_cache(rows, catalog) == out1
+    assert seen == []
+    assert sorted((tmp_path / "wh" / "_embedding_cache" / "log").iterdir()) == log_files
+
+
+def test_embed_with_cache_null_text_embeds_as_empty(spark, tmp_path):
+    import hashlib
+
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    out = embed_with_cache([("a", None), ("b", "")], catalog)
+    assert out == [("a", hash_embed_py("")), ("b", hash_embed_py(""))]
+    cache = catalog.read_log("_embedding_cache").collect()
+    assert [r.text_hash for r in cache] == [hashlib.sha256(b"").hexdigest()]
+
+
+def test_embed_with_cache_serves_spark_written_rows(spark, tmp_path, monkeypatch):
+    """A cache log written by a Spark job (``sha2`` key, ``df.write``
+    append) still hits: the driver-side key is byte-equal to ``sha2``,
+    and a pyarrow-appended miss reads back with it as one log."""
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    vec = [0.5, 0.25, 0.125, 1.0]
+    spark.createDataFrame(
+        [("alpha beta", vec)], "t string, embedding array<float>"
+    ).select(
+        F.sha2("t", 256).alias("text_hash"),
+        "embedding",
+        F.lit(2).alias("token_count"),
+        F.lit(EMBED_MODEL_STUB).alias("model"),
+        F.current_timestamp().alias("cached_ts"),
+    ).write.mode("append").parquet(str(tmp_path / "wh" / "_embedding_cache" / "log"))
+    seen = _counting_stub(monkeypatch)
+    out = embed_with_cache([("hit", "alpha beta"), ("miss", "gamma")], catalog)
+    assert out == [("hit", vec), ("miss", hash_embed_py("gamma"))]
+    assert seen == ["gamma"]
+    seen.clear()
+    assert embed_with_cache([("miss", "gamma"), ("hit", "alpha beta")], catalog) == [
+        ("miss", hash_embed_py("gamma")),
+        ("hit", vec),
+    ]
+    assert seen == []
 
 
 def test_version_info_and_gate(spark, tmp_path):

@@ -104,7 +104,11 @@ def main():
     only = set(sys.argv[2:])
     # data-dependent oracles (IVF centroids) must see the same corpus
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        master="local[8]",
+        shuffle_partitions=8,
+        extra={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
