@@ -822,8 +822,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             spark,
             ("mh_pairs", sf_dir),
             lambda: minhash_lsh_pairs(
-                _docs(spark, sf_dir), "doc_id", "text", n=3, num_hashes=16,
-                bands=4, threshold=0.5,
+                _docs(spark, sf_dir), "doc_id", "text", n=3, bands=4,
+                threshold=0.5,
             ),
             persist=True,
         )
@@ -861,7 +861,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             bench = F.col("doc_id") % 20 == 0
             return cross_minhash_pairs(
                 d.where(~bench), d.where(bench), "doc_id", "text",
-                n=3, num_hashes=16, bands=4, threshold=0.5,
+                n=3, bands=4, threshold=0.5,
             )
 
         return _memo_df(spark, ("cross_pairs", sf_dir), _build, persist=True)

@@ -86,6 +86,8 @@ _MINHASH_AB: list[tuple[int, int]] = [
     (166792497, 2019800082),
     (1378874568, 613864793),
 ]
+# signature length: one minimum per (a, b) pair above
+NUM_HASHES = len(_MINHASH_AB)
 
 
 def shingle_hash_expr(shingle: Column) -> Column:
@@ -261,7 +263,6 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -287,7 +288,7 @@ def minhash_lsh_pairs(
     # shingle SETS are rebuilt from the already-shuffled exploded rows
     # (the scheduler skips the materialized shuffle map stage on reuse)
     # instead of re-evaluating the HOF chain per side.
-    banded, sets = _banded_signatures(df, id_col, text_col, n, num_hashes, bands)
+    banded, sets = _banded_signatures(df, id_col, text_col, n, bands)
     cands = (
         banded.alias("a")
         .join(banded.alias("b"), ["band_no", "band_val"])
@@ -298,7 +299,7 @@ def minhash_lsh_pairs(
     return _jaccard_verified(cands, sets, sets, "id_a", "id_b", threshold)
 
 
-def _minhash_sig_aggs(num_hashes: int) -> list[Column]:
+def _minhash_sig_aggs() -> list[Column]:
     """The 16 universal-hash permutation minima as aggregate columns over
     the ``hm`` column — THE single definition of the signature scheme,
     shared by the in-flight LSH family and the stored signature_state so
@@ -308,14 +309,14 @@ def _minhash_sig_aggs(num_hashes: int) -> list[Column]:
     # parses to the same ((a * hm) + b) % MOD tree
     return [
         F.expr(f"min((({a} * hm) + {b}) % {MINHASH_MOD})").alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_MINHASH_AB[:num_hashes])
+        for i, (a, b) in enumerate(_MINHASH_AB)
     ]
 
 
-def _band_key_cols(num_hashes: int, bands: int) -> list[Column]:
+def _band_key_cols(bands: int) -> list[Column]:
     """Band keys (base-10 '|'-concat of each band's minima) over the mh_i
     columns — the shared band-layout definition (see _minhash_sig_aggs)."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // bands
     return [
         F.expr(
             "concat_ws('|', "
@@ -329,7 +330,7 @@ def _band_key_cols(num_hashes: int, bands: int) -> list[Column]:
 
 
 def _signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int
+    df: DataFrame, id_col: str, text_col: str, n: int
 ) -> tuple[DataFrame, DataFrame]:
     """(sigs(_id, mh_0..), sets(_id, _sh)) for one corpus — the shared
     explode→hash-agg signature path of the LSH family, in flight and
@@ -343,7 +344,7 @@ def _signatures(
     exploded = _hashed_shingle_rows(df, id_col, text_col, n)
     hm = (F.col("h") % MINHASH_MOD).alias("hm")
     sigs = exploded.select("_id", hm).groupBy("_id").agg(
-        *_minhash_sig_aggs(num_hashes)
+        *_minhash_sig_aggs()
     )
     # exact-verify sets carry the full 60-bit hashes (31-bit minima would
     # start colliding at web-scale set sizes)
@@ -356,14 +357,13 @@ def _banded_signatures(
     id_col: str,
     text_col: str,
     n: int,
-    num_hashes: int,
     bands: int,
 ) -> tuple[DataFrame, DataFrame]:
     """(banded(_id, band_no, band_val), sets(_id, _sh)) for one corpus."""
-    sigs, sets = _signatures(df, id_col, text_col, n, num_hashes)
+    sigs, sets = _signatures(df, id_col, text_col, n)
     # band key: plain base-10 concat of the band's minima (both engines
     # render integers identically; no md5 compression needed)
-    banded = sigs.select("_id", *_band_key_cols(num_hashes, bands)).select(
+    banded = sigs.select("_id", *_band_key_cols(bands)).select(
         "_id",
         F.explode(
             F.array(
@@ -410,7 +410,6 @@ def cross_minhash_pairs(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -420,8 +419,8 @@ def cross_minhash_pairs(
     agree across the two sides), but the candidate join pairs corpus bands
     against benchmark bands only: cost scales with band collisions, never
     |corpus| × |benchmark|."""
-    ba, sa = _banded_signatures(corpus, id_col, text_col, n, num_hashes, bands)
-    bb, sb = _banded_signatures(benchmark, id_col, text_col, n, num_hashes, bands)
+    ba, sa = _banded_signatures(corpus, id_col, text_col, n, bands)
+    bb, sb = _banded_signatures(benchmark, id_col, text_col, n, bands)
     cands = (
         ba.join(bb.withColumnRenamed("_id", "_bid"), ["band_no", "band_val"])
         .select(F.col("_id").alias("corpus_id"), F.col("_bid").alias("benchmark_id"))
@@ -436,15 +435,14 @@ def decontaminate(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Corpus rows that are NOT near-duplicates of any benchmark document
     (train/test contamination removal): cross-LSH pairs → anti-join."""
     contaminated = cross_minhash_pairs(
-        corpus, benchmark, id_col, text_col, n=n, num_hashes=num_hashes,
-        bands=bands, threshold=threshold,
+        corpus, benchmark, id_col, text_col, n=n, bands=bands,
+        threshold=threshold,
     ).select(F.col("corpus_id").alias(id_col)).distinct()
     return corpus.join(contaminated, id_col, "left_anti")
 
@@ -501,7 +499,6 @@ def dedup_clusters(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
     """Duplicate-cluster assignment: near-dup pairs (MinHash-LSH candidates
@@ -511,8 +508,9 @@ def dedup_clusters(
     ``is_duplicate`` to drop non-representatives.
 
     Pair generation is the LSH path (banded buckets, no all-pairs-on-shared-
-    shingle join) — the 100 TB-safe default; raise ``bands`` to trade
-    compute for recall near the threshold.
+    shingle join) — the 100 TB-safe default; raise ``bands`` (a divisor
+    of the ``NUM_HASHES`` signature minima, which it splits into equal
+    bands) to trade compute for recall near the threshold.
 
     NOT a pure plan builder: connected components is iterative, so calling
     this runs jobs. Integer ids must be non-negative (representatives are
@@ -522,8 +520,7 @@ def dedup_clusters(
     from .canonicalize import clusters_from_pairs
 
     pairs = minhash_lsh_pairs(
-        df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands,
-        threshold=threshold,
+        df, id_col, text_col, n=n, bands=bands, threshold=threshold,
     )
     return clusters_from_pairs(df, pairs, id_col)
 
@@ -758,7 +755,6 @@ def signature_state(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
     """(id, _bands array<string>, _sh array<long>) — each document's LSH
@@ -770,8 +766,8 @@ def signature_state(
     signatures and hash sets come from the same ``_signatures`` builder
     and the band layout from the same ``_band_key_cols`` the in-flight path
     uses, so stored and fresh signatures can never drift."""
-    sigs, sets = _signatures(df, id_col, text_col, n, num_hashes)
-    band_arr = F.array(*_band_key_cols(num_hashes, bands))
+    sigs, sets = _signatures(df, id_col, text_col, n)
+    band_arr = F.array(*_band_key_cols(bands))
     return (
         sigs.select("_id", band_arr.alias("_bands"))
         .join(sets, "_id")
@@ -785,7 +781,6 @@ def incremental_dedup(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
 ) -> tuple[DataFrame, DataFrame]:
@@ -809,7 +804,7 @@ def incremental_dedup(
     nothing is all-pairs. Merge ``kept_new_state`` into the store (e.g.
     catalog MERGE keyed on the id) to complete the increment."""
     new_state = signature_state(
-        new_docs, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
+        new_docs, id_col, text_col, n=n, bands=bands
     )
     # localCheckpoint: kept_new_state is new_state minus drops, and both
     # the band explode and the verify sets consume it — freeze the

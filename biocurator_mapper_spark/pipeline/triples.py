@@ -467,6 +467,8 @@ class TriplesPipeline:
     """
 
     def __init__(self, catalog: ParquetCatalog, n_buckets: int = 16):
+        if n_buckets < 1:
+            raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
         self.catalog = catalog
         self.n_buckets = n_buckets
         self._active_groups: dict[str, str] = {}
@@ -780,29 +782,11 @@ class TriplesPipeline:
                 removed.append(path)
         return removed
 
-    def _read_triples(self, spark, schema=None) -> DataFrame:
+    def _read_triples(self, spark, schema) -> DataFrame:
         """Read the live snapshot, tolerating the empty case (a snapshot of
-        0 rows holds no bucket symlinks → schema inference fails; an
-        explicit schema or an empty DataFrame covers it)."""
+        0 rows holds no bucket symlinks → schema inference fails; the run's
+        own output schema covers it)."""
         try:
             return self.catalog.read("triples")
         except Exception:
-            if schema is not None:
-                return spark.createDataFrame([], schema)
-            # never-written table and no schema in hand: empty frame with
-            # the canonical triple schema from a zero-page plan
-            empty_pages = spark.createDataFrame(
-                [],
-                "url string, warc_ts timestamp, html binary, text string, lang string",
-            )
-            empty_terms = spark.createDataFrame(
-                [],
-                "term_id string, name string, definition string, "
-                "exact_synonyms array<string>, narrow_synonyms array<string>, "
-                "broad_synonyms array<string>, related_synonyms array<string>, "
-                "all_synonyms array<string>, cross_references array<string>, "
-                "namespace string, searchable_text string",
-            )
-            return spark.createDataFrame(
-                [], build_triples(empty_pages, empty_terms, n_buckets=self.n_buckets).schema
-            )
+            return spark.createDataFrame([], schema)

@@ -75,7 +75,6 @@ def streaming_neardup_sink(
     id_col: str = "url",
     text_col: str = "text",
     n: int = 3,
-    num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
     n_buckets: int = 64,
@@ -126,12 +125,11 @@ def streaming_neardup_sink(
         else:
             # empty state with the exact schema the increment produces
             state = signature_state(
-                batch_df.limit(0), id_col, text_col, n=n,
-                num_hashes=num_hashes, bands=bands,
+                batch_df.limit(0), id_col, text_col, n=n, bands=bands,
             )
         kept, kept_state = incremental_dedup(
-            batch_df, state, id_col, text_col, n=n,
-            num_hashes=num_hashes, bands=bands, threshold=threshold,
+            batch_df, state, id_col, text_col, n=n, bands=bands,
+            threshold=threshold,
         )
         # keyed MERGE for both writes (idempotent under replay); docs
         # first, then state — see the crash-ordering argument above

@@ -1,9 +1,8 @@
-"""Physical-plan inspection helpers.
+"""Physical-plan inspection helpers for the plan tests.
 
 The engine's scale guarantees are plan-shape guarantees: "the corpus
 shuffles once", "the ontology side is always broadcast", "filters reach the
-scan". These helpers turn those claims into assertions (used by the plan
-tests) and reviewable summaries — `.explain()` for programs.
+scan". These helpers turn those claims into assertions.
 """
 
 from __future__ import annotations

@@ -332,7 +332,7 @@ def test_incremental_dedup_matches_batch_rule(spark, docs):
     pairs = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", n=3, num_hashes=16, bands=4, threshold=0.5
+            docs, "doc_id", "text", n=3, bands=4, threshold=0.5
         ).collect()
     }
     new_ids = {r.doc_id for r in new.select("doc_id").collect()}
@@ -393,7 +393,7 @@ def test_minhash_lsh_finds_planted_dups(spark, docs):
     got = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", n=3, num_hashes=16, bands=8, threshold=0.5
+            docs, "doc_id", "text", n=3, bands=8, threshold=0.5
         ).collect()
     }
     assert (0, 100) in got  # identical docs always collide in every band
@@ -451,6 +451,7 @@ def test_minhash_signature_paths_agree(spark):
     from biocurator_mapper_spark.operators.dedup import (
         _MINHASH_AB,
         MINHASH_MOD,
+        NUM_HASHES,
         _hashed_shingle_rows,
         _minhash_sig_aggs,
     )
@@ -458,11 +459,11 @@ def test_minhash_signature_paths_agree(spark):
     texts = {1: "the quick brown fox jumps over the lazy dog", 2: "short", 3: ""}
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     got = {
-        r._id: tuple(r[f"mh_{i}"] for i in range(4))
+        r._id: tuple(r[f"mh_{i}"] for i in range(NUM_HASHES))
         for r in _hashed_shingle_rows(df, "doc_id", "text", 3)
         .withColumn("hm", F.col("h") % MINHASH_MOD)
         .groupBy("_id")
-        .agg(*_minhash_sig_aggs(4))
+        .agg(*_minhash_sig_aggs())
         .collect()
     }
 
@@ -474,7 +475,7 @@ def test_minhash_signature_paths_agree(spark):
         hs = [h60(s) % MINHASH_MOD for s in _shingles(t, 3)]
         if hs:
             want[doc_id] = tuple(
-                min((a * h + b) % MINHASH_MOD for h in hs) for a, b in _MINHASH_AB[:4]
+                min((a * h + b) % MINHASH_MOD for h in hs) for a, b in _MINHASH_AB
             )
     assert got == want
     assert set(want) == {1, 2}

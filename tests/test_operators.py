@@ -445,7 +445,7 @@ def test_profile_table_one_pass(spark):
 
 def test_bm25_topk_ranks_and_plan(spark):
     from biocurator_mapper_spark.operators.retrieval import bm25_topk
-    from biocurator_mapper_spark.plans.inspect import _plan_string
+    from plan_inspect import _plan_string
 
     docs = spark.createDataFrame(
         [

@@ -3,6 +3,7 @@ triples matching hand-computed goldens; checkpoint/resume; metrics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from biocurator_mapper_spark.pipeline import build_triples
@@ -75,8 +76,6 @@ def test_ontology_side_cap_raises(spark, terms, monkeypatch):
     rows), canonical_mapping, mention_candidates and the Resolver each raise
     a ValueError naming the cap instead of hauling the relation to the
     driver."""
-    import pytest
-
     import __spark_entry__ as em
     from biocurator_mapper_spark.functions.dims import local_dim_df
     from biocurator_mapper_spark.operators import canonical_mapping, mention_candidates
@@ -124,6 +123,16 @@ def test_empty_pipeline_run(spark, terms, tmp_path):
     # catalog pointer registered → catalog.read path also tolerable
     m = catalog.read_log("_metrics").collect()
     assert m[0].rows_in == 2 and m[0].rows_out == 0
+
+
+def test_pipeline_rejects_zero_buckets(spark, tmp_path):
+    """A run has at least one output bucket: ``n_buckets=0`` (from
+    ``cli triples --buckets`` or the example job) raises instead of
+    returning an empty frame."""
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_buckets"):
+            TriplesPipeline(catalog, n_buckets=n)
 
 
 def test_pipeline_checkpoint_resume(spark, terms, tmp_path):

@@ -7,55 +7,62 @@ import re
 import pytest as _pytest
 
 
-def test_estimated_source_partitions_decision_parity(spark):
-    """The cheap driver-side split estimate must land on the same side of
-    the under-partitioned threshold (defaultParallelism // 2) as the RDD
-    ground truth, across split sizings — it gates a repartition, so a
-    wrong side either serializes a stage or inserts a useless shuffle.
-    ``spread_partitions``, the valve every operator calls, takes the same
-    side."""
-    from pyspark.sql import functions as F
+def _jobs_so_far(spark) -> int:
+    """Jobs submitted so far, read from the status store."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    seq = sc.statusStore().jobsList(None)
+    return seq.apply(0).jobId() + 1 if seq.size() else 0
 
+
+def _assert_probe_exact(spark, df, label) -> None:
+    """The planned-plan walk equals the RDD ground truth exactly, and the
+    valve answers from it without launching a job."""
     from biocurator_mapper_spark.functions.partitions import (
-        estimated_source_partitions,
+        _planned_partitions,
         spread_partitions,
     )
 
     default_p = spark.sparkContext.defaultParallelism
-    thresh = max(default_p // 2, 1)
+    j0 = _jobs_so_far(spark)
+    n = _planned_partitions(df)
+    spread = spread_partitions(df)
+    assert _jobs_so_far(spark) == j0, (label, "the probe must plan, not execute")
+    actual = df.rdd.getNumPartitions()
+    assert n == actual, (label, n, actual)
+    assert spread == (default_p if actual < max(default_p // 2, 1) else None), label
+
+
+def test_partition_probe_equals_rdd_count(spark):
+    """The one partition probe reads the planned plan: on file scans across
+    split sizings, a range, a repartition and an explode it equals
+    ``df.rdd.getNumPartitions()`` exactly, and ``spread_partitions`` — the
+    valve every operator calls — launches no job to decide."""
+    from pyspark.sql import functions as F
+
     orig = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         for sf in ("0.001", "0.01", "0.1"):
             for maxpb in (str(256 * 1024 * 1024), str(1024 * 1024)):
                 spark.conf.set("spark.sql.files.maxPartitionBytes", maxpb)
                 df = spark.read.parquet(f"/root/testdata/sf{sf}/documents.parquet")
-                est = estimated_source_partitions(df)
-                actual = df.rdd.getNumPartitions()
-                assert (est < thresh) == (actual < thresh), (
-                    sf, maxpb, est, actual, thresh
-                )
-                want = default_p if actual < thresh else None
-                assert spread_partitions(df) == want, (sf, maxpb)
+                _assert_probe_exact(spark, df, (sf, maxpb))
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", orig)
-    # non-file sources fall back to the RDD probe exactly
-    rng = spark.range(100).select(F.col("id"))
-    assert estimated_source_partitions(rng) == rng.rdd.getNumPartitions()
-    # anything that CHANGES partitioning (repartition, explode, join)
-    # must use ground truth — the scan-level estimate would call a
-    # pre-repartitioned corpus "one split" and trigger a full re-shuffle
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rep = df.repartition(24)
-    assert estimated_source_partitions(rep) == 24
     exploded = df.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
-    assert (
-        estimated_source_partitions(exploded)
-        == exploded.rdd.getNumPartitions()
-    )
+    for label, probed in (
+        ("range", spark.range(100).select(F.col("id"))),
+        # a pre-repartitioned corpus is NOT "one split": treating it as its
+        # scan's count would re-shuffle the whole relation
+        ("repartition", df.repartition(24)),
+        ("explode", exploded),
+    ):
+        _assert_probe_exact(spark, probed, label)
 
 from pyspark.sql import functions as F
 
-from biocurator_mapper_spark.plans import (
+from plan_inspect import (
     broadcast_exchanges,
     exchanges,
     plan_summary,
@@ -145,7 +152,7 @@ def test_ivf_plan_has_no_global_sort(spark):
     from pyspark.sql import functions as F
 
     from biocurator_mapper_spark.operators.similarity import ivf_topk
-    from biocurator_mapper_spark.plans.inspect import _plan_string, exchanges
+    from plan_inspect import _plan_string, exchanges
 
     rng = np.random.default_rng(2)
     rows = [(f"v{i}", [float(x) for x in rng.standard_normal(8)]) for i in range(60)]
@@ -268,40 +275,40 @@ def test_partition_probe_on_curated_frame_launches_no_job(spark):
     stages below the root under AQE. Same answer, zero jobs."""
     from pyspark.sql import functions as F
 
-    from biocurator_mapper_spark.functions.partitions import (
-        estimated_source_partitions,
-    )
     from biocurator_mapper_spark.pipeline.curation import curate
-
-    sc = spark.sparkContext._jsc.sc()
-
-    def jobs_so_far():
-        sc.listenerBus().waitUntilEmpty()
-        seq = sc.statusStore().jobsList(None)
-        return seq.apply(0).jobId() + 1 if seq.size() else 0
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     kept_ids = (
         curate(docs).where(F.col("curation_stage") == "kept").select("doc_id")
     )
     kept = docs.join(kept_ids, "doc_id", "left_semi")
-    j0 = jobs_so_far()
-    n = estimated_source_partitions(kept)
-    assert jobs_so_far() == j0, "the probe must plan, not execute"
-    assert n == kept.rdd.getNumPartitions()
-    assert jobs_so_far() > j0  # the counter does see the RDD probe's jobs
+    j0 = _jobs_so_far(spark)
+    _assert_probe_exact(spark, kept, "kept")
+    assert _jobs_so_far(spark) > j0  # the counter does see the RDD probe's jobs
 
 
 def test_partition_probe_agrees_with_rdd_probe_off_the_curate_path(spark):
-    """A union (two children, no declared partitioning: the plan walk gives
-    up and the RDD probe answers) and a local relation, alone and joined
-    to a file scan (the walk answers), all get the RDD probe's count."""
+    """A union (the walk sums its children), a local relation, and a local
+    relation joined to a file scan all get the RDD probe's count exactly.
+    A union over an aggregate is probed without a job too: the walk reads
+    the aggregate's planned exchange instead of running it."""
     from biocurator_mapper_spark.functions.partitions import (
-        estimated_source_partitions,
+        _planned_partitions,
+        spread_partitions,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     both = docs.union(docs.where(F.col("doc_id") % 2 == 0))
     local = spark.createDataFrame([(i,) for i in range(10)], "x long")
-    for df in (both, local, local.join(docs, F.col("x") == F.col("doc_id"))):
-        assert estimated_source_partitions(df) == df.rdd.getNumPartitions()
+    joined = local.join(docs, F.col("x") == F.col("doc_id"))
+    for label, df in (("union", both), ("local", local), ("local_join", joined)):
+        _assert_probe_exact(spark, df, label)
+    agg = docs.groupBy("lang").agg(F.count("*").alias("n"))
+    over_agg = docs.select("lang", F.col("doc_id").alias("n")).union(agg)
+    j0 = _jobs_so_far(spark)
+    n = _planned_partitions(over_agg)
+    spread_partitions(over_agg)
+    assert _jobs_so_far(spark) == j0, "the probe must plan, not execute"
+    n_scan = _planned_partitions(docs)
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n == n_scan + n_shuffle, (n, n_scan, n_shuffle)

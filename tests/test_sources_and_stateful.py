@@ -151,7 +151,7 @@ def test_bucketed_colocated_join_has_no_shuffle(spark, tmp_path):
     partitioning guarantee; only broadcast would otherwise avoid one)."""
     from pyspark.sql import functions as F
 
-    from biocurator_mapper_spark.plans.inspect import exchanges
+    from plan_inspect import exchanges
     from biocurator_mapper_spark.sources.bucketed import (
         colocated_join,
         write_bucketed,
