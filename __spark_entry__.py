@@ -1078,7 +1078,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # score; ties -> min id) instead of the min id — what curation
         # actually wants when recaptures differ in extraction quality
         from biocurator_mapper_spark.operators.canonicalize import (
-            clusters_from_pairs_best,
+            best_representatives,
         )
         from biocurator_mapper_spark.operators.dedup import tokens_expr
 
@@ -1088,12 +1088,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .cast("long")
             .alias("q"),
         )
-        return clusters_from_pairs_best(
-            base,
-            _mh_pairs(spark, sf_dir),
-            "doc_id",
-            "q",
-            components=_lsh_clusters(spark, sf_dir),
+        return best_representatives(
+            base, _lsh_clusters(spark, sf_dir), "doc_id", "q"
         )
 
     def sample_ccnet_buckets(spark, sf_dir):

@@ -19,8 +19,10 @@ Components in MapReduce and Beyond") expressed as DataFrame self-joins:
   never materializes in one task;
 - iterations converge in O(log d) rounds; each round is two shuffles.
 
-Every iteration caches + counts, so the loop is deterministic and the driver
-only ever sees per-round counts (never node data).
+The star loop checkpoints the normalized edges once before its first round
+(it reads them every round) and every round after it, so the loop is
+deterministic and the driver only ever sees per-round counts (never node
+data). Callers need not cache the edges: the driver path reads them once.
 """
 
 from __future__ import annotations
@@ -90,17 +92,16 @@ def _driver_union_find(pairs: list[tuple[str, str]]) -> dict[str, str]:
 # small-star loop takes over.
 DRIVER_CC_MAX_EDGES = 1_000_000
 
+# Round cap of the star loop; it converges in O(log d) rounds.
+STAR_MAX_ROUNDS = 20
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 20,
-) -> DataFrame:
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id.
 
     Node ids are compared as their natural type (strings compare
-    lexicographically). Self-loops and duplicates are tolerated.
+    lexicographically, integers numerically). Self-loops and duplicates are
+    tolerated.
 
     Broadcast-sized edge lists (≤ DRIVER_CC_MAX_EDGES; one limited collect
     both sizes and fetches) go to a driver union-find — an iterative
@@ -108,7 +109,7 @@ def connected_components(
     corpus-sized dedup pair graphs) run the large-star/small-star loop.
     """
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()
@@ -122,7 +123,7 @@ def connected_components(
         # (size-dependent API behavior)
         from pyspark.sql.types import StructField, StructType
 
-        node_type = edges.schema[src].dataType
+        node_type = e.schema["src"].dataType
         out_schema = StructType(
             [
                 StructField("node", node_type),
@@ -130,13 +131,15 @@ def connected_components(
             ]
         )
         return local_dim_df(spark, list(comp.items()), out_schema)
+    # every round and the node list read the edges: materialize them once
+    e = e.localCheckpoint(eager=True)
     all_nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
     prev_sig: tuple[int, int] | None = None
-    for _ in range(max_iterations):
+    for _ in range(STAR_MAX_ROUNDS):
         # localCheckpoint truncates lineage — the star operators reference
         # their input twice, so without it the logical plan doubles per
         # round and overflows the analyzer stack by ~iteration 8.
@@ -174,36 +177,15 @@ def clusters_from_pairs(
     the pair graph, every node mapped to its component minimum, unpaired
     rows mapping to themselves. The shared keep-one tail of
     ``dedup_clusters`` (text MinHash pairs) and ``emb_dedup_clusters``
-    (embedding cosine pairs).
+    (embedding cosine pairs). Ids compare as their own type.
 
-    NOT a pure plan builder (connected components iterates). Integer ids
-    must be non-negative: representatives are chosen via order-preserving
-    zero-padding, and negative values would compare wrongly as strings."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegralType
-
-    # CC consumes the pairs 2-3×, so raise the storage level — but only if
-    # the caller didn't already persist this relation: unconditionally
-    # unpersisting a SHARED cached input (e.g. the contract's memoized
-    # _mh_pairs, consumed again by dedup_minhash_lsh) would silently drop
-    # the caller's cache out from under its other consumers.
-    lvl = pairs.storageLevel
-    owns_cache = not (lvl.useMemory or lvl.useDisk)
-    if owns_cache:
-        pairs = pairs.cache()
-    id_type = base.schema[id_col].dataType
-    if isinstance(id_type, IntegralType):
-        pad = lambda c: F.format_string("%020d", c)  # noqa: E731
-    else:
-        pad = lambda c: c.cast("string")  # noqa: E731
+    NOT a pure plan builder (connected components collects the pairs, and
+    past DRIVER_CC_MAX_EDGES iterates)."""
     cc = connected_components(
-        pairs.select(pad(F.col("id_a")).alias("src"), pad(F.col("id_b")).alias("dst"))
-    ).localCheckpoint(eager=True)  # node-sized; lets the pairs cache go
-    if owns_cache:
-        pairs.unpersist()
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    )
     mapped = cc.select(
-        F.col("node").cast(id_type).alias(id_col),
-        F.col("component").cast(id_type).alias("representative_id"),
+        F.col("node").alias(id_col), F.col("component").alias("representative_id")
     )
     return (
         base.select(id_col)
@@ -218,36 +200,27 @@ def clusters_from_pairs(
     )
 
 
-def clusters_from_pairs_best(
+def best_representatives(
     base: "DataFrame",
-    pairs: "DataFrame",
+    clusters: "DataFrame",
     id_col: str,
     score_col: str,
-    components: "DataFrame | None" = None,
 ) -> "DataFrame":
-    """``clusters_from_pairs`` with QUALITY-AWARE keep-one: the
+    """QUALITY-AWARE keep-one over a ``clusters_from_pairs`` result: the
     representative of each duplicate cluster is the member with the
-    highest ``score_col`` (ties → min id) instead of the min id — what a
-    real curation pipeline wants when recaptures differ in quality (keep
-    the cleanest extraction of a page, not the one that crawled first).
+    highest ``score_col`` of ``base`` (ties → min id) instead of the min
+    id — what a real curation pipeline wants when recaptures differ in
+    quality (keep the cleanest extraction of a page, not the one that
+    crawled first).
 
     ``score_col`` should be an INTEGER column: float scores make the
     argmax order-dependent near ties across engines.
 
-    Physical shape: CC runs once (node-sized); scores join on the bare
-    id; the winner is two hash aggregations over the node-sized relation
-    (max score per component, then min id among the maxima — type-agnostic
-    where a negated-id struct max would constrain ids to numerics).
-    Pass ``components`` (a prior ``clusters_from_pairs`` result) to reuse
-    an already-materialized closure instead of re-iterating CC."""
-    from pyspark.sql import functions as F
-
-    cfp = (
-        components
-        if components is not None
-        else clusters_from_pairs(base, pairs, id_col)
-    )
-    comp = cfp.select(id_col, F.col("representative_id").alias("_comp"))
+    Physical shape: scores join on the bare id; the winner is two hash
+    aggregations over the node-sized relation (max score per component,
+    then min id among the maxima — type-agnostic where a negated-id struct
+    max would constrain ids to numerics)."""
+    comp = clusters.select(id_col, F.col("representative_id").alias("_comp"))
     scored = comp.join(base.select(id_col, score_col), id_col)
     smax = scored.groupBy("_comp").agg(F.max(score_col).alias("_smax"))
     winner = (

@@ -512,10 +512,9 @@ def dedup_clusters(
     of the ``NUM_HASHES`` signature minima, which it splits into equal
     bands) to trade compute for recall near the threshold.
 
-    NOT a pure plan builder: connected components is iterative, so calling
-    this runs jobs. Integer ids must be non-negative (representatives are
-    chosen by order-preserving zero-padding; negative values would compare
-    wrongly).
+    NOT a pure plan builder: connected components collects the pairs (and
+    iterates past ``DRIVER_CC_MAX_EDGES``), so calling this runs jobs. Ids
+    compare as their own type (integers numerically, negatives included).
     """
     from .canonicalize import clusters_from_pairs
 

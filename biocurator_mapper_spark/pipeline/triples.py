@@ -25,6 +25,7 @@ import os
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -785,8 +786,8 @@ class TriplesPipeline:
     def _read_triples(self, spark, schema) -> DataFrame:
         """Read the live snapshot, tolerating the empty case (a snapshot of
         0 rows holds no bucket symlinks → schema inference fails; the run's
-        own output schema covers it)."""
+        own output schema covers it). A missing snapshot still raises."""
         try:
             return self.catalog.read("triples")
-        except Exception:
+        except AnalysisException:
             return spark.createDataFrame([], schema)

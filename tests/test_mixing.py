@@ -1,5 +1,5 @@
 """Token-budget epoch planning (operators/mixing.py), quality-aware
-keep-one (canonicalize.clusters_from_pairs_best), CCNet quality buckets
+keep-one (canonicalize.best_representatives), CCNet quality buckets
 (sampling.quality_buckets)."""
 
 from __future__ import annotations
@@ -44,8 +44,8 @@ def test_epoch_plan_validation(spark):
 
 def test_clusters_best_keeps_highest_quality(spark):
     from biocurator_mapper_spark.operators.canonicalize import (
+        best_representatives,
         clusters_from_pairs,
-        clusters_from_pairs_best,
     )
 
     base = spark.createDataFrame(
@@ -55,19 +55,17 @@ def test_clusters_best_keeps_highest_quality(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "id_a long, id_b long"
     )
+    clusters = clusters_from_pairs(base, pairs, "doc_id")
     got = {
         r.doc_id: (r.representative_id, r.is_duplicate)
-        for r in clusters_from_pairs_best(base, pairs, "doc_id", "q").collect()
+        for r in best_representatives(base, clusters, "doc_id", "q").collect()
     }
     # cluster {1,2,3}: max q=9 tied between 2 and 3 -> min id 2 wins
     assert got[1] == (2, True) and got[2] == (2, False) and got[3] == (2, True)
     # unpaired rows represent themselves regardless of quality
     assert got[4] == (4, False) and got[7] == (7, False)
     # min-id variant differs on the same input (1 would win)
-    std = {
-        r.doc_id: r.representative_id
-        for r in clusters_from_pairs(base, pairs, "doc_id").collect()
-    }
+    std = {r.doc_id: r.representative_id for r in clusters.collect()}
     assert std[2] == 1
 
 

@@ -177,10 +177,11 @@ def test_connected_components_chain_and_star(spark, engine, monkeypatch):
 
 
 def test_clusters_from_pairs_leaves_caller_cache_alone(spark):
-    """clusters_from_pairs raises the pairs storage level for its own 2-3
-    consumptions, but must NOT unpersist a relation the CALLER persisted —
+    """clusters_from_pairs reads the pairs as given — it neither caches nor
+    unpersists them — so a relation the CALLER persisted stays persisted:
     the contract memo shares one cached pair relation across queries, and
-    dropping it here silently defeated that sharing."""
+    dropping it here would silently defeat that sharing. Unpersisted pairs
+    work the same way."""
     from biocurator_mapper_spark.operators.canonicalize import clusters_from_pairs
 
     base = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
@@ -194,12 +195,57 @@ def test_clusters_from_pairs_leaves_caller_cache_alone(spark):
     assert lvl.useMemory or lvl.useDisk  # caller's cache survives
     shared.unpersist()
 
-    # unpersisted input: the function still works (and manages its own cache)
+    # unpersisted input: the function still works
     out2 = {
         r.doc_id: r.representative_id
         for r in clusters_from_pairs(base, pairs, "doc_id").collect()
     }
     assert out2[2] == 0 and out2[5] == 5
+
+
+@pytest.mark.parametrize("engine", ["driver", "distributed"])
+def test_clusters_from_pairs_negative_long_ids(spark, engine, monkeypatch):
+    """Integer ids compare numerically on both CC engines: -10 < -5, so
+    -10 represents {-10, -5} (string order would pick -5)."""
+    from biocurator_mapper_spark.operators.canonicalize import clusters_from_pairs
+
+    if engine == "distributed":
+        monkeypatch.setattr(canonicalize_mod, "DRIVER_CC_MAX_EDGES", 0)
+    base = spark.createDataFrame(
+        [(i,) for i in (-10, -5, 0, 3, 7)], "doc_id long"
+    )
+    pairs = spark.createDataFrame([(-10, -5), (3, 7)], "id_a long, id_b long")
+    out = clusters_from_pairs(base, pairs, "doc_id")
+    assert dict(out.dtypes) == {
+        "doc_id": "bigint", "representative_id": "bigint", "is_duplicate": "boolean"
+    }
+    got = {r.doc_id: (r.representative_id, r.is_duplicate) for r in out.collect()}
+    assert got == {
+        -10: (-10, False), -5: (-10, True), 0: (0, False),
+        3: (3, False), 7: (3, True),
+    }
+
+
+def test_clusters_from_pairs_job_count(spark):
+    """One clusters_from_pairs call on a driver-sized graph runs only the
+    limited collect of the distinct edges — its shuffle map stage and its
+    result stage, two jobs — with no cache fill and no checkpoint job."""
+    from biocurator_mapper_spark.operators.canonicalize import clusters_from_pairs
+
+    base = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "id_a long, id_b long")
+    sc = spark.sparkContext
+    group = "clusters_from_pairs_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        out = clusters_from_pairs(base, pairs, "doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert {r.doc_id: r.representative_id for r in out.collect()} == {
+        0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4
+    }
 
 
 def test_memo_evicts_stopped_sessions():

@@ -125,6 +125,23 @@ def test_empty_pipeline_run(spark, terms, tmp_path):
     assert m[0].rows_in == 2 and m[0].rows_out == 0
 
 
+def test_read_triples_raises_on_removed_snapshot(spark, terms, tmp_path):
+    """Only the empty snapshot reads as an empty frame: a live snapshot
+    whose directory is gone raises instead."""
+    import os
+    import shutil
+
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    pipe = TriplesPipeline(catalog, n_buckets=2)
+    out = pipe.run(pages_dataframe(spark, SURFACES, n_pages=4, seed=1), terms, "fpRm")
+    schema = out.schema
+    shutil.rmtree(
+        os.path.join(catalog._table_dir("triples"), catalog.current_version("triples"))
+    )
+    with pytest.raises(FileNotFoundError):
+        pipe._read_triples(spark, schema)
+
+
 def test_pipeline_rejects_zero_buckets(spark, tmp_path):
     """A run has at least one output bucket: ``n_buckets=0`` (from
     ``cli triples --buckets`` or the example job) raises instead of

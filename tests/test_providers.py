@@ -279,6 +279,61 @@ def test_parse_llm_reply_non_numeric_confidence_is_llm_error():
     assert err is None and ok["confidence"] == 0.75
 
 
+_DROP = object()  # a key _reply leaves out
+
+
+def _reply(**fields) -> str:
+    import json
+
+    body = {"id": "GO:1", "name": "x", "confidence": 0.9, "reason": "r"}
+    body.update(fields)
+    return json.dumps({k: v for k, v in body.items() if v is not _DROP})
+
+
+@pytest.mark.parametrize(
+    "raw, valid",
+    [
+        (_reply(), True),
+        ("```json\n" + _reply() + "\n```", True),
+        (_reply(confidence="0.9"), True),
+        (_reply(name=None), True),
+        (_reply(confidence="high"), False),
+        (_reply(confidence=True), False),
+        (_reply(confidence=None), False),
+        (_reply(id="GO:9"), False),
+        (_reply(id=None), False),
+        (_reply(reason=_DROP), False),
+        ('["GO:1"]', False),
+        ("not json at all", False),
+    ],
+    ids=[
+        "valid", "fenced", "numeric_string", "null_name", "high", "boolean",
+        "null_confidence", "bad_id", "null_id", "missing_key", "array",
+        "non_json",
+    ],
+)
+def test_llm_reply_validators_agree(spark, raw, valid):
+    """The Column validator (operators/rerank.py::parse_llm_json) and the
+    driver one (pipeline/providers.py::parse_llm_reply) give the same
+    verdict on every reply, and the same result when they accept: the
+    required keys must be present (null values pass), the id must be a
+    candidate, the confidence a number or a numeric string."""
+    from biocurator_mapper_spark.operators.rerank import parse_llm_json
+    from biocurator_mapper_spark.pipeline.providers import parse_llm_reply
+
+    cands = ["GO:1", "GO:2"]
+    drv, drv_err = parse_llm_reply(raw, cands)
+    row = parse_llm_json(
+        spark.createDataFrame([(raw, cands)], "llm_raw string, candidate_ids array<string>")
+    ).collect()[0]
+    assert (drv_err is None) is valid, drv_err
+    assert (row.llm_error is None) is valid, row.llm_error
+    if valid:
+        assert row.llm_result.asDict() == {k: drv[k] for k in row.llm_result.asDict()}
+    else:
+        assert row.llm_result is None
+
+
 def test_with_llm_raw_response_replaces_existing_out_col(spark):
     """Calling with a pre-existing out_col must replace it, not produce a
     duplicate schema field (analysis error)."""

@@ -72,7 +72,7 @@ Notes:
   build side at run time. Shape columns are not an equality check; `plan_md5` is.
 - profile_documents' digest differs between builds: Spark's distinct-aggregate
   rewrite orders the Expand columns by expression-id hashes.
-- dedup_clusters_best reads 2 or 3 shuffles and 7 or 9 codegen spans from one
+- dedup_clusters_best reads 2 or 3 shuffles and 6 or 8 codegen spans from one
   full run to the next with the same `plan_md5`: AQE's run-time join choice.
 """
 
